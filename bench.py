@@ -84,19 +84,21 @@ def main() -> None:
     AMORTIZED = {
         "embedding_ann_ivf", "embedding_ann_lsh", "corpus_curation_pipeline",
         "nb_lang_classifier",  # round 7: fit cached per (session, corpus)
-        "lm_perplexity_buckets",  # round 7: same split for the bigram LM
-        "lm_perplexity_buckets_kn",  # round 9: KN triple cached at rest
-        # round 9: bench-flagged gate query; shares the add-one LM
-        # cache with lm_perplexity_buckets (which registers first and
-        # pays the fit), so its cold row is the residual fan-out build
+        # the one LM fit per (session, corpus) serves all four LM
+        # queries; lm_perplexity_buckets registers first, so its cold
+        # row pays the shared fit
+        "lm_perplexity_buckets",
+        # serves the KN triple of that fit: its cold row is serve-only
+        "lm_perplexity_buckets_kn",
+        # projects the add-one pair from the shared fit, so its cold
+        # row is the residual per-doc battery build
         "source_curation_report",
         # round 9: gate-seated DSIR; its hashed-feature frame persists
         # per (session, corpus), so the cold row is fit+score and the
         # steady rows are score-only
         "dsir_importance_resample",
-        # round 11: gate-seated RHO selection; shares both LM caches
-        # with the lm_perplexity_buckets rows (which register first and
-        # pay the fits) and persists its scored frame per
+        # round 11: gate-seated RHO selection; scores both LM families
+        # from the shared fit and persists its scored frame per
         # (session, corpus) — the cold row is the residual score+cutoff
         # build, steady rows are serve-only
         "rho_excess_perplexity_select",

@@ -41,10 +41,12 @@ def _build_fingerprint(build: Callable[[], Column]) -> tuple:
     captures is one refactor away from serving a stale tree for a
     changed parameter. Rather than trusting every call site's key
     tuple, the memo key automatically carries (a) the builder's
-    bytecode and (b) the hashable values of its closure cells — so a
-    parameter captured by the build closure (the only way parameters
-    reach these zero-arg builders) distinguishes cache entries even
-    when the explicit key forgets it. Unhashable cell contents (e.g. a
+    bytecode with its constants and referenced names — the bytecode
+    alone indexes into both tables, so ``lambda: F.lit(3)`` and
+    ``lambda: F.lit(5)`` compile to the same bytes — and (b) the
+    hashable values of its closure cells — so a parameter captured by
+    the build closure distinguishes cache entries even when the
+    explicit key forgets it. Unhashable cell contents (e.g. a
     captured Column) degrade to their type name: correctness is
     preserved for the primitive config params this guards, and a
     builder capturing live Columns should not be memoized anyway."""
@@ -55,7 +57,12 @@ def _build_fingerprint(build: Callable[[], Column]) -> tuple:
             return tuple(hashable(x) for x in v)
         return type(v).__name__
 
-    code_id: Hashable = getattr(getattr(build, "__code__", None), "co_code", None)
+    code = getattr(build, "__code__", None)
+    code_id: Hashable = (
+        None if code is None
+        # repr keeps 1, 1.0 and True apart, which compare equal
+        else (code.co_code, repr(code.co_consts), code.co_names)
+    )
     cells = []
     for cell in getattr(build, "__closure__", None) or ():
         try:

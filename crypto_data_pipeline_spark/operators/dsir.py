@@ -260,69 +260,59 @@ def dsir_kth_weight(
     """EXACT k-th largest weight (k = ceil(n·keep_fraction), duplicates
     counted) as a driver scalar — the scale-safe selection boundary.
 
-    This is the histogram-refine formulation of a distributed k-th
-    order statistic: weights are 6-dp-rounded by contract
+    A two-pass histogram formulation of a distributed k-th order
+    statistic: weights are 6-dp-rounded by contract
     (dsir_importance_weights), so ``w_int = round(weight·1e6)`` is a
-    lossless integer domain; each round histograms the current integer
-    range into ≤ n_bins equal-width bins with ONE map-side-combinable
-    aggregate over the (persisted) weighted frame, walks the collected
-    histogram from the top to find the bin holding the k-th rank, and
-    narrows the range to that bin. The range shrinks ×n_bins per round,
-    so rounds = ceil(log_n_bins(weight_range·1e6)) — 1-4 at ANY corpus
-    size, because the range is set by the weight DOMAIN (log-ratios of
-    two bounded models), not by corpus size: measured 1 round at sf0.1
-    for both the dsir and rho cutoffs (round 13). Each round is a full
-    corpus scan at 100 TB, so a corpus whose weight range exceeds
-    n_bins²·1e-6 ≈ 16.7 units should raise ``n_bins`` (the driver
-    histogram stays CONFIG-bounded; 64Ki bins ≈ 1.5 MB collected) — and
-    the driver only ever sees ≤ n_bins histogram rows per
-    round, never doc rows, never a global sort (the WindowExec-shaped
-    alternative puts the whole corpus through one task; see
-    dsir_resample, now the driver-SF twin). The final round groups the
-    ≤ n_bins surviving integers by exact value carrying min(weight), so
-    the returned cutoff is the TRUE stored double of the k-th weight —
-    ``weight >= cutoff`` compares identical doubles on both engines,
-    not a reconstruction with its own rounding.
+    lossless integer domain. Pass 1 groups by the fixed-width bin
+    ``floor(w_int / n_bins)``, computed in exact long arithmetic, and
+    collects (bin, count, min, max) per occupied bin with ONE
+    map-side-combinable aggregate over the (persisted) weighted frame:
+    n is the histogram's sum, and walking it from the top narrows the
+    k-th rank to one bin, whose w_int range spans at most n_bins
+    integers. The final pass groups that bin's integers by exact value
+    carrying min(weight), so the returned cutoff is the TRUE stored
+    double of the k-th weight — ``weight >= cutoff`` compares identical
+    doubles on both engines, not a reconstruction with its own
+    rounding. Each pass is a full corpus scan at 100 TB; the driver
+    sees histogram rows only, never doc rows, never a global sort (the
+    WindowExec-shaped alternative puts the whole corpus through one
+    task; see dsir_resample, the driver-SF twin). Driver rows: occupied
+    bins ≤ range/n_bins + 1; for the bounded log-ratio weight DOMAIN
+    this operator serves (≲ n_bins² · 1e-6 ≈ 16.7 weight units) that
+    is ≤ n_bins, and a wider range degrades to proportionally more
+    3-long histogram rows (raise ``n_bins`` to bound it; 64Ki bins ≈
+    1.5 MB collected).
+
+    NULL weights are not ranked: n counts the non-NULL weights only
+    (a NULL can never pass ``weight >= cutoff`` anyway).
 
     Returns +inf when k == 0 (keep_fraction == 0 or an empty corpus):
     ``weight >= +inf`` is false for every finite weight, so downstream
     kept flags stay two-valued booleans instead of NULLing out
     (round-9 ADVICE). keep_fraction > 1 clamps to keep-everything.
 
-    Round 14 (VERDICT r13 next #7): the head aggregate (n, min, max)
-    and the FIRST histogram are fused into one scan. Pass 1 groups by
-    the fixed-width bin ``floor(w_int / n_bins)`` — no lo/hi needed to
-    define the binning — and collects (bin, count, min, max) per
-    occupied bin: n/lo/hi fall out as sums/extremes of that histogram,
-    and walking it top-down immediately narrows the k-th rank to one
-    bin whose true w_int range is ≤ n_bins, so the old refinement loop
-    is skipped entirely. Scans per cutoff: 2 (pass 1 + finals) versus
-    3-4 before (head + 1-2 refinement rounds + finals) — each a full
-    corpus pass at 100 TB. Driver rows: occupied bins ≤ range/n_bins +
-    1; for the bounded log-ratio weight DOMAIN this operator serves
-    (≲ n_bins² · 1e-6 ≈ 16.7 weight units) that is the same ≤ n_bins
-    bound as before, and a pathological range degrades to
-    proportionally more 3-long histogram rows — never doc rows, never
-    a global sort. The cutoff is bit-identical: the walk counts the
-    same integers in the same descending order, and the final round
-    still returns the TRUE stored double of the k-th weight
-    (tests/test_dsir.py::test_kth_weight_matches_python_for_all_k_and
+    tests/test_dsir.py::test_kth_weight_matches_python_for_all_k_and
     _tiny_bins and ::test_kth_weight_random_property_sweep pin every
-    k and random tie patterns against the sorted-rank reference)."""
+    k and random tie patterns against the sorted-rank reference."""
     import math
 
-    w_int = F.round(F.col(weight_col) * 1e6, 0).cast("long")
-    # floor-div bins are exact on longs at any magnitude (no double
-    # quotient here, unlike the range-relative binning below)
-    pass1 = (
-        weighted.groupBy((F.floor(w_int / F.lit(n_bins))).alias("bin"))
+    w_sql = f"CAST(round(`{weight_col}` * 1e6, 0) AS BIGINT)"
+    w_int = F.expr(w_sql)
+    # floor division in long arithmetic: w - pmod(w, n_bins) is an exact
+    # multiple of n_bins, so the truncating `div` floors exactly at any
+    # magnitude (a double quotient rounds once w_int passes 2^53)
+    bin_col = F.expr(f"({w_sql} - pmod({w_sql}, {n_bins})) div {n_bins}")
+    pass1 = [
+        r
+        for r in weighted.groupBy(bin_col.alias("bin"))
         .agg(
             F.count(F.lit(1)).alias("c"),
             F.min(w_int).alias("mn"),
             F.max(w_int).alias("mx"),
         )
         .collect()
-    )
+        if r.bin is not None  # NULL weights are not ranked
+    ]
     n = sum(r.c for r in pass1)
     k = min(math.ceil(n * keep_fraction), n)
     if n == 0 or k <= 0:
@@ -333,26 +323,6 @@ def dsir_kth_weight(
             lo, hi = r.mn, r.mx
             break
         remaining -= r.c
-    # unreachable since round 14's fixed-width pass 1 (a bin spans at
-    # most n_bins integers), kept as the defensive refinement path —
-    # the loop is still correct for any (lo, hi, remaining) triple
-    while hi - lo + 1 > n_bins:
-        width = -((lo - hi - 1) // n_bins)  # ceil((hi-lo+1)/n_bins)
-        # (w_int - lo) ≤ range < 2^53, exact as a double, and the true
-        # quotient is ≥ 1/width below the next integer — floor is safe
-        bin_col = F.floor((w_int - F.lit(lo)) / F.lit(width)).cast("int")
-        hist = {
-            r.bin: r.c
-            for r in weighted.where((w_int >= lo) & (w_int <= hi))
-            .groupBy(bin_col.alias("bin"))
-            .agg(F.count(F.lit(1)).alias("c"))
-            .collect()
-        }
-        for b in sorted(hist, reverse=True):
-            if remaining <= hist[b]:
-                lo, hi = lo + b * width, min(hi, lo + (b + 1) * width - 1)
-                break
-            remaining -= hist[b]
     finals = (
         weighted.where((w_int >= lo) & (w_int <= hi))
         .groupBy(w_int.alias("w"))
@@ -363,7 +333,7 @@ def dsir_kth_weight(
         if remaining <= r.c:
             return float(r.wv)
         remaining -= r.c
-    raise AssertionError("histogram refinement lost the k-th rank")  # unreachable
+    raise AssertionError("the k-th rank left its pass-1 bin")  # unreachable
 
 
 def dsir_resample_quantile(

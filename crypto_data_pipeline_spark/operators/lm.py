@@ -8,14 +8,15 @@ surface (crypto analytics); this supplies the third pillar next to the
 engine's existing lang-id (`ml/classify.py`) and dedup tiers.
 
 Spark-first design — deliberately NOT a KenLM shell-out: an add-one
-bigram model is nothing but counting, so train is ONE grouping-sets
-aggregation over the exploded bigram stream and the fitted model is a
-pair of broadcastable DataFrames, which keeps the whole path inside
-whole-stage codegen and value-checkable against an ANSI-SQL oracle —
-the same trade the NB classifier documents. (KenLM's modified
-Kneser-Ney would score better absolutely; bucket ASSIGNMENT — the
-thing the pipeline consumes — needs only a monotone per-language
-ranking, which add-one cross-entropy provides deterministically.)
+bigram model is nothing but counting, so train is ONE aggregation over
+the exploded bigram stream plus grid-sized derivations, and the fitted
+model is a pair of broadcastable DataFrames, which keeps the whole
+path inside whole-stage codegen and value-checkable against an
+ANSI-SQL oracle — the same trade the NB classifier documents.
+(KenLM's modified Kneser-Ney would score better absolutely; bucket
+ASSIGNMENT — the thing the pipeline consumes — needs only a monotone
+per-language ranking, which add-one cross-entropy provides
+deterministically.)
 
 Model: per language, P(w2 | w1) = (c(w1,w2) + 1) / (c(w1) + V_lang),
 with V_lang = |distinct continuation tokens| (the add-one denominator;
@@ -26,14 +27,18 @@ land in the sentinel 'unscored' bucket (ppl = -1.0) instead of a NULL
 the differential gate cannot sort.
 
 Distributed shape at 100 TB:
-- Train: one corpus explode, one grouping-sets shuffle keyed on
-  (lang, w1, w2) — map-side partial aggregation collapses each task to
-  model-sized rows; grid/context/vocab levels ride the SAME pass
-  (grouping sets), not three aggregations. The grid is NOT fixed-size:
-  distinct bigrams grow with corpus vocabulary (Heaps' law — a real
-  web crawl's unpruned bigram grid is tens of GB), so train exposes a
-  ``min_count`` pruning knob, the same move every production n-gram
-  model makes (Google's public 1T-token n-gram corpus ships count>=40).
+- Train: one corpus explode, one shuffle keyed on (lang, w1, w2) —
+  the grid (`bigram_grid`); map-side partial aggregation collapses
+  each task to model-sized rows. Context counts, vocabulary sizes and
+  the Kneser-Ney continuation counts derive from the model-sized grid
+  (`bigram_stats`: one grouping-sets pass plus one aggregation), never
+  from the corpus, and the add-one model is a projection of the KN
+  statistics, so one fit serves both families. The grid is NOT
+  fixed-size: distinct bigrams grow with corpus vocabulary (Heaps' law
+  — a real web crawl's unpruned bigram grid is tens of GB), so train
+  exposes a ``min_count`` pruning knob, the same move every production
+  n-gram model makes (Google's public 1T-token n-gram corpus ships
+  count>=40).
   Pruned bigrams fall through to the add-one smoothing path that
   already handles unseen pairs; context counts and vocabulary sizes
   are derived from the FULL grid before pruning, so the probability
@@ -118,6 +123,83 @@ def _bigrams(df: DataFrame, text: str) -> DataFrame:
     )
 
 
+def bigram_grid(docs: DataFrame, lang: str = "lang", text: str = "text") -> DataFrame:
+    """``grid (lang, w1, w2, c12)``: per-language bigram counts, the
+    fit's one corpus-sized shuffle (map-side partial aggregation
+    collapses each task to model-sized rows). Every other statistic of
+    both smoothing families derives from this grid (`bigram_stats`), so
+    a caller that lands the grid at rest fits either family without
+    touching the corpus again."""
+    bg = _bigrams(docs.select(F.col(lang).alias("lang"), text), text).select(
+        "lang", "w1", "w2"
+    )
+    return bg.groupBy("lang", "w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
+
+
+def bigram_stats(grid: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The Kneser-Ney ``ctx (lang, w1, c1, n1p_w1, n1p_all, vsize)`` and
+    ``cont (lang, w2, n1p_w2)`` of an UNPRUNED grid, from grid-sized
+    work only: c(w1) = Σ_w2 c(w1,w2); grid rows are unique per
+    (lang, w1, w2), so a row count is a distinct-continuation count;
+    V = |distinct w2|. One grouping-sets pass yields the context and
+    per-language levels, one aggregation yields cont. The add-one ctx
+    is the projection ``ctx.select("lang", "w1", "c1", "vsize")``."""
+    stats = (
+        grid.groupingSets([["lang", "w1"], ["lang"]], "lang", "w1")
+        .agg(
+            F.sum("c12").alias("_c"),
+            F.count(F.lit(1)).alias("_rows"),
+            F.countDistinct("w2").alias("_nd"),
+            F.grouping("w1").alias("_g1"),
+        )
+    )
+    totals = stats.where(F.col("_g1") == 1).select(
+        "lang",
+        F.col("_rows").alias("n1p_all"),
+        F.col("_nd").alias("vsize"),
+    )
+    ctx = (
+        stats.where(F.col("_g1") == 0)
+        .select(
+            "lang", "w1", F.col("_c").alias("c1"), F.col("_rows").alias("n1p_w1")
+        )
+        .join(F.broadcast(totals), "lang")
+    )
+    cont = grid.groupBy("lang", "w2").agg(F.count(F.lit(1)).alias("n1p_w2"))
+    return ctx, cont
+
+
+def _fit(
+    docs: DataFrame,
+    lang: str,
+    text: str,
+    materialize: bool,
+    min_count: int,
+    add_one: bool,
+) -> tuple[DataFrame, ...]:
+    """The fit both families share: grid, statistics, pruning.
+    ``materialize`` checkpoints the grid BEFORE the statistics derive
+    from it, so the corpus is scanned once; the statistics and a
+    pruned grid then checkpoint from grid-sized work, which leaves the
+    unpruned checkpoint unreferenced."""
+    grid = bigram_grid(docs, lang=lang, text=text)
+    if materialize:
+        grid = grid.localCheckpoint(eager=True)
+    ctx, cont = bigram_stats(grid)
+    if add_one:
+        frames = [grid, ctx.select("lang", "w1", "c1", "vsize")]
+    else:
+        frames = [grid, ctx, cont]
+    if min_count > 1:
+        frames = [
+            f.where(F.col(c) >= min_count)
+            for f, c in zip(frames, ("c12", "c1", "n1p_w2"))
+        ]
+    if materialize:
+        frames = [f if f is grid else f.localCheckpoint(eager=True) for f in frames]
+    return tuple(frames)
+
+
 def bigram_lm_train(
     docs: DataFrame,
     lang: str = "lang",
@@ -129,7 +211,9 @@ def bigram_lm_train(
     ``grid (lang, w1, w2, c12)`` and ``ctx (lang, w1, c1, vsize)`` —
     both model-sized; ``vsize`` (the language's distinct-continuation
     count) is carried denormalized on every ctx row so scoring needs
-    no third join.
+    no third join. The add-one model is a projection of the
+    Kneser-Ney statistics (same grid, ctx minus its two KN columns),
+    so both families share one fit (`bigram_grid`, `bigram_stats`).
 
     ``min_count`` prunes the model — the knob that keeps the shipped
     frames bounded on corpora whose vocabulary grows with size
@@ -148,46 +232,13 @@ def bigram_lm_train(
     the untrained-language path — dropped by the scoring join, filed
     as 'unscored' by ``perplexity_buckets``.
 
-    The corpus-sized bigram stream is shuffled ONCE (the grid count);
-    context counts and vocabulary sizes then come from a grouping-sets
-    pass over the MODEL-SIZED grid — c(w1) = Σ_w2 c(w1,w2) and
-    V = |distinct w2| hold exactly, so the derivation costs grid-sized
-    rows, not another (let alone an Expanded 3×) pass over the raw
-    stream.
-
     ``materialize`` (default) eagerly local-checkpoints both model
     frames — fitting is an ACTION, the same train/serve split
     `ml/classify.py:nb_train` documents. Without it, every broadcast
     of grid/ctx in the scoring plan re-derives the corpus-sized
     training scan (measured at the K=1000 probe: the 5 M-doc train
     pass re-ran inside the score job)."""
-    bg = _bigrams(docs.select(F.col(lang).alias("lang"), text), text).select(
-        "lang", "w1", "w2"
-    )
-    grid = bg.groupBy("lang", "w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
-    stats = (
-        grid.groupingSets([["lang", "w1"], ["lang"]], "lang", "w1")
-        .agg(
-            F.sum("c12").alias("_c"),
-            F.countDistinct("w2").alias("_nd"),
-            F.grouping("w1").alias("_g1"),
-        )
-    )
-    vocab = stats.where(F.col("_g1") == 1).select(
-        "lang", F.col("_nd").alias("vsize")
-    )
-    ctx = (
-        stats.where(F.col("_g1") == 0)
-        .select("lang", "w1", F.col("_c").alias("c1"))
-        .join(F.broadcast(vocab), "lang")
-    )
-    if min_count > 1:
-        grid = grid.where(F.col("c12") >= min_count)
-        ctx = ctx.where(F.col("c1") >= min_count)
-    if materialize:
-        grid = grid.localCheckpoint(eager=True)
-        ctx = ctx.localCheckpoint(eager=True)
-    return grid, ctx
+    return _fit(docs, lang, text, materialize, min_count, add_one=True)
 
 
 def bigram_lm_perplexity(
@@ -281,55 +332,19 @@ def bigram_lm_kn_train(
 
     Everything is an integer-count ratio, so the model is
     DuckDB-oracle-checkable like the add-one one. Train cost: ONE
-    corpus-sized shuffle (the grid count); ctx/cont/totals all derive
-    from the model-sized grid (a grouping-sets pass reusing the
-    grid-row count as the distinct-continuation count — grid rows are
-    unique per (lang,w1,w2) — plus one grid-sized aggregation for
-    cont). ``min_count`` prunes ROWS from all three shipped frames —
-    grid rows with ``c12 < min_count``, ctx rows with
-    ``c1 < min_count``, cont rows with ``n1p_w2 < min_count`` (cont is
-    vocabulary-proportional too: one row per (lang, w2)). Values on
-    SURVIVING rows and the per-language totals (n1p_all, vsize) stay
-    exact from the full counts; a pruned row falls through scoring's
-    existing ``coalesce(…, 0)`` path, so the scored probability is a
+    corpus-sized shuffle (`bigram_grid`); ctx/cont/totals all derive
+    from the model-sized grid (`bigram_stats`). ``min_count`` prunes
+    ROWS from all three shipped frames — grid rows with
+    ``c12 < min_count``, ctx rows with ``c1 < min_count``, cont rows
+    with ``n1p_w2 < min_count`` (cont is vocabulary-proportional too:
+    one row per (lang, w2)). Values on SURVIVING rows and the
+    per-language totals (n1p_all, vsize) stay exact from the full
+    counts; a pruned row falls through scoring's existing
+    ``coalesce(…, 0)`` path, so the scored probability is a
     deterministic function of (min_count, corpus) — the same contract
     as `bigram_lm_train`, pinned against a Python reference by
     tests/test_lm.py::test_kn_min_count_pruning_matches_python_reference."""
-    bg = _bigrams(docs.select(F.col(lang).alias("lang"), text), text).select(
-        "lang", "w1", "w2"
-    )
-    grid = bg.groupBy("lang", "w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
-    stats = (
-        grid.groupingSets([["lang", "w1"], ["lang"]], "lang", "w1")
-        .agg(
-            F.sum("c12").alias("_c"),
-            F.count(F.lit(1)).alias("_rows"),
-            F.countDistinct("w2").alias("_nd"),
-            F.grouping("w1").alias("_g1"),
-        )
-    )
-    totals = stats.where(F.col("_g1") == 1).select(
-        "lang",
-        F.col("_rows").alias("n1p_all"),
-        F.col("_nd").alias("vsize"),
-    )
-    ctx = (
-        stats.where(F.col("_g1") == 0)
-        .select(
-            "lang", "w1", F.col("_c").alias("c1"), F.col("_rows").alias("n1p_w1")
-        )
-        .join(F.broadcast(totals), "lang")
-    )
-    cont = grid.groupBy("lang", "w2").agg(F.count(F.lit(1)).alias("n1p_w2"))
-    if min_count > 1:
-        grid = grid.where(F.col("c12") >= min_count)
-        ctx = ctx.where(F.col("c1") >= min_count)
-        cont = cont.where(F.col("n1p_w2") >= min_count)
-    if materialize:
-        grid = grid.localCheckpoint(eager=True)
-        ctx = ctx.localCheckpoint(eager=True)
-        cont = cont.localCheckpoint(eager=True)
-    return grid, ctx, cont
+    return _fit(docs, lang, text, materialize, min_count, add_one=False)
 
 
 def bigram_lm_kn_perplexity(

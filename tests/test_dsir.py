@@ -193,9 +193,8 @@ def _weighted(fixture_df):
 @pytest.mark.slow
 def test_kth_weight_matches_python_for_all_k_and_tiny_bins(spark, fixture_df):
     """dsir_kth_weight == sorted(weights, desc)[k-1] for EVERY
-    keep_fraction over the fixture, at n_bins=2 — forcing the maximum
-    number of histogram-refinement rounds, so the loop's narrowing
-    arithmetic is exercised, not bypassed by a one-round fit."""
+    keep_fraction over the fixture, at n_bins=2 — the narrowest pass-1
+    bins, so the histogram walk crosses the most bin boundaries."""
     weighted = _weighted(fixture_df).persist()
     ws = sorted((r.weight for r in weighted.collect()), reverse=True)
     n = len(ws)
@@ -259,6 +258,24 @@ def test_weight_cutoff_equals_min_kept_weight_of_exact_topk(spark, fixture_df):
     weighted.unpersist()
 
 
+def test_kth_weight_exact_for_huge_and_null_weights(spark):
+    """Pass 1 bins in long arithmetic, so weights whose w_int passes
+    2^53 still rank exactly, and NULL weights are skipped, not ranked
+    (a NULL bin used to make the driver-side sort raise)."""
+    ws = [9.1e9 + 0.25 * i for i in range(6)] + [1.23e12 + 7.0 * i for i in range(5)]
+    ws += [0.5, -3.25, 1e-6]
+    weighted = spark.createDataFrame(
+        [(i, w) for i, w in enumerate(ws)] + [(100, None), (101, None)],
+        "doc_id int, weight double",
+    ).persist()
+    for n_bins in (7, 4096):
+        for frac in (0.1, 0.5, 1.0):
+            k = math.ceil(len(ws) * frac)
+            got = dsir.dsir_kth_weight(weighted, frac, n_bins=n_bins)
+            assert got == sorted(ws, reverse=True)[k - 1], (n_bins, frac, got)
+    weighted.unpersist()
+
+
 @pytest.mark.slow
 def test_kth_weight_random_property_sweep(spark):
     """Property sweep of the round's central algorithm (the
@@ -266,8 +283,8 @@ def test_kth_weight_random_property_sweep(spark):
     one session, Spark jobs being too expensive for per-example
     hypothesis): random weight multisets — heavy duplicate mass,
     negative/positive mixes, single-element lists — random fractions,
-    and hostile n_bins (2, 3, 7 force many refinement rounds and
-    uneven final bins). The cutoff must equal the literal
+    and hostile n_bins (2, 3, 7: many narrow pass-1 bins, negative
+    bins, bins that are not powers of two). The cutoff must equal the literal
     sorted-descending k-th (duplicates counted) EXACTLY, as stored
     doubles."""
     import math

@@ -67,6 +67,22 @@ def test_differing_builder_code_never_shares(spark):
     assert df.select(sub).first().y == 9
 
 
+def test_differing_builder_constants_never_share(spark):
+    """Same bytecode, different constants: the bytecode only indexes
+    the constant table, so the constants themselves must be keyed."""
+    key = _fresh_key("consts")
+    three = memo_expr(key, lambda: F.lit(3).alias("y"))
+    five = memo_expr(key, lambda: F.lit(5).alias("y"))
+    assert three is not five
+    one = memo_expr(key, lambda: F.lit(1).alias("y"))
+    true = memo_expr(key, lambda: F.lit(True).alias("y"))
+    assert one is not true
+    df = spark.range(1)
+    assert [df.select(c).first().y for c in (three, five, one, true)] == [
+        3, 5, 1, True
+    ]
+
+
 def test_opt_out_env_builds_fresh(spark, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_NO_EXPR_MEMO", "1")
     key = _fresh_key("optout")

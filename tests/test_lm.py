@@ -38,6 +38,19 @@ def test_bigram_lm_hand_computed(spark):
     assert ppl[1] == (3, round(math.exp(h1) + 1e-9, 6))
     assert ppl[2] == (1, round(1 / p_ab + 1e-9, 6))
 
+    # min_count=2: (b,a) and context b fall out of the model; vsize
+    # stays 2, so P(a|b) = (0+1)/(0+2) on the smoothing path
+    grid, ctx = lm.bigram_lm_train(docs, min_count=2)
+    assert {(r.w1, r.w2): r.c12 for r in grid.collect()} == {("a", "b"): 3}
+    assert {r.w1: (r.c1, r.vsize) for r in ctx.collect()} == {"a": (3, 2)}
+    ppl = {
+        r.doc_id: (r.n_bigrams, r.ppl)
+        for r in lm.bigram_lm_perplexity(docs, grid, ctx).collect()
+    }
+    h1 = -(math.log(p_ab) + math.log(0.5) + math.log(p_ab)) / 3
+    assert ppl[1] == (3, round(math.exp(h1) + 1e-9, 6))
+    assert ppl[2] == (1, round(1 / p_ab + 1e-9, 6))
+
 
 def test_language_models_are_isolated_and_sentinel_bucket(spark):
     """A bigram seen often in one language must not raise its
@@ -454,6 +467,110 @@ def test_source_curation_decisions(spark, tmp_path):
     assert out["srcC"].decision == "keep"
     assert out["srcC"].n_docs == 6 and out["srcC"].n_distinct == 6
     assert out["srcD"].decision == "review" and out["srcD"].dup_ratio == 0.24
+
+
+def _write_source_docs(spark, path: str, rows) -> None:
+    spark.createDataFrame(
+        rows, "doc_id long, text string, lang string, source string, n_chars long"
+    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/documents.parquet")
+
+
+def _source_rows(version: int):
+    """A small multi-source corpus; ``version`` changes its texts,
+    sizes and source names."""
+    base = "the cat sat on the mat with a dog and the bird flew over the tree"
+    srcs = (
+        [("en", "s1")] * 8
+        + [("fr", "s2")] * (6 + 4 * version)
+        + [("en", f"s{3 + version}")] * 5
+    )
+    rows = [
+        (i, f"{base} item {i % (3 + version)} seen {version}", lang, src, 1)
+        for i, (lang, src) in enumerate(srcs)
+    ]
+    return rows + [(90 + version, "solo", "en", "s1", 1)]
+
+
+def _model_dirs(tmp: str) -> list[str]:
+    import os
+
+    return sorted(d for d in os.listdir(tmp) if d.startswith("lm_model_"))
+
+
+@pytest.fixture
+def lm_tmpdir(tmp_path, monkeypatch):
+    """Route the at-rest temp dirs into this test's own directory, so
+    the model-dir count sees only dirs this test created."""
+    import tempfile
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    return str(tmp)
+
+
+def test_four_lm_queries_share_one_fit(spark, tmp_path, lm_tmpdir, monkeypatch):
+    """The add-one and KN bucket queries, the source report and the RHO
+    selection all serve from ONE at-rest fit per (session, corpus):
+    the corpus-sized grid is built once and one model dir exists."""
+    from crypto_data_pipeline_spark.plans.registry import load_with_extras
+
+    calls = []
+    real = lm.bigram_grid
+
+    def counted(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(lm, "bigram_grid", counted)
+    sf = str(tmp_path / "sf")
+    _write_source_docs(spark, sf, _source_rows(0))
+    specs = load_with_extras()
+    for name in ("lm_perplexity_buckets", "lm_perplexity_buckets_kn",
+                 "source_curation_report", "rho_excess_perplexity_select"):
+        assert specs[name].fn(spark, sf).count() > 0, name
+    assert len(calls) == 1
+    assert len(_model_dirs(lm_tmpdir)) == 1
+
+
+def test_lm_serve_caches_refit_on_changed_documents(spark, tmp_path, lm_tmpdir):
+    """Rewriting documents.parquet under the same sf_dir must not serve
+    the old corpus's LM or per-doc frames: the second report matches
+    the NEW corpus's DuckDB oracle, and the stale refit leaves exactly
+    one model dir behind."""
+    import time
+
+    import duckdb
+
+    from crypto_data_pipeline_spark.plans import extension_queries as eq
+    from crypto_data_pipeline_spark.plans.registry import load_with_extras
+
+    spec = load_with_extras()["source_curation_report"]
+    sf = str(tmp_path / "sf")
+    _write_source_docs(spark, sf, _source_rows(0))
+    first = spec.fn(spark, sf).collect()
+    time.sleep(0.05)  # ensure mtime_ns moves even on coarse filesystems
+    _write_source_docs(spark, sf, _source_rows(1))
+    sdf = spec.fn(spark, sf)
+    got = sorted(tuple(r[c] for c in sorted(sdf.columns)) for r in sdf.collect())
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet/*.parquet'"
+    )
+    res = con.execute(spec.oracle)
+    cols = [d[0] for d in res.description]
+    idx = sorted(range(len(cols)), key=lambda i: cols[i])
+    want = sorted(tuple(r[i] for i in idx) for r in res.fetchall())
+    assert sorted(cols) == sorted(sdf.columns)
+    assert got == want and got != sorted(
+        tuple(r[c] for c in sorted(sdf.columns)) for r in first
+    )
+    assert len(_model_dirs(lm_tmpdir)) == 1
+    # entries of other sf_dirs were evicted along with their fingerprints
+    assert [k for k in eq._CACHE_SOURCE_FPS if k[0] == id(eq._LM_MODEL_CACHE)] == [
+        (id(eq._LM_MODEL_CACHE), *k) for k in eq._LM_MODEL_CACHE
+    ]
 
 
 def test_approx_buckets_agree_with_exact(spark, sf_dir):
