@@ -287,7 +287,9 @@ def main() -> None:
     # printed line now carries just the headline + per-query seconds +
     # the deterministic regression gate; shuffle bytes, cold builds, and
     # prose notes live in BENCH_LOCAL_r{N}.json (N = newest driver
-    # BENCH_r*.json round + 1), which git preserves in full.
+    # BENCH_r*.json round + 1), which git preserves in full. A run never
+    # overwrites a committed record: when BENCH_LOCAL_r{N}.json exists,
+    # the record goes to BENCH_LOCAL_r{N}.<epoch>.json instead.
     repo_root = os.path.dirname(os.path.abspath(__file__))
     newest = 0
     for fn in os.listdir(repo_root):
@@ -295,6 +297,8 @@ def main() -> None:
         if m2:
             newest = max(newest, int(m2.group(1)))
     local_name = f"BENCH_LOCAL_r{newest + 1:02d}.json"
+    if os.path.exists(os.path.join(repo_root, local_name)):
+        local_name = f"BENCH_LOCAL_r{newest + 1:02d}.{int(time.time())}.json"
     full_record = {
         # The headline metric is the FIXED baseline-comparable subset:
         # its membership never changes round over round, so its total

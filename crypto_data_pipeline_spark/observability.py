@@ -84,36 +84,46 @@ def host_steal_seconds() -> float:
         return 0.0
 
 
-def source_fingerprint(df: DataFrame) -> dict | None:
-    """Identity of the FILE-BACKED inputs feeding ``df`` — (path, size,
-    mtime) of every scanned file folded into one sha256, plus counts.
-    The at-rest index sidecars record this at build time and re-check
-    it at load/serve time (round 14, VERDICT r12 next #6 carry-over):
-    an index must only ever serve the corpus state it was built from —
-    a replaced or appended source file otherwise serves silently stale
-    results for the session lifetime of the cache. Returns None for
-    non-file-backed frames (generated fixtures), where no stable
-    at-rest identity exists; callers skip the check. Cost: one driver
-    file listing (cached by the scan relation) + one os.stat per input
-    file — no executor work, no data scan."""
+def source_fingerprint(paths) -> dict | None:
+    """Identity of the files under ``paths`` — each a table path, a
+    file or a directory, local or a ``file:`` URI: (path, size,
+    mtime_ns) of every file folded into one sha256, plus counts. The
+    serve store and the at-rest index sidecars record it at build time
+    and re-check it before serving, so a replaced or appended source
+    file reads as a changed corpus. Cost: one ``os.walk`` and one
+    ``os.stat`` per file — no Spark job, no DataFrame. A path on
+    another filesystem (``hdfs:``, ``s3a:``) cannot be stat'ed here:
+    the result is None with a logged warning, and callers skip the
+    check."""
     import hashlib
+    import logging
     import os
+    from urllib.parse import unquote, urlparse
 
-    files = sorted(df.inputFiles())
-    if not files:
-        return None
     h = hashlib.sha256()
-    total = 0
-    for f in files:
-        p = f[5:] if f.startswith("file:") else f  # strip scheme, keep slashes
-        try:
-            st = os.stat(p)
-            sig = f"{f}|{st.st_size}|{st.st_mtime_ns}"
+    n_files = total = 0
+    for path in paths:
+        url = urlparse(path)
+        if url.scheme == "file":
+            path = unquote(url.path)
+        elif url.scheme:
+            logging.getLogger(__name__).warning(
+                "source fingerprint off: %s is not on the local filesystem, "
+                "so changes to it go unseen", path,
+            )
+            return None
+        files = [path] if os.path.isfile(path) else sorted(
+            os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs
+        )
+        for f in files:
+            try:
+                st = os.stat(f)
+            except FileNotFoundError:
+                continue  # removed mid-walk by a rewrite: a changed state
+            h.update(f"{f}|{st.st_size}|{st.st_mtime_ns}".encode())
+            n_files += 1
             total += st.st_size
-        except OSError:
-            sig = f"{f}|unstat-able"
-        h.update(sig.encode())
-    return {"n_files": len(files), "total_bytes": total, "sha256": h.hexdigest()}
+    return {"n_files": n_files, "total_bytes": total, "sha256": h.hexdigest()}
 
 
 # executed-plan metric keys -> report keys (summed over the tree)

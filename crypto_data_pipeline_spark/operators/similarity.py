@@ -13,6 +13,7 @@ Two paths:
 
 from __future__ import annotations
 
+import functools
 import math
 from dataclasses import dataclass
 
@@ -2001,9 +2002,7 @@ def mmr_topk(
 
 # --- Johnson-Lindenstrauss random projection over int8 codes ---
 
-_RP_CACHE: dict[tuple[int, int, int], "object"] = {}
-
-
+@functools.cache
 def _rp_matrix(out_dim: int, in_dim: int, seed: int):
     """Deterministic ±1 projection matrix (Achlioptas 2003: Rademacher
     entries satisfy the JL lemma) derived from the repo's portable hash
@@ -2018,20 +2017,17 @@ def _rp_matrix(out_dim: int, in_dim: int, seed: int):
     integers; nothing ships to executors."""
     import numpy as np
 
-    key = (out_dim, in_dim, seed)
-    if key not in _RP_CACHE:
-        from crypto_data_pipeline_spark.operators.dedup import (
-            PORTABLE_MOD,
-            portable_minhash_params,
-        )
+    from crypto_data_pipeline_spark.operators.dedup import (
+        PORTABLE_MOD,
+        portable_minhash_params,
+    )
 
-        i = np.arange(in_dim, dtype=np.int64)
-        rows = [
-            1 - 2 * (((a * i + b) % PORTABLE_MOD) * 2 // PORTABLE_MOD)
-            for a, b in portable_minhash_params(out_dim, seed)
-        ]
-        _RP_CACHE[key] = np.stack(rows).astype(np.int64)
-    return _RP_CACHE[key]
+    i = np.arange(in_dim, dtype=np.int64)
+    rows = [
+        1 - 2 * (((a * i + b) % PORTABLE_MOD) * 2 // PORTABLE_MOD)
+        for a, b in portable_minhash_params(out_dim, seed)
+    ]
+    return np.stack(rows).astype(np.int64)
 
 
 def with_rp_codes(

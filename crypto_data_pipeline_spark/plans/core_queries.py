@@ -21,6 +21,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from crypto_data_pipeline_spark import serve_store
 from crypto_data_pipeline_spark.operators import calendar as cal
 from crypto_data_pipeline_spark.operators import islands, risk, stats, timeseries as ts
 from crypto_data_pipeline_spark.operators.timeseries import DATE, ENTITY, PRICE
@@ -40,13 +41,11 @@ HISTORY_CTE = """history AS (
 W_ENTITY = "(PARTITION BY entity_id ORDER BY fetch_date)"
 
 
-_SILVER_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared silver daily-price table, materialized ONCE per
     (session, sf_dir) as a parquet table bucketed AND sorted by the
-    entity key, then served from the bucketed scan.
+    entity key, then served from the bucketed scan — the serve store's
+    ``silver`` entry, rebuilt when the events change.
 
     Every coin-series query downstream windows or aggregates on
     entity_id, so without this each of ~20 queries re-pays the full
@@ -63,33 +62,22 @@ def _history(spark: SparkSession, sf_dir: str) -> DataFrame:
     either way (the daily reduction is exact max, and doubles
     round-trip parquet bit-for-bit).
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    out = _SILVER_CACHE.get(key)
-    if out is None:
+    import hashlib
+
+    # Table name is session-unique: a name keyed only on sf_dir collides
+    # with a previous session's leftover warehouse directory
+    # (saveAsTable refuses the existing path), which silently
+    # downgraded every later session to the unbucketed fallback. The
+    # table lives at the entry's store dir, outside the warehouse.
+    app = spark.sparkContext.applicationId
+    tbl = "silver_history_" + hashlib.md5(f"{app}:{sf_dir}".encode()).hexdigest()[:10]
+
+    def build(silver_dir: str) -> DataFrame:
         daily = ts.daily_price_series(load_table(spark, sf_dir, "events"))
         try:
-            import hashlib
-            import tempfile
-
             from crypto_data_pipeline_spark.sources.bucketed import write_bucketed
 
-            # Table name AND location are session-unique: a name keyed
-            # only on sf_dir collides with a previous session's leftover
-            # warehouse directory (saveAsTable refuses the existing
-            # path), which silently downgraded every later session to
-            # the unbucketed fallback. The external tempdir path keeps
-            # the default warehouse clean and collision-free.
-            sid = hashlib.md5(f"{key[0]}:{sf_dir}".encode()).hexdigest()[:10]
-            tbl = f"silver_history_{sid}"
             spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-            # the tempdir must outlive the session (the table reads from
-            # it) but not the process — without the atexit hook each
-            # (session, sf_dir) leaks a full silver copy in /tmp
-            import atexit
-            import shutil
-
-            silver_dir = tempfile.mkdtemp(prefix=f"silver_{sid}_")
-            atexit.register(shutil.rmtree, silver_dir, ignore_errors=True)
             write_bucketed(
                 daily.repartition(32, ENTITY),
                 tbl,
@@ -98,7 +86,7 @@ def _history(spark: SparkSession, sf_dir: str) -> DataFrame:
                 sort_cols=[ENTITY, DATE],
                 path=silver_dir,
             )
-            out = spark.table(tbl)
+            return spark.table(tbl)
         except Exception as exc:
             # Loud downgrade: the zero-Exchange bucketed path silently
             # dying already bit us once (round-3 name collision, commit
@@ -118,9 +106,12 @@ def _history(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             if os.environ.get("SPARK_GRAFT_REQUIRE_SILVER"):
                 raise
-            out = daily
-        _SILVER_CACHE[key] = out
-    return out
+            return daily
+
+    return serve_store.serve(
+        spark, sf_dir, "silver", ("events",), build,
+        release=lambda _df: spark.sql(f"DROP TABLE IF EXISTS {tbl}"),
+    )
 
 
 def history_is_bucketed(spark: SparkSession, sf_dir: str) -> bool:

@@ -15,10 +15,9 @@ Oracle parity notes:
 
 from __future__ import annotations
 
-import contextlib
-
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from crypto_data_pipeline_spark import serve_store
 from crypto_data_pipeline_spark.operators import (
     contamination,
     dedup,
@@ -403,25 +402,19 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     store = docs.where(F.col("doc_id") % 10 != 0)
     delivery = docs.where(F.col("doc_id") % 10 == 0)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    sigs_store = _cache_get_fresh(_SIG_STORE_CACHE, key, docs)
-    if sigs_store is None:
+
+    # sig_store: the store corpus's MinHash signatures at rest, plus a fingerprint sidecar
+    def build(store_dir: str) -> DataFrame:
         import json
 
-        with _build_dir("sig_store_") as store_dir:
-            path = os.path.join(store_dir, "sigs")
-            dedup.portable_minhash_signatures(store).write.mode(
-                "overwrite"
-            ).parquet(path)
-            # corpus identity in the store's own sidecar + the serve-time
-            # freshness recheck (round 14, VERDICT r12 next #6 carry-over)
-            fp = _record_cache_source(_SIG_STORE_CACHE, key, docs)
-            with open(os.path.join(store_dir, "meta.json"), "w") as f:
-                json.dump({"source_fingerprint": fp}, f)
-            sigs_store = spark.read.parquet(path)
-        # an at-rest scan holds no persist; unpersist-on-evict is a no-op
-        _cache_put(_SIG_STORE_CACHE, key, sigs_store, frame_of=lambda df: df,
-                   dirs=_SIG_STORE_DIRS, at_rest=store_dir)
+        path = os.path.join(store_dir, "sigs")
+        dedup.portable_minhash_signatures(store).write.parquet(path)
+        with open(os.path.join(store_dir, "meta.json"), "w") as f:
+            json.dump({"source_fingerprint": serve_store.fingerprint(
+                sf_dir, ("documents",))}, f)
+        return spark.read.parquet(path)
+
+    sigs_store = serve_store.serve(spark, sf_dir, "sig_store", ("documents",), build)
     all_sigs = sigs_store.unionByName(
         dedup.portable_minhash_signatures(delivery)
     )
@@ -1457,148 +1450,28 @@ def embedding_similar_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.near_dup_pairs_by_cosine(_embs(spark, sf_dir), threshold=0.3)
 
 
-# value: (index, serving nprobe, n_cells) — the guard-recommended
-# operating point chosen at build time (round 12)
-_IVF_CACHE: dict[tuple[str, str], tuple] = {}
-_CURATION_CACHE: dict[tuple[str, str], tuple] = {}
-# the curation SERVE frames, computed once per staged tuple:
-# round 13 added the |langs|-row temperature-mix threshold frame
-# (rates); round 14 extends the same move to the per-doc mix flags and
-# the training order — ALL pure functions of the persisted near-dup
-# survivor set, so serving them from the cold build is value-identical
-# and the steady assembly stops (a) evaluating the mix subtree twice
-# (its own join + training_order's input — Catalyst shares nothing
-# across the two consumers) and (b) re-running the shard-rank windows
-# per call. Value: (rates, mix, order), all persisted.
-_CURATION_SERVE: dict[tuple[str, str], tuple] = {}
-
-
-def _release_serve(serve: tuple):
-    """Unpersist the serve frames; returns rates for _cache_put's
-    final unpersist call."""
-    rates, mix, order = serve
-    mix.unpersist()
-    order.unpersist()
-    return rates
-
-
-def _release_curation(staged: tuple):
-    """Unpersist the curation stage frames (q, exk, dominated, sigs —
-    ex is derived, never persisted); returns q for _cache_put's final
-    unpersist call."""
-    q, _ex, exk, dominated, sigs = staged
-    exk.unpersist()
-    dominated.unpersist()
-    sigs.unpersist()
-    return q
-_IVF_FIXED_CACHE: dict[tuple[str, str], "similarity.IvfIndex"] = {}
-# index-at-rest temp dirs for the IVF caches (round 11): the indexes
-# now serve through write_ivf_index/read_ivf_index, so the build-time
-# ivf_config_check verdict lands in a real sidecar and the serve path
-# is the production at-rest layout (cell-partitioned scan, directory
-# pruning) instead of an in-memory persist
-_IVF_DIRS: dict[tuple[str, str], str] = {}
-_IVF_FIXED_DIRS: dict[tuple[str, str], str] = {}
-_LSH_CACHE: dict[tuple[str, str], "similarity.LshIndex"] = {}
-# fitted NB model (classes, grid) per (applicationId, sf_dir); frames
-# are parquet scans of a model-at-rest temp dir since round 8 (the
-# unpersist at eviction is a harmless no-op on them) — the dir itself
-# is tracked in the *_MODEL_DIRS side map and rmtree'd at eviction so
-# a long-lived process iterating sf_dirs does not accumulate model
-# dirs in /tmp
-_NB_MODEL_CACHE: dict[tuple[str, str], tuple] = {}
-_NB_MODEL_DIRS: dict[tuple[str, str], str] = {}
-# MinHash signature store at rest (round 12): the store corpus's
-# (id, hs, sig) frame written to parquet once per (session, corpus)
-# and SERVED from the reloaded scan — the incremental re-curation
-# reuse path measured in docs/SCALE_PROBE.md round 12
-_SIG_STORE_CACHE: dict[tuple[str, str], "DataFrame"] = {}
-_SIG_STORE_DIRS: dict[tuple[str, str], str] = {}
-# PQ codebook + corpus codes at rest (round 13): the m-byte code
-# column is the PQ INDEX — FAISS's add()/search split, the same
-# build-once/serve-from-rest contract the IVF and LSH rows already
-# implement. Encoding every corpus vector per probe call re-paid the
-# index build on each search; now the encode lands to parquet once
-# per (session, corpus), the steady row measures the ADC compressed
-# scan + rank (the serving path), and the encode cost is a
-# cold_build_seconds row in bench.py like the other index builds.
-_PQ_CODES_CACHE: dict[tuple[str, str], tuple] = {}
-_PQ_CODES_DIRS: dict[tuple[str, str], str] = {}
-# fitted bigram LM statistics at rest, the Kneser-Ney triple
-# (grid, ctx, cont) — one entry per (session, corpus) serves every LM
-# consumer: the KN bucket query reads the triple, the add-one bucket
-# query, the source curation report and the RHO selection read the
-# add-one pair `_lm_model` projects from it
-_LM_MODEL_CACHE: dict[tuple[str, str], tuple] = {}
-_LM_MODEL_DIRS: dict[tuple[str, str], str] = {}
-
-
-def _cleanup_model_dirs() -> None:
-    """Process-exit sweep of the model-at-rest temp dirs: _cache_put
-    removes an entry's dir only when the entry is evicted or replaced,
-    so the final live entry of each cache would otherwise leak its
-    lm_model_*/nb_model_* dir into /tmp on every short-lived process
-    (round-8 advisor finding)."""
-    import shutil
-
-    for dirs in (_LM_MODEL_DIRS, _NB_MODEL_DIRS,
-                 _IVF_DIRS, _IVF_FIXED_DIRS, _SIG_STORE_DIRS,
-                 _PQ_CODES_DIRS):
-        for d in dirs.values():
-            shutil.rmtree(d, ignore_errors=True)
-        dirs.clear()
-
-
-import atexit
-
-atexit.register(_cleanup_model_dirs)
-
-
-@contextlib.contextmanager
-def _build_dir(prefix: str):
-    """A fresh temp dir for one at-rest build, removed if the build
-    raises; a finished build hands it to `_cache_put` (``at_rest=``),
-    which owns it from then on."""
-    import shutil
-    import tempfile
-
-    path = tempfile.mkdtemp(prefix=prefix)
-    try:
-        yield path
-    except BaseException:
-        shutil.rmtree(path, ignore_errors=True)
-        raise
-
-
 def _lm_model_at_rest(spark: SparkSession, sf_dir: str, docs: DataFrame) -> tuple:
-    """The fitted LM statistics (grid, ctx, cont) at rest, fitted once
-    per (session, corpus) for both smoothing families, in one corpus
-    pass: the grid lands straight from its aggregation, ctx and cont
-    derive from the landed grid (model-sized scans), and each frame
-    reloads with its known schema, so no job infers parquet footers.
-    Parquet-backed frames give the hint-free serve joins accurate
-    statistics, so a model-sized grid broadcasts by measurement. The
-    entry is guarded by the documents' source fingerprint; eviction, a
-    stale refit and process exit remove the dir. ``docs`` is the
+    """The fitted LM statistics (grid, ctx, cont) at rest — the serve
+    store's ``lm_model`` entry, fitted once per (session, corpus) for
+    both smoothing families, in one corpus pass: the grid lands
+    straight from its aggregation, ctx and cont derive from the landed
+    grid (model-sized scans), and each frame reloads with its known
+    schema, so no job infers parquet footers. Parquet-backed frames
+    give the hint-free serve joins accurate statistics, so a
+    model-sized grid broadcasts by measurement. ``docs`` is the
     caller's scan of the sf_dir's documents."""
     from crypto_data_pipeline_spark.operators.lm import bigram_grid, bigram_stats
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    model = _cache_get_fresh(_LM_MODEL_CACHE, key, docs)
-    if model is None:
-        _record_cache_source(_LM_MODEL_CACHE, key, docs)
-        with _build_dir("lm_model_") as model_dir:
+    def build(model_dir: str) -> tuple:
+        def land(name: str, df: DataFrame) -> DataFrame:
+            df.write.parquet(f"{model_dir}/{name}")
+            return spark.read.schema(df.schema).parquet(f"{model_dir}/{name}")
 
-            def land(name: str, df: DataFrame) -> DataFrame:
-                df.write.parquet(f"{model_dir}/{name}")
-                return spark.read.schema(df.schema).parquet(f"{model_dir}/{name}")
+        grid = land("grid", bigram_grid(docs))
+        ctx, cont = bigram_stats(grid)
+        return grid, land("ctx", ctx), land("cont", cont)
 
-            grid = land("grid", bigram_grid(docs))
-            ctx, cont = bigram_stats(grid)
-            model = (grid, land("ctx", ctx), land("cont", cont))
-        _cache_put(_LM_MODEL_CACHE, key, model, lambda m: m[0],
-                   dirs=_LM_MODEL_DIRS, at_rest=model_dir)
-    return model
+    return serve_store.serve(spark, sf_dir, "lm_model", ("documents",), build)
 
 
 def _lm_model(spark: SparkSession, sf_dir: str, docs: DataFrame) -> tuple:
@@ -1607,146 +1480,49 @@ def _lm_model(spark: SparkSession, sf_dir: str, docs: DataFrame) -> tuple:
     return grid, ctx.select("lang", "w1", "c1", "vsize")
 
 
-def _cache_put(
-    cache: dict,
-    key: tuple[str, str],
-    value,
-    frame_of,
-    dirs: dict | None = None,
-    at_rest: str | None = None,
-) -> None:
-    """Insert ``value`` under ``key`` and release every value it
-    displaces: the entries of other keys — prior sessions'
-    applicationIds or other sf_dirs — would otherwise pin their
-    persisted partitions (or, for parquet-backed models, their /tmp
-    dirs) for the process lifetime, and a same-key overwrite (a
-    stale-corpus refit, or the rebuild of a partially built curation
-    entry) replaces the old value. One live entry per cache matches
-    the access pattern (a session works one sf_dir at a time).
-
-    Releasing an entry unpersists ``frame_of(old)`` and removes its
-    at-rest dir from ``dirs``; an evicted key also loses its recorded
-    source fingerprint, while an overwritten key keeps the one its
-    builder recorded for ``value``. ``at_rest`` is ``value``'s own dir,
-    registered in ``dirs``."""
-    import shutil
-
-    for k in list(cache):
-        old = cache[k]
-        if k == key and old is value:
-            continue
-        try:
-            frame_of(old).unpersist()
-        except Exception:
-            pass  # session already stopped; nothing to release
-        if dirs is not None and dirs.get(k) not in (None, at_rest):
-            shutil.rmtree(dirs.pop(k), ignore_errors=True)
-        if k != key:
-            del cache[k]
-            _CACHE_SOURCE_FPS.pop((id(cache), *k), None)
-    if at_rest is not None:
-        dirs[key] = at_rest
-    cache[key] = value
-
-
-# corpus fingerprints recorded beside index/store cache entries
-# (round 14, VERDICT r12 next #6 carry-over): the at-rest serve paths
-# must only ever serve the corpus state they were built from. Each
-# build records observability.source_fingerprint of its source frame;
-# every later cache hit re-checks it (one file listing + one os.stat
-# per input file — no data scan) and a mismatch reads as a MISS, so
-# the caller rebuilds and _cache_put releases the stale entry.
-_CACHE_SOURCE_FPS: dict[tuple, dict | None] = {}
-
-
-def _cache_get_fresh(cache: dict, key: tuple, source_df: DataFrame):
-    """cache[key], but only while the source corpus still matches the
-    fingerprint recorded at build time; None (= rebuild) otherwise.
-    Non-file-backed sources record a None fingerprint and skip the
-    check — generated fixtures have no stable at-rest identity."""
-    val = cache.get(key)
-    if val is None:
-        return None
-    recorded = _CACHE_SOURCE_FPS.get((id(cache), *key))
-    if recorded is not None:
-        from crypto_data_pipeline_spark.observability import source_fingerprint
-
-        if source_fingerprint(source_df) != recorded:
-            return None
-    return val
-
-
-def _record_cache_source(cache: dict, key: tuple, source_df: DataFrame) -> dict | None:
-    """Record (and return) the source fingerprint for a cache entry
-    being built — the load-time half lives in `_cache_get_fresh`."""
-    from crypto_data_pipeline_spark.observability import source_fingerprint
-
-    fp = source_fingerprint(source_df)
-    _CACHE_SOURCE_FPS[(id(cache), *key)] = fp
-    return fp
-
-
 def _ivf_index_at_rest(
-    spark: SparkSession, sf_dir: str, cache: dict, dirs: dict, prefix: str,
-    build, source: DataFrame | None = None,
+    spark: SparkSession, index_dir: str, built: "similarity.IvfIndex",
+    fp: dict | None, nprobe: int, config_check: dict | None = None,
 ) -> "similarity.IvfIndex":
-    """Build-once/serve-from-rest cache for the IVF indexes — the same
-    contract as `_lm_model_at_rest`: on first touch, build the index,
-    land it at rest through `write_ivf_index` (which runs
-    `ivf_config_check` at the serving nprobe and records the verdict
-    in the sidecar — the round-11 build-time guard), drop the build's
-    in-memory persist, and serve the RELOADED cell-partitioned scan.
-    Probes against the reloaded index read nprobe cell directories —
-    the production at-rest layout — and parquet-backed frames give the
-    probe joins measured statistics. One entry per (session, corpus);
-    eviction and process exit rmtree the dir."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    index = (
-        _cache_get_fresh(cache, key, source) if source is not None
-        else cache.get(key)
+    """Land a freshly built IVF index at ``index_dir`` through
+    `write_ivf_index` (which records the `ivf_config_check` verdict
+    and the corpus fingerprint ``fp`` in the sidecar), drop the build's
+    in-memory persist, and return the RELOADED cell-partitioned scan.
+    Probes against it read nprobe cell directories — the production
+    at-rest layout — and parquet-backed frames give the probe joins
+    measured statistics."""
+    similarity.write_ivf_index(
+        built, index_dir, nprobe=nprobe, config_check=config_check,
+        source_fingerprint=fp,
     )
-    if index is None:
-        fp = _record_cache_source(cache, key, source) if source is not None else None
-        with _build_dir(prefix) as index_dir:
-            built = build()
-            similarity.write_ivf_index(
-                built, index_dir, nprobe=4, source_fingerprint=fp
-            )
-            built.assigned.unpersist()
-            index = similarity.read_ivf_index(spark, index_dir, expect_fingerprint=fp)
-        _cache_put(cache, key, index, lambda ix: ix.assigned, dirs=dirs,
-                   at_rest=index_dir)
-    return index
+    built.assigned.unpersist()
+    return similarity.read_ivf_index(spark, index_dir, expect_fingerprint=fp)
 
 
 def _ivf_recommended_index(
     spark: SparkSession, sf_dir: str, embs: DataFrame
 ) -> tuple:
-    """The KMeans IVF index at the guard's own recommended operating
-    point (round 12; VERDICT r11 next #3): n_centroids = max(16,
-    round(sqrt(N))) — the production scale rule `ivf_config_check`'s
-    warning quotes — and serving nprobe = the largest probe depth the
-    fraction curve keeps under the guard threshold
-    (`similarity.ivf_serving_nprobe`, one estimator pass). The sidecar
-    records the check at THAT nprobe, so the at-rest verdict for this
-    index is `ok` by construction unless even nprobe=1 fails — in
-    which case the warning fires and names the geometry. Same
-    build-once/serve-from-rest and eviction contract as
-    `_ivf_index_at_rest`; returns (index, serving_nprobe, n_cells)."""
+    """The serve store's ``ivf`` entry: the KMeans IVF index at the
+    guard's own recommended operating point, at rest — n_centroids =
+    max(16, round(sqrt(N))), the production scale rule
+    `ivf_config_check`'s warning quotes, and serving nprobe = the
+    largest probe depth the fraction curve keeps under the guard
+    threshold (`similarity.ivf_serving_nprobe`, one estimator pass).
+    The sidecar records the check at THAT nprobe, so the at-rest
+    verdict for this index is `ok` by construction unless even
+    nprobe=1 fails — in which case the warning fires and names the
+    geometry. Returns (index, serving_nprobe, n_cells)."""
     import math as _math
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _cache_get_fresh(_IVF_CACHE, key, embs)
-    if got is None:
+    def build(index_dir: str) -> tuple:
         n = embs.count()
         cells = max(16, round(_math.sqrt(n)))
-        fp = _record_cache_source(_IVF_CACHE, key, embs)
         built = similarity.build_ivf_index(embs, n_centroids=cells, n_total=n)
         serve = similarity.ivf_serving_nprobe(built)
-        # round 13: the chooser's one-pass curve already measured the
-        # serving point — derive the sidecar verdict from it instead of
-        # paying a second histogram+sample estimator pass in
-        # write_ivf_index's default ivf_config_check
+        # the chooser's one-pass curve already measured the serving
+        # point: derive the sidecar verdict from it instead of paying a
+        # second histogram+sample estimator pass in write_ivf_index's
+        # default ivf_config_check
         check = similarity.ivf_config_check(
             built,
             stats={
@@ -1760,28 +1536,27 @@ def _ivf_recommended_index(
                 "n_sampled": serve["n_sampled"],
             },
         )
-        with _build_dir("ivf_index_") as index_dir:
-            similarity.write_ivf_index(
-                built, index_dir, nprobe=serve["nprobe"], config_check=check,
-                source_fingerprint=fp,
-            )
-            built.assigned.unpersist()
-            index = similarity.read_ivf_index(spark, index_dir, expect_fingerprint=fp)
-        got = (index, serve["nprobe"], cells)
-        _cache_put(_IVF_CACHE, key, got, lambda t: t[0].assigned,
-                   dirs=_IVF_DIRS, at_rest=index_dir)
-    return got
+        index = _ivf_index_at_rest(
+            spark, index_dir, built, serve_store.fingerprint(sf_dir, ("embeddings",)),
+            nprobe=serve["nprobe"], config_check=check,
+        )
+        return index, serve["nprobe"], cells
+
+    return serve_store.serve(spark, sf_dir, "ivf", ("embeddings",), build)
 
 
 def _ivf_fixed_index(spark: SparkSession, sf_dir: str) -> "similarity.IvfIndex":
-    """The deterministic fixed-quantizer index (centroids = normalized
-    vectors of vec_id 0..15) at rest — shared by every hash-checked
-    IVF-family query (ANN, SemDeDup, cluster sampling, IVFPQ)."""
+    """The serve store's ``ivf_fixed`` entry: the deterministic
+    fixed-quantizer index (centroids = normalized vectors of vec_id
+    0..15) at rest — shared by every hash-checked IVF-family query
+    (ANN, SemDeDup, cluster sampling, IVFPQ)."""
     embs = _embs(spark, sf_dir)
-    return _ivf_index_at_rest(
-        spark, sf_dir, _IVF_FIXED_CACHE, _IVF_FIXED_DIRS, "ivf_fixed_index_",
-        lambda: similarity.build_fixed_ivf_index(embs, list(range(16))),
-        source=embs,
+    return serve_store.serve(
+        spark, sf_dir, "ivf_fixed", ("embeddings",),
+        lambda index_dir: _ivf_index_at_rest(
+            spark, index_dir, similarity.build_fixed_ivf_index(embs, list(range(16))),
+            serve_store.fingerprint(sf_dir, ("embeddings",)), nprobe=4,
+        ),
     )
 
 
@@ -2323,6 +2098,16 @@ def cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _lsh_keys(spark: SparkSession, sf_dir: str, embs: DataFrame) -> "similarity.LshIndex":
+    """The serve store's ``lsh`` entry: the corpus's persisted
+    (id, table, bucket) keys, shared by both LSH queries."""
+    return serve_store.serve(
+        spark, sf_dir, "lsh", ("embeddings",),
+        lambda _tmp: similarity.build_lsh_keys(embs),
+        release=lambda ix: ix.keys.unpersist(),
+    )
+
+
 @register(
     "embedding_ann_lsh",
     # r9 rotation: EXT-sim driver slot passes to embedding_ann_lsh_multiprobe
@@ -2341,12 +2126,7 @@ def embedding_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     train/search split. Hash-checked end to end: the deterministic
     hyperplanes inline into the DuckDB oracle (see _lsh_oracle)."""
     embs = _embs(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    c_keys = _cache_get_fresh(_LSH_CACHE, key, embs)
-    if c_keys is None:
-        c_keys = similarity.build_lsh_keys(embs)
-        _record_cache_source(_LSH_CACHE, key, embs)
-        _cache_put(_LSH_CACHE, key, c_keys, lambda ix: ix.keys)
+    c_keys = _lsh_keys(spark, sf_dir, embs)
     queries = embs.where(F.col("vec_id") < 10).select(F.col("vec_id").alias("query_id"), "embedding")
     return similarity.lsh_topk(embs, queries, k=5, corpus_keys=c_keys)
 
@@ -2375,12 +2155,7 @@ def embedding_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hash-checked end to end against a DuckDB twin that re-derives the
     probe set (see _lsh_multiprobe_oracle)."""
     embs = _embs(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    c_keys = _cache_get_fresh(_LSH_CACHE, key, embs)
-    if c_keys is None:
-        c_keys = similarity.build_lsh_keys(embs)
-        _record_cache_source(_LSH_CACHE, key, embs)
-        _cache_put(_LSH_CACHE, key, c_keys, lambda ix: ix.keys)
+    c_keys = _lsh_keys(spark, sf_dir, embs)
     queries = embs.where(F.col("vec_id") < 10).select(F.col("vec_id").alias("query_id"), "embedding")
     return similarity.lsh_topk(embs, queries, k=5, corpus_keys=c_keys, probes_per_table=2)
 
@@ -3099,42 +2874,30 @@ def sampling_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (feats, model) per (applicationId, sf_dir) — the DSIR analog of the
-# LM/NB train/serve split: features feed the target fit, the source
-# fit, AND the scorer (without the persist each consumer re-tokenizes
-# the corpus — measured: 3 FileScans+Generates in one plan at sf0.01),
-# and the fitted 4096-row log-ratio model is reused so steady serves
-# pay only the scoring join + selection, not the two fit aggregations
-_DSIR_FEATS_CACHE: dict[tuple[str, str], tuple] = {}
-
-
-def _release_dsir(staged: tuple):
-    """Unpersist model + weighted; returns feats for _cache_put's
-    final unpersist call."""
-    feats, model, weighted = staged
-    model.unpersist()
-    weighted.unpersist()
-    return feats
+def _unpersist(frames) -> None:
+    for df in frames:
+        df.unpersist()
 
 
 def _dsir_staged(spark: SparkSession, sf_dir: str) -> tuple:
-    """The cached (feats, model, weighted) triple the DSIR queries
-    serve from — one tokenization pass, one fit, and one scoring join
-    per (session, corpus). ``weighted`` is persisted because the
-    quantile selection's histogram refinement scans it ~4 times (plus
-    once for the final predicate pass) — without the persist each scan
-    would replay the scoring join."""
+    """The serve store's ``dsir`` entry: the persisted (feats, model,
+    weighted) triple the DSIR queries serve from — one tokenization
+    pass, one fit, and one scoring join per (session, corpus). The
+    features feed the target fit, the source fit AND the scorer
+    (without the persist each consumer re-tokenizes the corpus).
+    ``weighted`` is persisted because the quantile selection scans it
+    more than once — without the persist each scan would replay the
+    scoring join."""
     docs = _docs(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    staged = _DSIR_FEATS_CACHE.get(key)
-    if staged is None:
+
+    def build(_tmp: str) -> tuple:
         feats = dsir.dsir_features(docs).persist()
         target = docs.where(F.col("lang") == "en").select(F.col("doc_id").alias("id"))
         model = dsir.dsir_bucket_logratio(feats.join(target, "id"), feats).persist()
         weighted = dsir.dsir_importance_weights(docs, model, feats=feats).persist()
-        staged = (feats, model, weighted)
-        _cache_put(_DSIR_FEATS_CACHE, key, staged, frame_of=_release_dsir)
-    return staged
+        return feats, model, weighted
+
+    return serve_store.serve(spark, sf_dir, "dsir", ("documents",), build, release=_unpersist)
 
 
 def _dsir_oracle(
@@ -3640,50 +3403,45 @@ def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH, census broadcast, shard-partitioned ranks); the decision
     record joins are all on doc_id and AQE broadcasts the
     stage-shrunk sides."""
-    # the three persisted stages are cached per (session, sf_dir) and
-    # REUSED across calls — bench runs this query 4+ times in one
-    # session, and un-registered persists would stack a fresh cached
-    # copy of each stage per call (the same leak class the index
-    # caches already guard against; _cache_put evicts+unpersists
-    # stale entries)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    staged = _CURATION_CACHE.get(key)
-    serve = _CURATION_SERVE.get(key)
-    if staged is None or serve is None:
-        staged = curation_stages(_docs(spark, sf_dir))
-        # The signature frame's only consumer is `dominated`:
-        # materialize it (executes the frame's own QueryExecution,
-        # no rows to the driver) and release sigs immediately — at
-        # 20M docs the ~12 GB cached signature frame otherwise
-        # pressures the storage pool through every later assembly
-        # (measured — docs/SCALE_PROBE.md round 12). The tuple keeps
-        # the released handle; _release_curation's second unpersist
-        # is a no-op.
-        staged[3]._jdf.queryExecution().toRdd().count()
-        staged[4].unpersist()
-        _cache_put(_CURATION_CACHE, key, staged, frame_of=_release_curation)
-        # Serve frames once per staged tuple (round 13 for rates;
-        # round 14 for mix + order, guide §2.4): all three are pure
-        # functions of the near-dup survivor set (exk anti dominated),
-        # so the steady assembly was re-evaluating the mix flag
-        # subtree twice (its own join + training_order's input) and
-        # re-running the shard-rank windows on every call for frames
-        # the cold build can materialize once.
-        ndk = staged[2].join(F.broadcast(staged[3]), "doc_id", "left_anti")
-        rates = sampling.temperature_mix_rates(ndk).persist()
-        rates._jdf.queryExecution().toRdd().count()
-        mix = sampling.temperature_mix_flags(
-            ndk, keep_all=True, rates=rates
-        ).persist()
-        mix._jdf.queryExecution().toRdd().count()
-        order = sampling.training_order(
-            mix.where(F.col("keep_temp") == 1)
-        ).persist()
-        order._jdf.queryExecution().toRdd().count()
-        serve = (rates, mix, order)
-        _cache_put(_CURATION_SERVE, key, serve, frame_of=_release_serve)
-    _rates, mix, order = serve
+    staged, _rates, mix, order = serve_store.serve(
+        spark, sf_dir, "curation", ("documents",),
+        lambda _tmp: _curation_build(_docs(spark, sf_dir)),
+        release=_release_curation,
+    )
     return curation_decision_record(staged, mix=mix, order=order)
+
+
+def _curation_build(docs: DataFrame) -> tuple:
+    """The serve store's ``curation`` entry: the persisted stage frames
+    (`curation_stages`) plus the serve frames (rates, mix, order)
+    materialized from them — all pure functions of the near-dup
+    survivor set (exk anti dominated), so serving them from the cold
+    build is value-identical and the steady assembly neither evaluates
+    the mix subtree twice (its own join + training_order's input) nor
+    re-runs the shard-rank windows per call."""
+    staged = curation_stages(docs)
+    # The signature frame's only consumer is `dominated`: materialize
+    # it (executes the frame's own QueryExecution, no rows to the
+    # driver) and release sigs immediately — at 20M docs the ~12 GB
+    # cached signature frame otherwise pressures the storage pool
+    # through every later assembly (measured — docs/SCALE_PROBE.md
+    # round 12). The tuple keeps the released handle; the entry's
+    # release unpersists it again, a no-op.
+    staged[3]._jdf.queryExecution().toRdd().count()
+    staged[4].unpersist()
+    ndk = staged[2].join(F.broadcast(staged[3]), "doc_id", "left_anti")
+    rates = sampling.temperature_mix_rates(ndk).persist()
+    rates._jdf.queryExecution().toRdd().count()
+    mix = sampling.temperature_mix_flags(ndk, keep_all=True, rates=rates).persist()
+    mix._jdf.queryExecution().toRdd().count()
+    order = sampling.training_order(mix.where(F.col("keep_temp") == 1)).persist()
+    order._jdf.queryExecution().toRdd().count()
+    return staged, rates, mix, order
+
+
+def _release_curation(entry: tuple) -> None:
+    (q, _ex, exk, dominated, sigs), rates, mix, order = entry  # ex is never persisted
+    _unpersist((q, exk, dominated, sigs, rates, mix, order))
 
 
 def curation_stages(
@@ -3699,8 +3457,8 @@ def curation_stages(
     its lineage is the whole LSH DAG — persist it or every downstream
     branch (mix census, final join, training order) re-runs the
     banding+verify pipeline. Callers own the persists: the registered
-    query parks them in _CURATION_CACHE (evict -> unpersist via
-    _release_curation); the probe unpersists explicitly per N.
+    query keeps them in the serve store's ``curation`` entry, which
+    unpersists them on evict; the probe unpersists explicitly per N.
 
     ``max_rows_per_cache_partition`` (round 12; VERDICT r11 next #4)
     bounds the PERSISTED stages' partition sizes: the full-text q and
@@ -3914,28 +3672,24 @@ def nb_lang_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistics once per model consumer — the 11-shuffle shape the
     round-6 audit flagged. bench.py reports the one-time fit as a
     cold_build_seconds row."""
-    from crypto_data_pipeline_spark.ml.classify import nb_lang_holdout, nb_train
+    from crypto_data_pipeline_spark.ml.classify import (
+        load_nb_model,
+        nb_lang_holdout,
+        nb_train,
+        save_nb_model,
+    )
 
     docs = _docs(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    model = _NB_MODEL_CACHE.get(key)
-    if model is None:
-        from crypto_data_pipeline_spark.ml.classify import (
-            load_nb_model,
-            save_nb_model,
-        )
 
-        # model AT REST (round-8): the serve joins carry no broadcast
-        # hint, and checkpoint-lineage size estimates are unreliable —
-        # the bench caught the grid join going shuffled (97 KB ->
-        # 1.8 MB shuffle bytes). A parquet-backed model measures its
-        # true megabytes, so the planner broadcasts it again; the
-        # write is model-sized and rides the cold-build row.
-        with _build_dir("nb_model_") as model_dir:
-            save_nb_model(model_dir, *nb_train(docs.where(F.col("doc_id") % 5 != 0)))
-            model = load_nb_model(spark, model_dir)
-        _cache_put(_NB_MODEL_CACHE, key, model, lambda m: m[0],
-                   dirs=_NB_MODEL_DIRS, at_rest=model_dir)
+    # nb_model: the fitted (classes, grid) at rest. The serve joins carry
+    # no broadcast hint and checkpoint-lineage size estimates are
+    # unreliable (the grid join once went shuffled, 97 KB -> 1.8 MB); a
+    # parquet-backed model measures its true size, so it broadcasts.
+    def build(model_dir: str) -> tuple:
+        save_nb_model(model_dir, *nb_train(docs.where(F.col("doc_id") % 5 != 0)))
+        return load_nb_model(spark, model_dir)
+
+    model = serve_store.serve(spark, sf_dir, "nb_model", ("documents",), build)
     return nb_lang_holdout(docs, model=model)
 
 
@@ -4086,12 +3840,6 @@ def lm_perplexity_buckets_kn(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kn_perplexity_buckets(docs, model=_lm_model_at_rest(spark, sf_dir, docs))
 
 
-# per-(applicationId, sf_dir) persisted excess-perplexity frame: the
-# RHO selection's cutoff search scans it twice, and each scan would
-# otherwise replay BOTH LM scoring joins. Guarded by the
-# documents' source fingerprint like the LM entry it is scored from.
-_RHO_SCORED_CACHE: dict[tuple[str, str], DataFrame] = {}
-
 _RHO_EXCESS_SQL = """
 WITH toks AS (SELECT doc_id, lang, {TOKENS_SQL} AS t FROM documents),
 bg AS (
@@ -4189,16 +3937,16 @@ def rho_excess_perplexity_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crypto_data_pipeline_spark.operators import lm as lm_ops
 
     docs = _docs(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    scored = _cache_get_fresh(_RHO_SCORED_CACHE, key, docs)
-    if scored is None:
-        _record_cache_source(_RHO_SCORED_CACHE, key, docs)
-        scored = lm_ops.rho_excess_scores(
+    # rho_scored: the persisted per-doc excess perplexity, scanned twice by the cutoff
+    scored = serve_store.serve(
+        spark, sf_dir, "rho_scored", ("documents",),
+        lambda _tmp: lm_ops.rho_excess_scores(
             docs,
             _lm_model(spark, sf_dir, docs),
             _lm_model_at_rest(spark, sf_dir, docs),
-        ).persist()
-        _cache_put(_RHO_SCORED_CACHE, key, scored, lambda s: s)
+        ).persist(),
+        release=DataFrame.unpersist,
+    )
     cutoff = dsir.dsir_kth_weight(scored, 0.25, weight_col="excess")
     kept = scored.withColumn(
         "kept", (F.col("excess") >= F.lit(cutoff)).cast("boolean")
@@ -4221,19 +3969,6 @@ def rho_excess_perplexity_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Spark expressions and the oracle SQL, so they cannot drift
 _SRC_DROP_DUP, _SRC_DROP_KEEP = 0.5, 0.3
 _SRC_REVIEW_DUP, _SRC_REVIEW_KEEP, _SRC_REVIEW_TAIL = 0.2, 0.6, 0.5
-
-# per-(applicationId, sf_dir) persisted per-doc battery frame for the
-# source report (round 14, VERDICT r13 next #3): (source, ch, keep,
-# is_tail) — the quality-rule battery, the md5 content hash, and the
-# LM bucket join are pure functions of the corpus, so every steady
-# call was re-running a full corpus scan (rule battery + md5 + LM
-# serve join, ~2 CPU-s at sf0.1, a corpus pass at 100 TB) to rebuild
-# a frame the first call can persist. Same contract as
-# _RHO_SCORED_CACHE: ~30 bytes/doc, no text, fingerprint-guarded,
-# evicted via _cache_put; the build lands in the bench's
-# cold_build_seconds row (source_curation_report is in AMORTIZED).
-_SRC_REPORT_CACHE: dict[tuple[str, str], DataFrame] = {}
-
 
 @register(
     "source_curation_report",
@@ -4292,10 +4027,8 @@ def source_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crypto_data_pipeline_spark.operators.lm import perplexity_buckets
 
     docs = _docs(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    per_doc = _cache_get_fresh(_SRC_REPORT_CACHE, key, docs)
-    if per_doc is None:
-        _record_cache_source(_SRC_REPORT_CACHE, key, docs)
+    # src_report: the persisted per-doc (source, ch, keep, is_tail) battery frame
+    def build(_tmp: str) -> DataFrame:
         # unhex (round 13, guide §2.3 — shuffle narrower types): ch only
         # feeds countDistinct, and unhex is bijective on md5 hex, so the
         # distinct-(source, ch) exchange carries 16 binary bytes per pair
@@ -4319,10 +4052,13 @@ def source_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         lmb = perplexity_buckets(docs, model=_lm_model(spark, sf_dir, docs)).select(
             "doc_id", (F.col("bucket") == "tail").cast("int").alias("is_tail")
         )
-        per_doc = base.join(lmb, "doc_id").select(
+        return base.join(lmb, "doc_id").select(
             "source", "ch", "keep", "is_tail"
         ).persist()
-        _cache_put(_SRC_REPORT_CACHE, key, per_doc, lambda df: df)
+
+    per_doc = serve_store.serve(
+        spark, sf_dir, "src_report", ("documents",), build, release=DataFrame.unpersist
+    )
     agg = (
         per_doc
         .groupBy("source")
@@ -4517,17 +4253,14 @@ def embedding_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     still recomputes everything from the raw embeddings, so the hash
     match proves served codes ≡ fresh encode."""
     embs = _embs(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _cache_get_fresh(_PQ_CODES_CACHE, key, embs)
-    if got is None:
-        _record_cache_source(_PQ_CODES_CACHE, key, embs)
+
+    # pq_codes: the codebook and the corpus's m-byte codes at rest
+    def build(codes_dir: str) -> tuple:
         books = similarity.build_fixed_pq_codebook(embs, list(range(16)), m=8)
-        with _build_dir("pq_codes_") as codes_dir:
-            similarity.pq_encode(embs, books).write.mode("overwrite").parquet(codes_dir)
-            got = (books, spark.read.parquet(codes_dir))
-        _cache_put(_PQ_CODES_CACHE, key, got, lambda t: t[1],
-                   dirs=_PQ_CODES_DIRS, at_rest=codes_dir)
-    books, codes = got
+        similarity.pq_encode(embs, books).write.mode("overwrite").parquet(codes_dir)
+        return books, spark.read.parquet(codes_dir)
+
+    books, codes = serve_store.serve(spark, sf_dir, "pq_codes", ("embeddings",), build)
     queries = embs.where(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )

@@ -542,7 +542,7 @@ def test_lm_serve_caches_refit_on_changed_documents(spark, tmp_path, lm_tmpdir):
 
     import duckdb
 
-    from crypto_data_pipeline_spark.plans import extension_queries as eq
+    from crypto_data_pipeline_spark import serve_store
     from crypto_data_pipeline_spark.plans.registry import load_with_extras
 
     spec = load_with_extras()["source_curation_report"]
@@ -567,10 +567,10 @@ def test_lm_serve_caches_refit_on_changed_documents(spark, tmp_path, lm_tmpdir):
         tuple(r[c] for c in sorted(sdf.columns)) for r in first
     )
     assert len(_model_dirs(lm_tmpdir)) == 1
-    # entries of other sf_dirs were evicted along with their fingerprints
-    assert [k for k in eq._CACHE_SOURCE_FPS if k[0] == id(eq._LM_MODEL_CACHE)] == [
-        (id(eq._LM_MODEL_CACHE), *k) for k in eq._LM_MODEL_CACHE
-    ]
+    # the one live LM entry is this sf_dir's, fingerprinted on the new corpus
+    entry = serve_store._ENTRIES["lm_model"]
+    assert entry.key[1] == sf
+    assert entry.fingerprint == serve_store.fingerprint(sf, ("documents",))
 
 
 def test_approx_buckets_agree_with_exact(spark, sf_dir):

@@ -234,16 +234,15 @@ def test_silver_downgrade_is_loud(spark, sf_dir, monkeypatch, caplog):
 
     import pytest
 
+    from crypto_data_pipeline_spark import serve_store
     from crypto_data_pipeline_spark.plans import core_queries as cq
     from crypto_data_pipeline_spark.sources import bucketed
 
     # healthy session: the zero-Exchange bucketed path is the one served
     assert cq.history_is_bucketed(spark, sf_dir)
 
-    # run the FAILURE scenarios against a different sf_dir: _history
-    # DROPs its target table name before writing, and the sid is keyed
-    # on (app, sf_dir) — reusing the healthy sf_dir would silently
-    # drop the live session's silver table as a test side effect
+    # the FAILURE scenarios run against another sf_dir, each on an
+    # emptied serve store so the silver entry is built anew
     other_sf = (
         "/root/testdata/sf0.01"
         if "sf0.01" not in sf_dir
@@ -254,22 +253,26 @@ def test_silver_downgrade_is_loud(spark, sf_dir, monkeypatch, caplog):
         raise RuntimeError("warehouse is read-only (simulated)")
 
     monkeypatch.setattr(bucketed, "write_bucketed", broken_warehouse)
-    monkeypatch.setattr(cq, "_SILVER_CACHE", {})
     monkeypatch.delenv("SPARK_GRAFT_REQUIRE_SILVER", raising=False)
-    with caplog.at_level(logging.WARNING, logger=cq.__name__):
-        df = cq._history(spark, other_sf)
-    assert any(
-        "silver history downgrade" in rec.getMessage() and "read-only" in rec.getMessage()
-        for rec in caplog.records
-    )
-    # the fallback still answers correctly (inline daily aggregation)
-    assert df.limit(1).count() == 1
+    try:
+        serve_store.clear()
+        with caplog.at_level(logging.WARNING, logger=cq.__name__):
+            df = cq._history(spark, other_sf)
+        assert any(
+            "silver history downgrade" in rec.getMessage()
+            and "read-only" in rec.getMessage()
+            for rec in caplog.records
+        )
+        # the fallback still answers correctly (inline daily aggregation)
+        assert df.limit(1).count() == 1
 
-    # strict mode refuses the downgrade outright
-    monkeypatch.setattr(cq, "_SILVER_CACHE", {})
-    monkeypatch.setenv("SPARK_GRAFT_REQUIRE_SILVER", "1")
-    with pytest.raises(RuntimeError, match="read-only"):
-        cq._history(spark, other_sf)
+        # strict mode refuses the downgrade outright
+        serve_store.clear()
+        monkeypatch.setenv("SPARK_GRAFT_REQUIRE_SILVER", "1")
+        with pytest.raises(RuntimeError, match="read-only"):
+            cq._history(spark, other_sf)
+    finally:
+        serve_store.clear()  # no downgraded entry outlives the test
 
 
 def test_runtime_bloom_filter_prunes_shuffle_join_probe(spark, tmp_path):
