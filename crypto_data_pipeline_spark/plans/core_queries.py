@@ -57,6 +57,17 @@ def _history(spark: SparkSession, sf_dir: str) -> DataFrame:
     bronze→silver layering a 100 TB deployment would run: pay the
     events shuffle once at ingest, amortize it over every query.
 
+    Bucket count: the session's ``spark.sql.shuffle.partitions``, read
+    once at build and used for both the pre-write repartition and
+    ``bucketBy``. A silver scan runs one task per bucket, so more
+    buckets only add fixed per-read cost. Fewer buckets cost a shuffle
+    of silver itself in joins: silver joined to an events aggregate
+    shuffled on entity_id, broadcast off, 8 shuffle partitions, plans 1
+    shuffle Exchange at 8 buckets but 2 at 4 (silver is shuffled to 8)
+    and 2 at 32 (the aggregate is shuffled again to 32), at both sf0.001
+    and sf0.01 — so the count is never below the shuffle partitions,
+    even where fewer buckets run faster.
+
     Falls back to the inline daily aggregation when the session cannot
     write a catalog table (read-only warehouse); results are identical
     either way (the daily reduction is exact max, and doubles
@@ -64,36 +75,34 @@ def _history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import hashlib
 
-    # Table name is session-unique: a name keyed only on sf_dir collides
-    # with a previous session's leftover warehouse directory
-    # (saveAsTable refuses the existing path), which silently
-    # downgraded every later session to the unbucketed fallback. The
-    # table lives at the entry's store dir, outside the warehouse.
+    # The table name is unique to (session, sf_dir), so no earlier
+    # session's leftover table or dir can make saveAsTable refuse it.
+    # The table lives at the entry's store dir, outside the warehouse.
     app = spark.sparkContext.applicationId
     tbl = "silver_history_" + hashlib.md5(f"{app}:{sf_dir}".encode()).hexdigest()[:10]
 
     def build(silver_dir: str) -> DataFrame:
         daily = ts.daily_price_series(load_table(spark, sf_dir, "events"))
+        n = int(spark.conf.get("spark.sql.shuffle.partitions"))
         try:
             from crypto_data_pipeline_spark.sources.bucketed import write_bucketed
 
             spark.sql(f"DROP TABLE IF EXISTS {tbl}")
             write_bucketed(
-                daily.repartition(32, ENTITY),
+                daily.repartition(n, ENTITY),
                 tbl,
                 [ENTITY],
-                32,
+                n,
                 sort_cols=[ENTITY, DATE],
                 path=silver_dir,
             )
             return spark.table(tbl)
         except Exception as exc:
-            # Loud downgrade: the zero-Exchange bucketed path silently
-            # dying already bit us once (round-3 name collision, commit
-            # 82e295f). Results stay correct either way, but a prod
-            # misconfig would re-pay an Exchange per query — so name the
-            # cause in the log and hard-fail when the caller demands the
-            # bucketed layout (bench.py sets SPARK_GRAFT_REQUIRE_SILVER).
+            # Loud downgrade: results stay correct on the fallback, but
+            # every downstream query re-pays the events->daily Exchange,
+            # so name the cause in the log, and hard-fail when the
+            # caller demands the bucketed layout (bench.py sets
+            # SPARK_GRAFT_REQUIRE_SILVER).
             import logging
 
             logging.getLogger(__name__).warning(

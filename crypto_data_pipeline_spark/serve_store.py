@@ -1,7 +1,9 @@
 """The serve store: the one owner of every per-(session, corpus) serve
 entry — state a query family derives once from the corpus and serves
 to many calls (the silver history, the fitted LM, the ANN, PQ and
-signature indexes, the DSIR features, the curation stages).
+signature indexes, the DSIR features, the curation stages, and one
+``schema:{table}`` entry per table that `sources.tables.load_table`
+reads with, so a repeat load infers no schema).
 
 Contract:
 

@@ -11,6 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from crypto_data_pipeline_spark import serve_store
+
 TABLES = (
     "region",
     "nation",
@@ -36,33 +38,71 @@ BROADCAST_DIMS = frozenset({"region", "nation"})
 # truncation so both engines see identical instants.
 _NANO_TS_COLS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 
+# The parquet read confs the inferred schema depends on: the same file
+# infers another schema under another setting of any of them.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Lazy parquet scan of one synthetic table.
 
-    Defensively sets the two session confs correctness depends on —
-    the caller may hand us a session built without our factory (the
-    driver does): nanosAsLong, without which the TIMESTAMP(NANOS)
-    events scan throws PARQUET_TYPE_ILLEGAL, and a UTC session zone so
-    CAST(ts AS DATE) agrees with the timezone-naive DuckDB oracle.
-    Both are runtime-settable SQL confs."""
-    if name not in TABLES:
-        raise KeyError(f"unknown table {name!r}; have {TABLES}")
+def _pin_read_confs(spark: SparkSession) -> None:
+    """Set the two session confs correctness depends on — the caller
+    may hand us a bare session, built without our factory:
+    nanosAsLong, without which the TIMESTAMP(NANOS) events scan throws
+    PARQUET_TYPE_ILLEGAL, and a UTC session zone so CAST(ts AS DATE)
+    agrees with the timezone-naive DuckDB oracle. Both are
+    runtime-settable SQL confs."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    for field in df.schema.fields:
+
+
+def _file_schema(spark: SparkSession, sf_dir: str, name: str) -> T.StructType:
+    """The schema Spark infers from the parquet footers of table
+    ``name`` under the session's current ``_SCHEMA_CONFS``.
+
+    Inference runs a Spark job, so its result is kept in the serve
+    store's ``schema:{name}`` entry, whose value maps the tuple of those
+    conf values to the schema inferred under them. A rewritten table
+    file is a store miss (the fingerprint moved), a changed conf infers
+    again, and a repeat load launches no job."""
+    confs = tuple(spark.conf.get(k) for k in _SCHEMA_CONFS)
+    by_conf = serve_store.serve(spark, sf_dir, f"schema:{name}", (name,), lambda _tmp: {})
+    schema = by_conf.get(confs)
+    if schema is None:  # two threads that miss together store equal schemas
+        schema = by_conf[confs] = spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
+    return schema
+
+
+def _normalize_timestamps(df: DataFrame, name: str, schema: T.StructType) -> DataFrame:
+    """Turn the timestamp encodings of ``schema`` into TIMESTAMP columns."""
+    for field in schema.fields:
         if field.name in _NANO_TS_COLS.get(name, ()) and isinstance(field.dataType, T.LongType):
             df = df.withColumn(field.name, F.expr(f"timestamp_micros({field.name} div 1000)"))
         elif isinstance(field.dataType, T.TimestampNTZType):
             # Parquet TIMESTAMP(isAdjustedToUTC=false) surfaces as
             # TIMESTAMP_NTZ, which unix_micros()/date_trunc interop
-            # rejects. Under the UTC session zone forced above, casting
-            # to TIMESTAMP is wall-clock-identity, so every downstream
-            # extraction still agrees with the timezone-naive DuckDB
-            # oracle.
+            # rejects. Under the UTC session zone pinned by
+            # _pin_read_confs, casting to TIMESTAMP is
+            # wall-clock-identity, so every downstream extraction still
+            # agrees with the timezone-naive DuckDB oracle.
             df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))
     return df
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Lazy parquet scan of one synthetic table, read with the schema
+    the serve store's ``schema:{name}`` entry holds (``_file_schema``)
+    instead of one inferred from the footers on every call."""
+    if name not in TABLES:
+        raise KeyError(f"unknown table {name!r}; have {TABLES}")
+    _pin_read_confs(spark)
+    schema = _file_schema(spark, sf_dir, name)
+    df = spark.read.schema(schema).parquet(f"{sf_dir}/{name}.parquet")
+    return _normalize_timestamps(df, name, schema)
 
 
 def load_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -72,23 +112,17 @@ def load_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     Streaming sources need an explicit schema, and the testdata's
     physical ts encoding has two observed generations — TIMESTAMP(NANOS)
     (surfaces as long under nanosAsLong) and TIMESTAMP(MICROS,
-    isAdjustedToUTC=false) (surfaces as TIMESTAMP_NTZ) — so the schema
-    is taken from the batch footer and the matching conversion applied,
-    keeping both generations bit-identical to the batch loader."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    isAdjustedToUTC=false) (surfaces as TIMESTAMP_NTZ) — so the stream
+    takes the batch loader's footer schema and conversions, keeping
+    both generations bit-identical to the batch loader."""
+    _pin_read_confs(spark)
+    schema = _file_schema(spark, sf_dir, "events")
     stream = (
-        spark.readStream.schema(batch_schema)
+        spark.readStream.schema(schema)
         # glob → the parent dir becomes basePath, single-file stream
         .parquet(f"{sf_dir}/events.[p]arquet")
     )
-    ts_type = batch_schema["ts"].dataType
-    if isinstance(ts_type, T.LongType):
-        stream = stream.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    elif isinstance(ts_type, T.TimestampNTZType):
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+    return _normalize_timestamps(stream, "events", schema)
 
 
 def fan_out(df: DataFrame, factor: int = 1) -> DataFrame:

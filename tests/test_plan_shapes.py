@@ -122,6 +122,65 @@ def test_history_windows_have_no_exchange_below(spark, sf_dir):
     assert exchange_count(df) == 0, _plan(df)
 
 
+def _fanned_corpus(sf_dir: str, dst: str, copies: int = 10) -> str:
+    """``sf_dir``'s events, ``copies`` times over with disjoint user
+    ids, so every one of a handful of silver buckets holds an entity."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    ev = pq.read_table(f"{sf_dir}/events.parquet")
+    parts = []
+    for k in range(copies):
+        t = ev
+        for col in ("event_id", "user_id"):
+            i = t.schema.get_field_index(col)
+            t = t.set_column(i, t.schema.field(i),
+                             pc.add(t[col], pa.scalar(k * 10**6, t.schema.field(i).type)))
+        parts.append(t)
+    os.makedirs(dst)
+    pq.write_table(pa.concat_tables(parts), f"{dst}/events.parquet")
+    return dst
+
+
+def test_silver_buckets_follow_shuffle_partitions(spark, sf_dir, tmp_path):
+    """Silver has one bucket per shuffle partition: the build writes
+    exactly N sorted files, a silver aggregate reads all N buckets, and
+    a join of silver to a shuffled events aggregate on the entity key
+    plans one shuffle — with any other bucket count, either silver or
+    the aggregate is shuffled again."""
+    import os
+
+    from crypto_data_pipeline_spark import serve_store
+    from crypto_data_pipeline_spark.plans import core_queries as cq
+
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    sf = _fanned_corpus(sf_dir, str(tmp_path / "sf"))
+    try:
+        silver = cq._history(spark, sf)
+        files = [f for f in os.listdir(serve_store._ENTRIES["silver"].tmp)
+                 if f.startswith("part-")]
+        assert len(files) == n, files
+
+        plan = _plan(SPECS["monthly_avg_price"].fn(spark, sf))
+        assert f"SelectedBucketsCount: {n} out of {n}" in plan, plan
+
+        users = load_table(spark, sf, "events").groupBy("user_id").agg(
+            F.count(F.lit(1)).alias("n_events")
+        ).withColumnRenamed("user_id", "entity_id")
+        saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            joined = silver.join(users, "entity_id")
+            assert _shuffle_count(joined) == 1, _plan(joined)
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+    finally:
+        serve_store.clear()
+
+
 def test_filtered_scan_prunes_wide_columns(spark, sf_dir):
     """Column pruning at the source: a 3-column projection of events
     must not read the wide props JSON payload."""

@@ -34,6 +34,10 @@ ENTRY_QUERIES = {
     "ivf_fixed": ("embeddings", "embedding_ann_ivf_fixed"),
     "lsh": ("embeddings", "embedding_ann_lsh_multiprobe"),
     "pq_codes": ("embeddings", "embedding_pq_topk"),
+    # load_table's inferred schemas, one entry per table
+    "schema:events": ("events", "monthly_avg_price"),
+    "schema:documents": ("documents", "token_counts"),
+    "schema:embeddings": ("embeddings", "embedding_topk_bruteforce"),
 }
 SPECS = load_with_extras()
 TABLES = ("documents", "events", "embeddings")
@@ -147,7 +151,8 @@ def test_store_contract_without_spark(tmp_path):
 
 def test_mapping_names_every_entry():
     """A new serve entry must join ENTRY_QUERIES, so both tests below
-    walk it."""
+    walk it. An entry named by an f-string (``f"schema:{name}"``) is a
+    family: some ENTRY_QUERIES name must fit it."""
     pkg = os.path.dirname(serve_store.__file__)
     names = set()
     for d, _, files in os.walk(pkg):
@@ -155,9 +160,11 @@ def test_mapping_names_every_entry():
             if f.endswith(".py"):
                 with open(os.path.join(d, f)) as fh:
                     names |= set(re.findall(
-                        r'serve_store\.serve\(\s*spark,\s*sf_dir,\s*"(\w+)"', fh.read()
+                        r'serve_store\.serve\(\s*spark,\s*sf_dir,\s*f?"([\w:{}]+)"', fh.read()
                     ))
-    assert names == set(ENTRY_QUERIES)
+    patterns = [re.compile(re.sub(r"\{\w+\}", r"\\w+", n)) for n in names]
+    assert all(any(p.fullmatch(e) for e in ENTRY_QUERIES) for p in patterns)
+    assert all(any(p.fullmatch(e) for p in patterns) for e in ENTRY_QUERIES)
 
 
 @pytest.mark.parametrize(
@@ -190,6 +197,68 @@ def test_entry_rebuilds_on_rewritten_source(spark, sf_dir, tmp_path, entry):
     if oracle is not None:
         assert second == _oracle_rows(sf, oracle)
         assert second != first
+    serve_store.clear()
+
+
+def _plan_jobs(spark, fn) -> int:
+    """Spark jobs launched while ``fn`` runs, counted in a job group of
+    its own."""
+    sc = spark.sparkContext
+    group = f"plan-jobs-{time.monotonic_ns()}"
+    sc.setJobGroup(group, "jobs launched while building a plan")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    spark._jsparkSession.sparkContext().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize(
+    "query", ["pricing_summary", "revenue_by_nation", "sessionization", "drop_recovery"]
+)
+def test_repeat_table_loads_launch_no_job(spark, sf_dir, query):
+    """Building a query's plan again on the same corpus launches no
+    Spark job: each table's schema is served, not inferred again."""
+    fn = SPECS[query].fn
+    fn(spark, sf_dir)
+    assert _plan_jobs(spark, lambda: fn(spark, sf_dir)) == 0
+
+
+def test_load_table_sees_rewritten_schema(spark, sf_dir, tmp_path):
+    """A table rewritten in place with an added column loads with that
+    column and the new file's rows; a changed parquet read conf infers
+    the schema again instead of serving the one inferred under the old
+    setting."""
+    from pyspark.sql import types as T
+
+    from crypto_data_pipeline_spark.sources.tables import load_table
+
+    sf = _copy_sf(sf_dir, str(tmp_path / "sf"))
+    assert "tag" not in load_table(spark, sf, "events").columns
+    path = f"{sf}/events.parquet"
+    t = pq.read_table(path)
+    t = t.append_column("tag", pa.array(
+        [f"t{i % 7}".encode() for i in range(t.num_rows)], type=pa.binary()
+    ))
+    time.sleep(0.05)  # ensure mtime_ns moves even on coarse filesystems
+    pq.write_table(t, path)
+
+    cols = "event_id, user_id, CAST(ts AS DATE) AS day, value, tag"
+    df = load_table(spark, sf, "events")
+    assert isinstance(df.schema["tag"].dataType, T.BinaryType)
+    spark_rows = _rows(["event_id", "user_id", "day", "value", "tag"],
+                       [tuple(r) for r in df.selectExpr(*cols.split(", ")).collect()])
+    assert spark_rows == _oracle_rows(sf, f"SELECT {cols} FROM events")
+
+    key = "spark.sql.parquet.binaryAsString"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        assert isinstance(load_table(spark, sf, "events").schema["tag"].dataType, T.StringType)
+    finally:
+        spark.conf.set(key, saved)
+    assert isinstance(load_table(spark, sf, "events").schema["tag"].dataType, T.BinaryType)
     serve_store.clear()
 
 
