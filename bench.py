@@ -151,7 +151,7 @@ def main() -> None:
     timings: dict[str, float] = {}
     cpu_seconds: dict[str, float] = {}
     shuffle_bytes: dict[str, int] = {}
-    from crypto_data_pipeline_spark.observability import plan_runtime_metrics
+    from crypto_data_pipeline_spark.observability import profile_call
 
     for spec in specs:
         runs = []
@@ -172,15 +172,11 @@ def main() -> None:
         # Untimed 4th pass for runtime truth alongside wall-clock:
         # shuffle volume is deterministic where seconds are not
         # (docs/BENCH_VARIANCE.md), so a plan regression shows here
-        # even through host noise. The action must execute the
-        # DataFrame's OWN QueryExecution (a writer action plans a
-        # separate one with zeroed metrics) without shipping rows to
-        # the driver (row-amplified outputs would OOM a collect) —
-        # toRdd().count() does exactly that.
+        # even through host noise.
         try:
-            df = spec.fn(spark, sf_dir)
-            df._jdf.queryExecution().toRdd().count()
-            shuffle_bytes[spec.name] = plan_runtime_metrics(df)["shuffle_bytes_written"]
+            shuffle_bytes[spec.name] = profile_call(spark, spec.fn, sf_dir)[
+                "shuffle_bytes_written"
+            ]
         except Exception:
             shuffle_bytes[spec.name] = -1  # never fail the bench for a metric read
 

@@ -8,6 +8,8 @@ parquet lake needs that the reference never had.
         --store /lake/silver_prices
     python -m crypto_data_pipeline_spark query \
         --name monthly_avg_price --sf-dir /root/testdata/sf0.001
+    python -m crypto_data_pipeline_spark profile \
+        --sf-dir /lake/sf0.01 --out /tmp/prof monthly_avg_price
     python -m crypto_data_pipeline_spark compact --path /lake/t --target-mb 128
     python -m crypto_data_pipeline_spark purge-quarantine \
         --path /lake/dead_letter --keep-after 2026-08-01
@@ -104,19 +106,77 @@ def cmd_get_history(args: argparse.Namespace) -> int:
     return 0
 
 
-def cmd_query(args: argparse.Namespace) -> int:
-    """Run a registered catalog query by name (the `\\i
-    analysis_queries.sql` replacement) and print up to --limit rows."""
+def _registered(names: list[str]) -> dict | None:
+    """The registry's specs, or None after naming on stderr the first
+    of ``names`` the registry does not know, with the known names."""
     from crypto_data_pipeline_spark.plans.registry import load_with_extras
 
     specs = load_with_extras()
-    if args.name not in specs:
-        known = ", ".join(sorted(specs))
-        print(f"unknown query {args.name!r}; known: {known}", file=sys.stderr)
+    for name in names:
+        if name not in specs:
+            known = ", ".join(sorted(specs))
+            print(f"unknown query {name!r}; known: {known}", file=sys.stderr)
+            return None
+    return specs
+
+
+def cmd_query(args: argparse.Namespace) -> int:
+    """Run a registered catalog query by name (the `\\i
+    analysis_queries.sql` replacement) and print up to --limit rows."""
+    specs = _registered([args.name])
+    if specs is None:
         return 2
     spark = _spark(f"cli-query-{args.name}")
     df = specs[args.name].fn(spark, args.sf_dir)
     df.show(args.limit, truncate=False)
+    return 0
+
+
+def cmd_profile(args: argparse.Namespace) -> int:
+    """Profile registered queries on --sf-dir, one
+    `observability.profile_call` record per call, and print one JSON
+    line per query with two records: ``cold``, its first call on the
+    dir in this session, and ``steady``, the call with the median wall
+    of three calls made after one untimed warm call. A cache that
+    several queries share (silver, the LM fit, the fixed IVF index) is
+    built in the cold call of the first of them named. With --out,
+    also write DIR/PROFILE.json (every record) and DIR/<name>.txt, the
+    formatted explain of the executed steady plan."""
+    import json
+    import os
+
+    from crypto_data_pipeline_spark.observability import profile_call
+
+    specs = _registered(args.names)
+    if specs is None:
+        return 2
+    spark = _spark("cli-profile")
+    mode = spark.sparkContext._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "formatted"
+    )
+    if args.out:
+        os.makedirs(args.out, exist_ok=True)
+    table: dict[str, dict] = {}
+    for name in args.names:
+        built = {}
+
+        def call(spark, sf_dir, fn=specs[name].fn):
+            built["df"] = fn(spark, sf_dir)  # kept for the steady explain
+            return built["df"]
+
+        cold = profile_call(spark, call, args.sf_dir)
+        profile_call(spark, call, args.sf_dir)  # the untimed warm call
+        runs = [(profile_call(spark, call, args.sf_dir), built["df"]) for _ in range(3)]
+        steady, steady_df = sorted(runs, key=lambda r: r[0]["wall"])[1]
+        table[name] = {"cold": cold, "steady": steady}
+        print(json.dumps({"query": name, "sf_dir": args.sf_dir, **table[name]}), flush=True)
+        if args.out:
+            with open(os.path.join(args.out, f"{name}.txt"), "w") as f:
+                f.write(steady_df._jdf.queryExecution().explainString(mode))
+    if args.out:
+        with open(os.path.join(args.out, "PROFILE.json"), "w") as f:
+            json.dump(table, f, indent=2, sort_keys=True)
+            f.write("\n")
     return 0
 
 
@@ -336,6 +396,13 @@ def build_parser() -> argparse.ArgumentParser:
     q.add_argument("--sf-dir", default="/root/testdata/sf0.001")
     q.add_argument("--limit", type=int, default=20)
     q.set_defaults(fn=cmd_query)
+
+    pr = sub.add_parser("profile", help="per-call jobs, times and plan metrics of registered queries")
+    pr.add_argument("names", nargs="+", metavar="NAME")
+    pr.add_argument("--sf-dir", required=True)
+    pr.add_argument("--out", default=None,
+                    help="directory for PROFILE.json and one explain per query")
+    pr.set_defaults(fn=cmd_profile)
 
     c = sub.add_parser("compact", help="rewrite a parquet dir into ~target-size files")
     c.add_argument("--path", required=True)

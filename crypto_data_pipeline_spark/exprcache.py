@@ -79,10 +79,6 @@ def memo_expr(key: tuple[Hashable, ...], build: Callable[[], Column]) -> Column:
     ``_build_fingerprint``), building it with ``build()`` on first use.
     Stale entries from previous applications are dropped so handles
     never outlive their JVM."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_NO_EXPR_MEMO"):
-        return build()
     app = _app_id()
     full = (app, *key, _build_fingerprint(build))
     col = _CACHE.get(full)

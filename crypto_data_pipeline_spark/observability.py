@@ -5,10 +5,12 @@ metrics off an executed plan, not just its static shape.
 the loop the way a 100 TB deployment does — after a query runs, pull
 the SQLMetrics Spark already collected (shuffle bytes/records
 written, spill, scan output rows) straight from the executed-plan
-tree. bench.py attaches these per query, so a regression that doubles
-shuffle volume is visible in the bench artifact even when wall-clock
-noise (see docs/BENCH_VARIANCE.md) hides it: bytes are deterministic
-where seconds are not.
+tree. `profile_call` wraps one query call into one record of these
+metrics plus its jobs, wall and CPU; bench.py and the CLI `profile`
+subcommand read it, so a regression that doubles shuffle volume is
+visible in the bench artifact even when wall-clock noise (see
+docs/BENCH_VARIANCE.md) hides it: bytes are deterministic where
+seconds are not.
 
 Implementation notes: with AQE the root is AdaptiveSparkPlanExec and
 already-executed stages hide behind QueryStageExec wrappers — both are
@@ -88,11 +90,10 @@ def source_fingerprint(paths) -> dict | None:
     """Identity of the files under ``paths`` — each a table path, a
     file or a directory, local or a ``file:`` URI: (path, size,
     mtime_ns) of every file folded into one sha256, plus counts. The
-    serve store and the at-rest index sidecars record it at build time
-    and re-check it before serving, so a replaced or appended source
-    file reads as a changed corpus. Cost: one ``os.walk`` and one
-    ``os.stat`` per file — no Spark job, no DataFrame. A path on
-    another filesystem (``hdfs:``, ``s3a:``) cannot be stat'ed here:
+    serve store records it at build time and re-checks it on every
+    hit, so a replaced or appended source file reads as a changed
+    corpus. Cost: one ``os.walk`` and one ``os.stat`` per file — no
+    Spark job, no DataFrame. A path on another filesystem (``hdfs:``, ``s3a:``) cannot be stat'ed here:
     the result is None with a logged warning, and callers skip the
     check."""
     import hashlib
@@ -188,6 +189,62 @@ def plan_runtime_metrics(df: DataFrame, include_cached: bool = False) -> dict[st
     plan = df._jdf.queryExecution().executedPlan()
     walk(plan)
     return totals
+
+
+def profile_call(spark, fn, sf_dir: str) -> dict:
+    """Run one query call ``fn(spark, sf_dir)`` and return its record,
+    the batch analogue of Structured Streaming's per-trigger progress
+    report:
+
+    * ``wall``: seconds to build the DataFrame and execute its plan;
+      ``py_build`` is the build part, which includes any job the query
+      launches while building (a cold cache build, a driver collect);
+    * ``cpu_s``: process-tree CPU seconds over the call;
+    * ``n_jobs``: Spark jobs the call launched; ``build_jobs``: those
+      launched while ``fn`` ran;
+    * the executed plan's `plan_runtime_metrics`;
+    * ``job_group``: the job group of the call, used by no other call.
+
+    The plan runs once, through the DataFrame's own QueryExecution:
+    ``toRdd().count()`` ships no rows to the driver, where a writer
+    action would plan a second execution whose metrics stay zero. The
+    status tracker learns of jobs through the listener bus, so jobs
+    are counted after the bus drains. The caller's job group is
+    restored on return."""
+    import time
+
+    sc = spark.sparkContext
+    bus = spark._jsparkSession.sparkContext().listenerBus()
+    group = f"profile-{time.monotonic_ns()}"
+    saved = {
+        k: sc.getLocalProperty(k)
+        for k in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+    }
+    sc.setJobGroup(group, f"profile {getattr(fn, '__name__', 'call')} on {sf_dir}")
+    try:
+        cpu0 = proc_tree_cpu_seconds()
+        t0 = time.perf_counter()
+        df = fn(spark, sf_dir)
+        py_build = time.perf_counter() - t0
+        bus.waitUntilEmpty()
+        build_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        t1 = time.perf_counter()
+        df._jdf.queryExecution().toRdd().count()
+        wall = py_build + time.perf_counter() - t1
+        cpu = max(0.0, proc_tree_cpu_seconds() - cpu0)
+    finally:
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)
+    bus.waitUntilEmpty()
+    return {
+        "wall": round(wall, 3),
+        "py_build": round(py_build, 3),
+        "cpu_s": round(cpu, 2),
+        "n_jobs": len(sc.statusTracker().getJobIdsForGroup(group)),
+        "build_jobs": build_jobs,
+        **plan_runtime_metrics(df),
+        "job_group": group,
+    }
 
 
 def global_window_nodes(df: DataFrame) -> list[str]:

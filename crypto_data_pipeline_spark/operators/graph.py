@@ -23,54 +23,7 @@ rounds; min-label is the right default for dedup-shaped graphs.
 
 from __future__ import annotations
 
-import contextlib
-
 from pyspark.sql import DataFrame, functions as F
-
-# target rows per shuffle partition inside the iterative CC loops
-# (round 14, VERDICT r13 next #6): the loop's shuffle sizing derives
-# from the MATERIALIZED edge count, not from a constant tuned for any
-# one box — a 2k-edge near-dup graph runs single-task rounds, a
-# billion-edge graph keeps thousands of partitions. Env-tunable for
-# cluster profiles.
-_CC_ROWS_PER_PARTITION_ENV = "SPARK_GRAFT_CC_ROWS_PER_PART"
-_CC_ROWS_PER_PARTITION_DEFAULT = 65536
-
-
-@contextlib.contextmanager
-def _iterative_loop_conf(spark, n_rows: int):
-    """Plan the body's queries with AQE OFF and shuffle partitions
-    derived from the loop frame's materialized row count (guide §1.2
-    step 1 + §2.2). The convergence-checked loops run one ACTION per
-    round over label/edge-sized frames; with AQE on, every round
-    re-plans adaptively and materializes each Exchange as its own job
-    — pure scheduling overhead on frames whose size the loop already
-    KNOWS (the edge list is localCheckpoint'd and counted). Static
-    plans with size-derived partitioning cut the isolated min-label
-    loop's scheduled jobs 15 → 9 per call on the sf0.1 near-dup graph
-    (measured; wall/CPU neutral locally — the win is scheduling
-    volume, which grows with rounds × exchanges at scale). Skew note:
-    the loop's aggregations partial-combine map-side and the
-    sym⋈labels join is 1:1 per edge, so AQE's skew-join splitting has
-    nothing to do here. Both conf keys are restored on exit; the
-    frames the loop RETURNS are checkpointed RDDs, so downstream
-    consumers replan under the session's normal adaptive config."""
-    import os
-
-    rows_per_part = int(
-        os.environ.get(_CC_ROWS_PER_PARTITION_ENV, _CC_ROWS_PER_PARTITION_DEFAULT)
-    )
-    conf = spark.conf
-    old_aqe = conf.get("spark.sql.adaptive.enabled")
-    old_parts = conf.get("spark.sql.shuffle.partitions")
-    loop_parts = max(1, min(int(old_parts), -(-n_rows // rows_per_part)))
-    try:
-        conf.set("spark.sql.adaptive.enabled", "false")
-        conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-        yield
-    finally:
-        conf.set("spark.sql.adaptive.enabled", old_aqe)
-        conf.set("spark.sql.shuffle.partitions", old_parts)
 
 
 def connected_components(
@@ -86,8 +39,7 @@ def connected_components(
     ``localCheckpoint`` and the changed-label count is aggregated over
     it — that single action both materializes the checkpoint and
     returns the convergence scalar (previously checkpoint + label-sum
-    were two separate jobs per round). Rounds are planned under
-    `_iterative_loop_conf` (round 14). Raises if ``max_iter`` rounds
+    were two separate jobs per round). Raises if ``max_iter`` rounds
     aren't enough, rather than silently returning half-merged clusters.
 
     Symmetrization is ONE explode over the edge list, not a
@@ -109,30 +61,28 @@ def connected_components(
         .distinct()
         .localCheckpoint()
     )
-    n_edges = sym.count()  # cheap: counts the materialized checkpoint
     labels = sym.select(F.col("s").alias("v")).distinct().withColumn("lbl", F.col("v"))
 
-    with _iterative_loop_conf(edges.sparkSession, n_edges):
-        for _ in range(max_iter):
-            msgs = sym.join(labels, sym.s == labels.v).select(
-                F.col("d").alias("v"), F.col("lbl"), F.lit(None).cast("long").alias("old")
-            )
-            mine = labels.select("v", "lbl", F.col("lbl").alias("old"))
-            # min(old) recovers each vertex's previous label (msgs carry
-            # null old); lbl < old marks a change — no second join needed.
-            labels = (
-                mine.unionByName(msgs)
-                .groupBy("v")
-                .agg(F.min("lbl").alias("lbl"), F.min("old").alias("old"))
-                .withColumn("chg", (F.col("lbl") < F.col("old")).cast("long"))
-                .localCheckpoint(eager=False)
-            )
-            # sum() over an empty label table is NULL — an empty edge set
-            # is already converged, not a 25-round timeout
-            n_changed = labels.agg(F.sum("chg")).collect()[0][0] or 0
-            labels = labels.select("v", "lbl")
-            if n_changed == 0:
-                return labels.select("v", F.col("lbl").alias("component"))
+    for _ in range(max_iter):
+        msgs = sym.join(labels, sym.s == labels.v).select(
+            F.col("d").alias("v"), F.col("lbl"), F.lit(None).cast("long").alias("old")
+        )
+        mine = labels.select("v", "lbl", F.col("lbl").alias("old"))
+        # min(old) recovers each vertex's previous label (msgs carry
+        # null old); lbl < old marks a change — no second join needed.
+        labels = (
+            mine.unionByName(msgs)
+            .groupBy("v")
+            .agg(F.min("lbl").alias("lbl"), F.min("old").alias("old"))
+            .withColumn("chg", (F.col("lbl") < F.col("old")).cast("long"))
+            .localCheckpoint(eager=False)
+        )
+        # sum() over an empty label table is NULL — an empty edge set
+        # is already converged, not a 25-round timeout
+        n_changed = labels.agg(F.sum("chg")).collect()[0][0] or 0
+        labels = labels.select("v", "lbl")
+        if n_changed == 0:
+            return labels.select("v", F.col("lbl").alias("component"))
     raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
 
 
@@ -174,13 +124,7 @@ def connected_components_star(
         .distinct()
         .localCheckpoint()
     )
-    n_edges = e.count()  # cheap: counts the materialized checkpoint
     prev_sig = None
-    with _iterative_loop_conf(edges.sparkSession, n_edges):
-        return _star_loop(verts, e, max_iter, prev_sig)
-
-
-def _star_loop(verts: DataFrame, e: DataFrame, max_iter: int, prev_sig) -> DataFrame:
     for _ in range(max_iter):
         # large-star: m(u) = min(N(u) ∪ {u}); hang each v > u onto m(u)
         sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))

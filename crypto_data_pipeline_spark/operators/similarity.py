@@ -905,7 +905,7 @@ def ivf_config_check(
 
 def write_ivf_index(
     index: IvfIndex, path: str, check_config: bool = True, nprobe: int = 4,
-    config_check: dict | None = None, source_fingerprint: dict | None = None,
+    config_check: dict | None = None,
 ) -> None:
     """Persist the index at rest: the assigned corpus partitioned BY
     CELL (hive layout — a probe of nprobe cells reads nprobe
@@ -932,43 +932,23 @@ def write_ivf_index(
         params["config_check"] = config_check
     elif check_config:
         params["config_check"] = ivf_config_check(index, nprobe=nprobe)
-    if source_fingerprint is not None:
-        # round 14 (VERDICT r12 next #6 carry-over): the corpus identity
-        # the index was built from, re-checked at load — see
-        # observability.source_fingerprint
-        params["source_fingerprint"] = source_fingerprint
     with open(os.path.join(path, "centers.json"), "w") as f:
         json.dump(params, f)
 
 
-def read_ivf_index(spark, path: str, expect_fingerprint: dict | None = None) -> IvfIndex:
+def read_ivf_index(spark, path: str) -> IvfIndex:
     """Load a write_ivf_index layout. The assigned frame is a lazy
     partitioned scan — cell-equality predicates prune at the directory
     level, so a probe touches nprobe partitions, not the corpus. A
     sidecar carrying a ``config_check`` warn verdict re-warns here —
     the serve side sees exactly what the build side saw, without
-    re-scanning the corpus (same contract as `read_lsh_index`).
-
-    ``expect_fingerprint`` (round 14): the CURRENT corpus fingerprint
-    (observability.source_fingerprint) — when both it and the sidecar's
-    recorded fingerprint exist and differ, the load RAISES instead of
-    serving an index built from a corpus state that no longer exists
-    (the staleness class VERDICT r12 flagged on every at-rest serve
-    path)."""
+    re-scanning the corpus (same contract as `read_lsh_index`)."""
     import json
     import os
     import warnings
 
     with open(os.path.join(path, "centers.json")) as f:
         meta = json.load(f)
-    recorded = meta.get("source_fingerprint")
-    if recorded is not None and expect_fingerprint is not None \
-            and recorded != expect_fingerprint:
-        raise ValueError(
-            f"IVF index at {path} is STALE: built from corpus state "
-            f"{recorded}, current corpus is {expect_fingerprint} — "
-            f"rebuild the index instead of serving it"
-        )
     check = meta.get("config_check")
     if check and check.get("verdict") == "warn":
         warnings.warn(
@@ -1271,7 +1251,6 @@ def build_lsh_keys(
 
 def write_lsh_index(
     index: LshIndex, path: str, check_config: bool = True,
-    source_fingerprint: dict | None = None,
 ) -> None:
     """Persist the LSH index at rest: keys partitioned BY TABLE (one
     directory per hash table — a probe reads its colliding buckets via
@@ -1301,36 +1280,22 @@ def write_lsh_index(
     }
     if check_config:
         params["config_check"] = lsh_config_check(index)
-    if source_fingerprint is not None:
-        # round 14: corpus identity at build time, re-checked at load —
-        # same staleness guard as the IVF sidecar
-        params["source_fingerprint"] = source_fingerprint
     with open(os.path.join(path, "params.json"), "w") as f:
         json.dump(params, f)
 
 
-def read_lsh_index(spark, path: str, expect_fingerprint: dict | None = None) -> LshIndex:
+def read_lsh_index(spark, path: str) -> LshIndex:
     """Load a write_lsh_index layout; the keys come back as a lazy
     partitioned scan (table-directory pruning + bucket min/max
     pruning), params from the sidecar. A sidecar carrying a
     ``config_check`` warn verdict re-warns here — the serve side sees
-    exactly what the build side saw, without re-scanning the keys.
-    ``expect_fingerprint`` raises on a stale index exactly like
-    `read_ivf_index`."""
+    exactly what the build side saw, without re-scanning the keys."""
     import json
     import os
     import warnings
 
     with open(os.path.join(path, "params.json")) as f:
         p = json.load(f)
-    recorded = p.get("source_fingerprint")
-    if recorded is not None and expect_fingerprint is not None \
-            and recorded != expect_fingerprint:
-        raise ValueError(
-            f"LSH index at {path} is STALE: built from corpus state "
-            f"{recorded}, current corpus is {expect_fingerprint} — "
-            f"rebuild the index instead of serving it"
-        )
     check = p.get("config_check")
     if check and check.get("verdict") == "warn":
         warnings.warn(

@@ -133,8 +133,8 @@ DECLARED_DRIVER_SCALARS = {
         "same 1-row counter frame as check (shared helper)",
     "operators/graph.py:connected_components":
         "1 scalar changed-labels count per iteration (convergence test)",
-    "operators/graph.py:_star_loop":  # the loop body of connected_components_star
-        "same per-iteration convergence scalar",
+    "operators/graph.py:connected_components_star":
+        "1 row (edge count, xxhash64 set signature) per iteration (convergence test)",
     "operators/similarity.py:brute_force_topk_arrow":
         "contractual query batch (10 vectors) for the broadcast side",
     "operators/similarity.py:build_fixed_ivf_index":

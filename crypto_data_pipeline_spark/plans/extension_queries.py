@@ -403,15 +403,10 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = docs.where(F.col("doc_id") % 10 != 0)
     delivery = docs.where(F.col("doc_id") % 10 == 0)
 
-    # sig_store: the store corpus's MinHash signatures at rest, plus a fingerprint sidecar
+    # sig_store: the store corpus's MinHash signatures at rest
     def build(store_dir: str) -> DataFrame:
-        import json
-
         path = os.path.join(store_dir, "sigs")
         dedup.portable_minhash_signatures(store).write.parquet(path)
-        with open(os.path.join(store_dir, "meta.json"), "w") as f:
-            json.dump({"source_fingerprint": serve_store.fingerprint(
-                sf_dir, ("documents",))}, f)
         return spark.read.parquet(path)
 
     sigs_store = serve_store.serve(spark, sf_dir, "sig_store", ("documents",), build)
@@ -1482,21 +1477,18 @@ def _lm_model(spark: SparkSession, sf_dir: str, docs: DataFrame) -> tuple:
 
 def _ivf_index_at_rest(
     spark: SparkSession, index_dir: str, built: "similarity.IvfIndex",
-    fp: dict | None, nprobe: int, config_check: dict | None = None,
+    nprobe: int, config_check: dict | None = None,
 ) -> "similarity.IvfIndex":
     """Land a freshly built IVF index at ``index_dir`` through
     `write_ivf_index` (which records the `ivf_config_check` verdict
-    and the corpus fingerprint ``fp`` in the sidecar), drop the build's
+    in the sidecar), drop the build's
     in-memory persist, and return the RELOADED cell-partitioned scan.
     Probes against it read nprobe cell directories — the production
     at-rest layout — and parquet-backed frames give the probe joins
     measured statistics."""
-    similarity.write_ivf_index(
-        built, index_dir, nprobe=nprobe, config_check=config_check,
-        source_fingerprint=fp,
-    )
+    similarity.write_ivf_index(built, index_dir, nprobe=nprobe, config_check=config_check)
     built.assigned.unpersist()
-    return similarity.read_ivf_index(spark, index_dir, expect_fingerprint=fp)
+    return similarity.read_ivf_index(spark, index_dir)
 
 
 def _ivf_recommended_index(
@@ -1537,8 +1529,7 @@ def _ivf_recommended_index(
             },
         )
         index = _ivf_index_at_rest(
-            spark, index_dir, built, serve_store.fingerprint(sf_dir, ("embeddings",)),
-            nprobe=serve["nprobe"], config_check=check,
+            spark, index_dir, built, nprobe=serve["nprobe"], config_check=check
         )
         return index, serve["nprobe"], cells
 
@@ -1555,7 +1546,7 @@ def _ivf_fixed_index(spark: SparkSession, sf_dir: str) -> "similarity.IvfIndex":
         spark, sf_dir, "ivf_fixed", ("embeddings",),
         lambda index_dir: _ivf_index_at_rest(
             spark, index_dir, similarity.build_fixed_ivf_index(embs, list(range(16))),
-            serve_store.fingerprint(sf_dir, ("embeddings",)), nprobe=4,
+            nprobe=4,
         ),
     )
 

@@ -58,7 +58,7 @@ _LOCK = threading.RLock()
 
 def fingerprint(sf_dir: str, sources: tuple[str, ...]) -> dict | None:
     """The fingerprint the store checks for tables ``sources`` of
-    ``sf_dir``; at-rest sidecars record the same value."""
+    ``sf_dir``."""
     return source_fingerprint([f"{sf_dir}/{t}.parquet" for t in sources])
 
 

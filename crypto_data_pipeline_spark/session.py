@@ -58,16 +58,14 @@ def get_spark(
         # per unit of pure driver time). Generated classes are tens of
         # KB; 1000 entries is a few tens of MB of driver heap. Same
         # knob applies unchanged on a cluster (driver-side cache).
-        .config("spark.sql.codegen.cache.maxEntries",
-                os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "1000"))
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # round 13: stale broadcasts/accumulators are only reclaimed
         # when a driver GC runs; long many-query sessions on a big
         # driver heap can go the default 30 min without one, letting
         # executor-side broadcast blocks pile up (observed as late-run
         # slowdown across a 100+-execution bench session). 5 min keeps
         # the cleaner live at negligible cost.
-        .config("spark.cleaner.periodicGC.interval",
-                os.environ.get("SPARK_GRAFT_PERIODIC_GC", "5min"))
+        .config("spark.cleaner.periodicGC.interval", "5min")
         # local[_] has no external shuffle service; keep shuffle spill local
         .config("spark.local.dir", os.environ.get("SPARK_LOCAL_DIRS", "/tmp"))
     )

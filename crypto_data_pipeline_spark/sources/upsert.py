@@ -112,12 +112,13 @@ def upsert_parquet_incremental(
         existing_touched.unionByName(new_rows), keys, list(order_by)
     ).localCheckpoint()  # materialize before overwriting what we read
 
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+    (
+        merged.write.mode("overwrite")
+        # the write option overrides the session conf, for this write only
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_cols)
+        .parquet(path)
+    )
     return spark.read.parquet(path)
 
 

@@ -21,3 +21,19 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture
+def conf_sets(monkeypatch) -> list[tuple]:
+    """Every ``spark.conf.set(key, value)`` made while the test runs."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    calls: list[tuple] = []
+    real = RuntimeConfig.set
+
+    def spy(self, key, value):
+        calls.append((key, value))
+        return real(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy)
+    return calls

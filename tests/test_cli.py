@@ -292,3 +292,28 @@ def test_run_pipeline_empty_tree_fails_loud(capsys, tmp_path):
                    "--out", str(tmp_path / "out")])
     assert rc == 2
     assert "no bronze documents" in capsys.readouterr().err
+
+
+def test_profile_prints_cold_and_steady_records(capsys, tmp_path, sf_dir):
+    """`profile` prints one JSON line per query with a cold and a
+    steady record; --out writes PROFILE.json and the steady plan's
+    formatted explain."""
+    import json
+
+    out = tmp_path / "prof"
+    argv = ["profile", "--sf-dir", sf_dir, "--out", str(out), "monthly_avg_price"]
+    assert main(argv) == 0
+    [line] = [ln for ln in capsys.readouterr().out.splitlines() if ln.startswith("{")]
+    rec = json.loads(line)
+    assert rec["query"] == "monthly_avg_price"
+    assert rec["steady"]["build_jobs"] == 0 and rec["steady"]["n_jobs"] >= 1
+    assert rec["cold"]["scan_output_rows"] == rec["steady"]["scan_output_rows"] > 0
+    assert json.loads((out / "PROFILE.json").read_text())["monthly_avg_price"] == {
+        "cold": rec["cold"], "steady": rec["steady"],
+    }
+    assert "Physical Plan" in (out / "monthly_avg_price.txt").read_text()
+
+
+def test_profile_unknown_name_fails_with_catalog(capsys, sf_dir):
+    assert main(["profile", "--sf-dir", sf_dir, "monthly_avg_price", "nope_not_real"]) == 2
+    assert "unknown query 'nope_not_real'" in capsys.readouterr().err

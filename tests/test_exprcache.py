@@ -83,14 +83,6 @@ def test_differing_builder_constants_never_share(spark):
     ]
 
 
-def test_opt_out_env_builds_fresh(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_NO_EXPR_MEMO", "1")
-    key = _fresh_key("optout")
-    a = memo_expr(key, lambda: F.lit(1))
-    b = memo_expr(key, lambda: F.lit(1))
-    assert a is not b
-
-
 def test_dedup_call_sites_split_on_params(spark):
     """End-to-end over a real call site: two lsh_band_buckets calls
     with different (num_hashes, bands) in one session must produce

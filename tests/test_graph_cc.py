@@ -37,6 +37,17 @@ def test_nonconvergence_raises(spark):
         _cc(spark, [(i, i + 1) for i in range(30)], max_iter=2)
 
 
+def test_cc_loops_leave_session_conf_alone(spark, conf_sets):
+    """Neither loop sets session conf, which a query planned on another
+    thread of the same session would see (a silver built meanwhile
+    reads its bucket count from ``spark.sql.shuffle.partitions``)."""
+    pairs = [(i, i + 1) for i in range(5)] + [(10, 11)]
+    want = {**{i: 0 for i in range(6)}, 10: 10, 11: 10}
+    assert _cc(spark, pairs) == want
+    assert _star(spark, pairs) == want
+    assert conf_sets == []
+
+
 def _star(spark, pairs, **kw):
     from crypto_data_pipeline_spark.operators.graph import connected_components_star
 

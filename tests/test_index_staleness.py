@@ -1,17 +1,12 @@
-"""At-rest index staleness guard: every index/store sidecar records
-the corpus fingerprint it was built from and loads re-check it; the
-serve store's half is in test_serve_store.py."""
+"""The corpus fingerprint the serve store checks on every hit; that a
+changed fingerprint rebuilds each entry is in test_serve_store.py."""
 
 from __future__ import annotations
 
 import os
 import time
 
-import pytest
-from pyspark.sql import functions as F
-
 from crypto_data_pipeline_spark.observability import source_fingerprint
-from crypto_data_pipeline_spark.operators import similarity
 
 
 def _write_corpus(spark, path: str, n: int = 24, dim: int = 8, shift: float = 0.0):
@@ -66,42 +61,3 @@ def test_source_fingerprint_is_off_for_remote_paths(caplog):
         assert source_fingerprint(["s3a://bucket/documents.parquet"]) is None
         assert source_fingerprint(["local.parquet", "hdfs://nn/x.parquet"]) is None
     assert "not on the local filesystem" in caplog.text
-
-
-def test_ivf_read_raises_on_stale_fingerprint(spark, tmp_path):
-    corpus = str(tmp_path / "corpus")
-    _write_corpus(spark, corpus)
-    embs = spark.read.parquet(corpus)
-    fp = source_fingerprint([corpus])
-    index = similarity.build_fixed_ivf_index(embs, list(range(16)))
-    at_rest = str(tmp_path / "ivf")
-    similarity.write_ivf_index(
-        index, at_rest, check_config=False, source_fingerprint=fp
-    )
-    index.assigned.unpersist()
-    # matching fingerprint loads; missing expectation loads (opt-in check)
-    assert similarity.read_ivf_index(spark, at_rest, expect_fingerprint=fp)
-    assert similarity.read_ivf_index(spark, at_rest)
-    time.sleep(0.05)
-    _write_corpus(spark, corpus, shift=2.0)
-    fp_new = source_fingerprint([corpus])
-    with pytest.raises(ValueError, match="STALE"):
-        similarity.read_ivf_index(spark, at_rest, expect_fingerprint=fp_new)
-
-
-def test_lsh_read_raises_on_stale_fingerprint(spark, tmp_path):
-    corpus = str(tmp_path / "corpus")
-    _write_corpus(spark, corpus)
-    embs = spark.read.parquet(corpus)
-    fp = source_fingerprint([corpus])
-    index = similarity.build_lsh_keys(embs)
-    at_rest = str(tmp_path / "lsh")
-    similarity.write_lsh_index(
-        index, at_rest, check_config=False, source_fingerprint=fp
-    )
-    assert similarity.read_lsh_index(spark, at_rest, expect_fingerprint=fp)
-    time.sleep(0.05)
-    _write_corpus(spark, corpus, shift=2.0)
-    fp_new = source_fingerprint([corpus])
-    with pytest.raises(ValueError, match="STALE"):
-        similarity.read_lsh_index(spark, at_rest, expect_fingerprint=fp_new)

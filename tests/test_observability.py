@@ -211,3 +211,52 @@ def test_host_steal_seconds_nonnegative():
     s1 = host_steal_seconds()
     s2 = host_steal_seconds()
     assert s1 >= 0.0 and s2 >= s1
+
+
+def test_profile_call_record_and_job_group(spark):
+    """One profile_call record holds every field of a committed profile
+    table row plus ``build_jobs``, reads the groupBy's shuffle, and
+    owns its job group: a later action lands in no profiled group."""
+    import json
+    import os
+
+    from crypto_data_pipeline_spark.observability import profile_call
+
+    table = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                         "plans", "r14", "PROFILE_after.json")
+    with open(table) as f:
+        row = next(iter(json.load(f).values()))
+
+    def grouped(spark, _sf_dir):
+        return spark.range(100000).withColumn("k", F.col("id") % 100).groupBy("k").count()
+
+    rec = profile_call(spark, grouped, None)
+    assert set(row) | {"build_jobs"} <= set(rec)
+    assert rec["shuffle_bytes_written"] > 0 and rec["n_exchanges"] == 1
+    assert rec["n_jobs"] >= 1 and rec["build_jobs"] == 0
+    assert rec["wall"] >= rec["py_build"] >= 0.0
+
+    spark.range(10).count()
+    spark._jsparkSession.sparkContext().listenerBus().waitUntilEmpty()
+    tracker = spark.sparkContext.statusTracker()
+    assert len(tracker.getJobIdsForGroup(rec["job_group"])) == rec["n_jobs"]
+
+
+def test_profile_call_counts_build_jobs(spark, sf_dir, tmp_path):
+    """The first pricing_summary call on a corpus infers the lineitem
+    schema in a build job; a repeat call is served the schema and
+    launches none."""
+    import shutil
+
+    from crypto_data_pipeline_spark import serve_store
+    from crypto_data_pipeline_spark.observability import profile_call
+    from crypto_data_pipeline_spark.plans.registry import load_with_extras
+
+    sf = str(tmp_path)
+    shutil.copy(f"{sf_dir}/lineitem.parquet", sf)
+    fn = load_with_extras()["pricing_summary"].fn
+    try:
+        assert profile_call(spark, fn, sf)["build_jobs"] >= 1
+        assert profile_call(spark, fn, sf)["build_jobs"] == 0
+    finally:
+        serve_store.clear()

@@ -18,6 +18,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from crypto_data_pipeline_spark import serve_store
+from crypto_data_pipeline_spark.observability import profile_call
 from crypto_data_pipeline_spark.plans.registry import load_with_extras
 
 # entry name -> (its source table, a query that serves from it)
@@ -200,20 +201,6 @@ def test_entry_rebuilds_on_rewritten_source(spark, sf_dir, tmp_path, entry):
     serve_store.clear()
 
 
-def _plan_jobs(spark, fn) -> int:
-    """Spark jobs launched while ``fn`` runs, counted in a job group of
-    its own."""
-    sc = spark.sparkContext
-    group = f"plan-jobs-{time.monotonic_ns()}"
-    sc.setJobGroup(group, "jobs launched while building a plan")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    spark._jsparkSession.sparkContext().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize(
     "query", ["pricing_summary", "revenue_by_nation", "sessionization", "drop_recovery"]
 )
@@ -222,7 +209,7 @@ def test_repeat_table_loads_launch_no_job(spark, sf_dir, query):
     Spark job: each table's schema is served, not inferred again."""
     fn = SPECS[query].fn
     fn(spark, sf_dir)
-    assert _plan_jobs(spark, lambda: fn(spark, sf_dir)) == 0
+    assert profile_call(spark, fn, sf_dir)["build_jobs"] == 0
 
 
 def test_load_table_sees_rewritten_schema(spark, sf_dir, tmp_path):

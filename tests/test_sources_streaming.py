@@ -502,9 +502,10 @@ def test_http_datasource_partial_failure_yields_null_rows(spark):
     assert row.coin_id == "bitcoin" and row.price_usd is None
 
 
-def test_incremental_upsert_rewrites_only_touched_partitions(spark, tmp_path):
+def test_incremental_upsert_rewrites_only_touched_partitions(spark, tmp_path, conf_sets):
     """Dynamic-partition-overwrite upsert: a delta touching one month
-    must leave every other month's files byte-identical on disk."""
+    must leave every other month's files byte-identical on disk, and
+    the upsert sets no session conf."""
     import os
 
     from crypto_data_pipeline_spark.sources.upsert import upsert_parquet_incremental
@@ -534,6 +535,10 @@ def test_incremental_upsert_rewrites_only_touched_partitions(spark, tmp_path):
     m2 = {r.id: r.v for r in out.where("month = 2").collect()}
     assert m2 == {1: 99.0, 2: 4.0, 7: 7.0}
     assert out.count() == 7
+    assert sorted((r.id, r.month, r.v) for r in out.where("month != 2").collect()) == [
+        (1, 1, 1.0), (1, 3, 3.0), (2, 1, 2.0), (2, 3, 6.0)
+    ]
+    assert conf_sets == []
 
 
 def test_streaming_sliding_aggregate_matches_batch(spark, sf_dir, tmp_path):
