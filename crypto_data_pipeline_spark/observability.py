@@ -202,6 +202,11 @@ def profile_call(spark, fn, sf_dir: str) -> dict:
     * ``cpu_s``: process-tree CPU seconds over the call;
     * ``n_jobs``: Spark jobs the call launched; ``build_jobs``: those
       launched while ``fn`` ran;
+    * ``py4j_calls``: py4j round trips while ``fn`` ran (the Python
+      side of plan construction), counted on the gateway client's
+      ``send_command``;
+    * ``plan_chars``: the length of the executed plan's formatted
+      explain, which Spark renders again at every AQE stage;
     * the executed plan's `plan_runtime_metrics`;
     * ``job_group``: the job group of the call, used by no other call.
 
@@ -221,10 +226,21 @@ def profile_call(spark, fn, sf_dir: str) -> dict:
         for k in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
     }
     sc.setJobGroup(group, f"profile {getattr(fn, '__name__', 'call')} on {sf_dir}")
+    client = sc._gateway._gateway_client
+    send, calls = client.send_command, [0]
+
+    def counted(*args, **kwargs):
+        calls[0] += 1
+        return send(*args, **kwargs)
+
     try:
         cpu0 = proc_tree_cpu_seconds()
         t0 = time.perf_counter()
-        df = fn(spark, sf_dir)
+        client.send_command = counted
+        try:
+            df = fn(spark, sf_dir)
+        finally:
+            del client.send_command
         py_build = time.perf_counter() - t0
         bus.waitUntilEmpty()
         build_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
@@ -236,12 +252,15 @@ def profile_call(spark, fn, sf_dir: str) -> dict:
         for k, v in saved.items():
             sc.setLocalProperty(k, v)
     bus.waitUntilEmpty()
+    formatted = sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     return {
         "wall": round(wall, 3),
         "py_build": round(py_build, 3),
         "cpu_s": round(cpu, 2),
         "n_jobs": len(sc.statusTracker().getJobIdsForGroup(group)),
         "build_jobs": build_jobs,
+        "py4j_calls": calls[0],
+        "plan_chars": len(df._jdf.queryExecution().explainString(formatted)),
         **plan_runtime_metrics(df),
         "job_group": group,
     }

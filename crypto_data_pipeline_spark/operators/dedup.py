@@ -558,20 +558,17 @@ def ngram_jaccard_pairs(
     """
     from crypto_data_pipeline_spark.sources.tables import fan_out
 
-    raw_sets = (
+    exploded = (
         fan_out(df)
         .select(F.col(id_col).alias("id"), tokens(text).alias("_tk"))
-        .select("id", word_shingles(k=k, toks=F.col("_tk")).alias("sh0"))
+        .select("id", F.explode(word_shingles(k=k, toks=F.col("_tk"))).alias("s"))
     )
-    # shingle sets feed the frequency pass AND the rank join — persist
-    # so the (string-heavy) shingling expression evaluates once
-    raw_sets = raw_sets.persist()
-    exploded = raw_sets.select("id", F.explode("sh0").alias("s"))
-    freq = exploded.groupBy("s").agg(F.count(F.lit(1)).alias("f"))
     # per doc: shingles sorted by (global freq asc, shingle) — structs
-    # compare field-wise identically in Spark and DuckDB
+    # compare field-wise identically in Spark and DuckDB. The frequency
+    # is a window count over the shingle, so the (string-heavy)
+    # shingling evaluates once with nothing persisted.
     sets = (
-        exploded.join(freq, "s")
+        exploded.withColumn("f", F.count(F.lit(1)).over(Window.partitionBy("s")))
         .groupBy("id")
         .agg(F.array_sort(F.collect_list(F.struct("f", "s"))).alias("fs"))
         .select("id", F.transform("fs", lambda x: x["s"]).alias("sh"))
@@ -1157,24 +1154,29 @@ def bloom_prefilter_flags(
     ``bloom_pass`` — whether ALL k bloom positions of the row's content
     are set in the store's bloom (Bloom 1970: no false negatives, so
     ``bloom_pass = false`` PROVES novelty; ``true`` only licenses the
-    exact check). The bit set is the broadcast side of a left join;
-    a row passes iff every exploded position finds its bit. Pass a
-    maintained ``bits`` frame (one ``bit`` long column) to skip the
-    bootstrap store scan — the incremental steady state."""
+    exact check). A row passes iff each of its k positions finds its
+    bit in the broadcast bit set. Pass a maintained ``bits`` frame
+    (distinct positions in one ``bit`` long column, as `bloom_bitset`
+    returns) to skip the bootstrap store scan — the incremental steady
+    state."""
     if bits is None:
         bits = bloom_bitset(store, m_bits=m_bits, k=k, text=text)
-    staged = (
+    # one scan of the batch and no shuffle: position j of every row
+    # probes its own broadcast left join (the k joins reuse one
+    # broadcast of the distinct bits)
+    flagged = (
         batch.withColumn("content_hash", F.md5(normalized(text)))
         .where(F.col("content_hash").isNotNull())
-        .withColumn("_pos", _bloom_positions(text, m_bits, k))
+        .withColumns({"_pos": _bloom_positions(text, m_bits, k), "bloom_pass": F.lit(True)})
     )
-    hits = (
-        staged.select(id_col, F.explode("_pos").alias("bit"))
-        .join(F.broadcast(bits.withColumn("_set", F.lit(1))), "bit", "left")
-        .groupBy(id_col)
-        .agg((F.count(F.lit(1)) == F.count("_set")).alias("bloom_pass"))
-    )
-    return staged.drop("_pos").join(hits, id_col)
+    for j in range(k):
+        b = bits.alias("_bits")
+        flagged = (
+            flagged.join(F.broadcast(b), F.col("_pos")[j] == F.col("_bits.bit"), "left")
+            .withColumn("bloom_pass", F.col("bloom_pass") & F.col("_bits.bit").isNotNull())
+            .drop(F.col("_bits.bit"))
+        )
+    return flagged.drop("_pos")
 
 
 def bloom_prefilter_ingest(
@@ -1199,17 +1201,31 @@ def bloom_prefilter_ingest(
     store-scan semi join that plain incremental_ingest_dedup pays for
     the whole batch. Store: zero Exchange ever; batch: one window
     shuffle, same as the unaccelerated path."""
-    flagged = bloom_prefilter_flags(
-        store, batch, m_bits=m_bits, k=k, id_col=id_col, text=text, bits=bits
+    return bloom_admit(
+        store,
+        bloom_prefilter_flags(
+            store, batch, m_bits=m_bits, k=k, id_col=id_col, text=text, bits=bits
+        ),
+        id_col=id_col,
+        text=text,
     )
+
+
+def bloom_admit(
+    store: DataFrame, flagged: DataFrame, id_col: str = "doc_id", text: str = "text"
+) -> DataFrame:
+    """The admitted rows of a `bloom_prefilter_flags` frame: the
+    bloom-negative rows, plus the bloom-positive rows whose content
+    hash the store does not hold (store scan, broadcast semi join),
+    first per content hash by ``id_col``."""
     definite_novel = flagged.where(~F.col("bloom_pass"))
     maybe = flagged.where(F.col("bloom_pass"))
-    maybe_hashes = maybe.select("content_hash").distinct()
+    # semi and anti joins are set operations: neither broadcast side
+    # needs a distinct (and an aggregation shuffle) first
     known = (
         store.withColumn("content_hash", F.md5(normalized(text)))
-        .join(F.broadcast(maybe_hashes), "content_hash", "left_semi")
+        .join(F.broadcast(maybe.select("content_hash")), "content_hash", "left_semi")
         .select("content_hash")
-        .distinct()
     )
     admitted = definite_novel.unionByName(
         maybe.join(F.broadcast(known), "content_hash", "left_anti")

@@ -25,6 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from crypto_data_pipeline_spark.sources.tables import release_checkpoint
+
 
 def connected_components(
     edges: DataFrame, src: str, dst: str, max_iter: int = 25
@@ -38,15 +40,15 @@ def connected_components(
     exactly ONE job: the new label table is marked for a lazy
     ``localCheckpoint`` and the changed-label count is aggregated over
     it — that single action both materializes the checkpoint and
-    returns the convergence scalar (previously checkpoint + label-sum
-    were two separate jobs per round). Raises if ``max_iter`` rounds
+    returns the convergence scalar. Each superseded label checkpoint
+    and, at convergence, the edge checkpoint are released at once; the
+    result reads only the final labels. Raises if ``max_iter`` rounds
     aren't enough, rather than silently returning half-merged clusters.
 
     Symmetrization is ONE explode over the edge list, not a
-    two-branch union (round 14, guide §2.4 "don't compute things
-    twice"): Catalyst does not share subtrees across union branches,
-    so `select(s,d) UNION select(d,s)` evaluated the caller's ENTIRE
-    upstream pair-generation pipeline twice per call — for
+    two-branch union: Catalyst does not share subtrees across union
+    branches, so `select(s,d) UNION select(d,s)` would evaluate the
+    caller's ENTIRE upstream pair-generation pipeline twice per call — for
     dedup_clusters that pipeline (PPJoin prefix-filter candidate
     generation + exact Jaccard verification) is ~95% of the query's
     CPU. The explode form scans the edge DAG once.
@@ -63,6 +65,7 @@ def connected_components(
     )
     labels = sym.select(F.col("s").alias("v")).distinct().withColumn("lbl", F.col("v"))
 
+    prev = None
     for _ in range(max_iter):
         msgs = sym.join(labels, sym.s == labels.v).select(
             F.col("d").alias("v"), F.col("lbl"), F.lit(None).cast("long").alias("old")
@@ -70,7 +73,7 @@ def connected_components(
         mine = labels.select("v", "lbl", F.col("lbl").alias("old"))
         # min(old) recovers each vertex's previous label (msgs carry
         # null old); lbl < old marks a change — no second join needed.
-        labels = (
+        cp = (
             mine.unionByName(msgs)
             .groupBy("v")
             .agg(F.min("lbl").alias("lbl"), F.min("old").alias("old"))
@@ -79,9 +82,12 @@ def connected_components(
         )
         # sum() over an empty label table is NULL — an empty edge set
         # is already converged, not a 25-round timeout
-        n_changed = labels.agg(F.sum("chg")).collect()[0][0] or 0
-        labels = labels.select("v", "lbl")
+        n_changed = cp.agg(F.sum("chg")).collect()[0][0] or 0
+        if prev is not None:  # the new labels are materialized
+            release_checkpoint(prev)
+        prev, labels = cp, cp.select("v", "lbl")
         if n_changed == 0:
+            release_checkpoint(sym)
             return labels.select("v", F.col("lbl").alias("component"))
     raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
 

@@ -31,7 +31,7 @@ Distributed shape at 100 TB:
   the grid (`bigram_grid`); map-side partial aggregation collapses
   each task to model-sized rows. Context counts, vocabulary sizes and
   the Kneser-Ney continuation counts derive from the model-sized grid
-  (`bigram_stats`: one grouping-sets pass plus one aggregation), never
+  (`bigram_cont`, `bigram_ctx`: grid-sized aggregations), never
   from the corpus, and the add-one model is a projection of the KN
   statistics, so one fit serves both families. The grid is NOT
   fixed-size: distinct bigrams grow with corpus vocabulary (Heaps' law
@@ -43,82 +43,43 @@ Distributed shape at 100 TB:
   already handles unseen pairs; context counts and vocabulary sizes
   are derived from the FULL grid before pruning, so the probability
   denominators stay exact.
-- Score: one corpus explode, the model joined in; the join STRATEGY is
-  AQE's call, not a hint — the |langs|-row vocab frame is explicitly
-  broadcast, but grid/ctx carry no hint, so a pruned megabyte-scale
-  model broadcasts (measured, localCheckpoint gives AQE real sizes)
-  while an over-threshold model falls back to a shuffled join instead
-  of OOMing the driver. Then one doc-key aggregation and one
-  per-language ntile window over doc-sized rows. The corpus is never
-  shuffled except by its own keys.
+- Score: one corpus explode, the model joined in, one doc-key
+  aggregation (`lm_scores`). The add-one and Kneser-Ney scores come
+  out of the same join chain as two columns, and a doc that cannot
+  score keeps its sentinel row from the same scan (an outer explode),
+  so the bucket, report and RHO forms are an ntile or a projection
+  over one per-doc score table, with no union and no second corpus
+  scan. The join STRATEGY is AQE's call, not a hint — the
+  |langs|-row totals frame is explicitly broadcast, but grid/ctx/cont
+  carry no hint, so a pruned megabyte-scale model broadcasts
+  (measured: a model at rest gives AQE real sizes) while an
+  over-threshold model falls back to a shuffled join instead of
+  OOMing the driver. The bucket split is one per-language ntile
+  window over doc-sized rows. The corpus is never shuffled except by
+  its own keys.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from crypto_data_pipeline_spark.operators.text import tokens
 
 _BUCKETS = {1: "head", 2: "middle", 3: "tail"}
 
 
-def _unscored_docs(
-    docs: DataFrame,
-    ctx: DataFrame,
-    lang: str,
-    text: str,
-    doc_id: str,
-    trained: DataFrame | None = None,
-) -> DataFrame:
-    """Docs that CANNOT score, as sentinel rows: fewer than 2 tokens
-    (``coalesce(size, -1)`` — under ANSI, size(NULL text) is NULL, not
-    the -1 legacy mode returns; found in round-7 review), a NULL
-    language, or a language absent from the fitted model (broadcast
-    anti-join against the |langs|-row frame). Exactly the complement
-    of the scorable set, so the union in the callers is disjoint and
-    complete.
-
-    ``trained`` (round 13): a |langs|-row frame with a ``lang`` column
-    naming the model's languages. The scorers already aggregate ctx
-    down to exactly such a frame (vocab / totals); passing it here
-    makes this trained-language set the SAME subtree, so the plan pays
-    one ctx aggregation (reused exchange) instead of two per serve.
-    Default (None) derives it from ctx as before."""
-    if trained is not None:
-        trained = trained.select(
-            F.col("lang").alias("_tl"), F.lit(1).alias("_trained")
-        )
-    else:
-        trained = ctx.select(
-            F.col("lang").alias("_tl"), F.lit(1).alias("_trained")
-        ).distinct()
-    short = F.coalesce(F.size(tokens(text)), F.lit(-1)) < 2
-    return (
-        docs.join(F.broadcast(trained), F.col(lang) == F.col("_tl"), "left")
-        .where(short | F.col("_trained").isNull())
-        .select(
-            doc_id,
-            F.col(lang).alias("lang"),
-            F.lit(0).cast("long").alias("n_bigrams"),
-            F.lit(-1.0).alias("ppl"),
-            F.lit("unscored").alias("bucket"),
-        )
-    )
-
-
-def _bigrams(df: DataFrame, text: str) -> DataFrame:
+def _bigrams(df: DataFrame, text: str, outer: bool = False) -> DataFrame:
     """Adjacent-token bigram rows (w1, w2) appended to ``df``'s other
-    columns via one explode — no self-join, no positional window."""
+    columns via one explode — no self-join, no positional window.
+    ``outer`` keeps a row with NULL (w1, w2) for a doc without bigrams."""
+    explode = F.explode_outer if outer else F.explode
+    bg = F.expr(
+        "zip_with(slice(_t, 1, size(_t) - 1), slice(_t, 2, size(_t) - 1),"
+        " (a, b) -> struct(a AS w1, b AS w2))"
+    )
     return (
         df.withColumn("_t", tokens(text))
-        .withColumn(
-            "_bg",
-            F.expr(
-                "zip_with(slice(_t, 1, size(_t) - 1), slice(_t, 2, size(_t) - 1),"
-                " (a, b) -> struct(a AS w1, b AS w2))"
-            ),
-        )
-        .withColumn("_p", F.explode("_bg"))
+        .select(*df.columns, explode(bg).alias("_p"))
         .select(*df.columns, F.col("_p.w1").alias("w1"), F.col("_p.w2").alias("w2"))
     )
 
@@ -127,46 +88,38 @@ def bigram_grid(docs: DataFrame, lang: str = "lang", text: str = "text") -> Data
     """``grid (lang, w1, w2, c12)``: per-language bigram counts, the
     fit's one corpus-sized shuffle (map-side partial aggregation
     collapses each task to model-sized rows). Every other statistic of
-    both smoothing families derives from this grid (`bigram_stats`), so
-    a caller that lands the grid at rest fits either family without
-    touching the corpus again."""
+    both smoothing families derives from this grid (`bigram_cont`,
+    `bigram_ctx`), so a caller that lands the grid at rest fits either
+    family without touching the corpus again."""
     bg = _bigrams(docs.select(F.col(lang).alias("lang"), text), text).select(
         "lang", "w1", "w2"
     )
     return bg.groupBy("lang", "w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
 
 
-def bigram_stats(grid: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """The Kneser-Ney ``ctx (lang, w1, c1, n1p_w1, n1p_all, vsize)`` and
-    ``cont (lang, w2, n1p_w2)`` of an UNPRUNED grid, from grid-sized
-    work only: c(w1) = Σ_w2 c(w1,w2); grid rows are unique per
-    (lang, w1, w2), so a row count is a distinct-continuation count;
-    V = |distinct w2|. One grouping-sets pass yields the context and
-    per-language levels, one aggregation yields cont. The add-one ctx
-    is the projection ``ctx.select("lang", "w1", "c1", "vsize")``."""
-    stats = (
-        grid.groupingSets([["lang", "w1"], ["lang"]], "lang", "w1")
-        .agg(
-            F.sum("c12").alias("_c"),
-            F.count(F.lit(1)).alias("_rows"),
-            F.countDistinct("w2").alias("_nd"),
-            F.grouping("w1").alias("_g1"),
-        )
+def bigram_cont(grid: DataFrame) -> DataFrame:
+    """The Kneser-Ney ``cont (lang, w2, n1p_w2)`` of an UNPRUNED grid:
+    grid rows are unique per (lang, w1, w2), so a row count is a
+    distinct-context count."""
+    return grid.groupBy("lang", "w2").agg(F.count(F.lit(1)).alias("n1p_w2"))
+
+
+def bigram_ctx(grid: DataFrame, cont: DataFrame) -> DataFrame:
+    """The Kneser-Ney ``ctx (lang, w1, c1, n1p_w1, n1p_all, vsize)`` of
+    an UNPRUNED grid and its `bigram_cont`, from grid-sized work only:
+    c(w1) = Σ_w2 c(w1,w2), n1p_w1 = its grid rows; the per-language
+    totals come from cont — V = its rows, n1p_all = Σ n1p_w2 (the
+    grid's rows). Pass a cont landed at rest and the totals read it
+    instead of aggregating the grid again. The add-one ctx is the
+    projection ``ctx.select("lang", "w1", "c1", "vsize")``."""
+    totals = cont.groupBy("lang").agg(
+        F.sum("n1p_w2").alias("n1p_all"), F.count(F.lit(1)).alias("vsize")
     )
-    totals = stats.where(F.col("_g1") == 1).select(
-        "lang",
-        F.col("_rows").alias("n1p_all"),
-        F.col("_nd").alias("vsize"),
-    )
-    ctx = (
-        stats.where(F.col("_g1") == 0)
-        .select(
-            "lang", "w1", F.col("_c").alias("c1"), F.col("_rows").alias("n1p_w1")
-        )
+    return (
+        grid.groupBy("lang", "w1")
+        .agg(F.sum("c12").alias("c1"), F.count(F.lit(1)).alias("n1p_w1"))
         .join(F.broadcast(totals), "lang")
     )
-    cont = grid.groupBy("lang", "w2").agg(F.count(F.lit(1)).alias("n1p_w2"))
-    return ctx, cont
 
 
 def _fit(
@@ -185,7 +138,8 @@ def _fit(
     grid = bigram_grid(docs, lang=lang, text=text)
     if materialize:
         grid = grid.localCheckpoint(eager=True)
-    ctx, cont = bigram_stats(grid)
+    cont = bigram_cont(grid)
+    ctx = bigram_ctx(grid, cont)
     if add_one:
         frames = [grid, ctx.select("lang", "w1", "c1", "vsize")]
     else:
@@ -213,7 +167,8 @@ def bigram_lm_train(
     count) is carried denormalized on every ctx row so scoring needs
     no third join. The add-one model is a projection of the
     Kneser-Ney statistics (same grid, ctx minus its two KN columns),
-    so both families share one fit (`bigram_grid`, `bigram_stats`).
+    so both families share one fit (`bigram_grid`, `bigram_cont`,
+    `bigram_ctx`).
 
     ``min_count`` prunes the model — the knob that keeps the shipped
     frames bounded on corpora whose vocabulary grows with size
@@ -241,6 +196,81 @@ def bigram_lm_train(
     return _fit(docs, lang, text, materialize, min_count, add_one=True)
 
 
+KN_DISCOUNT = 0.75  # the standard absolute-discount constant
+
+
+def lm_scores(
+    docs: DataFrame,
+    grid: DataFrame,
+    ctx: DataFrame,
+    cont: DataFrame | None = None,
+    lang: str = "lang",
+    text: str = "text",
+    doc_id: str = "doc_id",
+) -> DataFrame:
+    """Score EVERY document with its language's LM, in one bigram
+    explode and one join chain: ``(doc_id, lang, n_bigrams, ppl)``
+    under add-one smoothing, plus ``ppl_kn`` under Kneser-Ney when the
+    KN ``cont`` frame is given (the add-one model is a projection of
+    the KN statistics, so both families score off the same joins).
+
+    A doc that cannot score — fewer than 2 tokens, NULL text, a NULL
+    language or one the model never saw — keeps its row from the same
+    scan (an outer explode, a left join of the per-language totals)
+    with the sentinels ``n_bigrams = 0`` and ``ppl = -1.0``; a
+    trained-language doc with >= 2 tokens always scores. Unseen
+    context -> c1 = 0 (add-one probability 1/V): vsize comes from the
+    per-LANGUAGE totals, not from the left-joined ctx row, which an
+    unseen (lang, w1) misses.
+
+    Join strategy: only the |langs|-row totals frame carries a
+    broadcast hint. grid, ctx and cont are corpus-VOCABULARY-
+    proportional (Heaps' law), so their joins are left to AQE: a
+    pruned model measures small and broadcasts; an over-threshold
+    model falls back to a shuffled hash join instead of OOMing the
+    driver the way an unconditional ``F.broadcast`` would."""
+    kn = cont is not None
+    totals = ctx.select("lang", "vsize", *(["n1p_all"] if kn else [])).distinct()
+    contexts = ctx.select("lang", "w1", "c1", *(["n1p_w1"] if kn else []))
+    scored = (
+        _bigrams(docs.select(doc_id, F.col(lang).alias("lang"), text), text, outer=True)
+        .join(F.broadcast(totals), "lang", "left")
+        .join(contexts, ["lang", "w1"], "left")
+        .join(grid, ["lang", "w1", "w2"], "left")
+    )
+    probs = {
+        "ppl": (F.coalesce("c12", F.lit(0)) + F.lit(1.0))
+        / (F.coalesce("c1", F.lit(0)) + F.col("vsize"))
+    }
+    if kn:
+        scored = scored.join(cont, ["lang", "w2"], "left")
+        d = F.lit(KN_DISCOUNT)
+        pcont = (F.coalesce("n1p_w2", F.lit(0)) + F.lit(1.0)) / (
+            F.col("n1p_all") + F.col("vsize")
+        )
+        p_seen = (
+            F.greatest(F.coalesce("c12", F.lit(0)) - d, F.lit(0.0)) / F.col("c1")
+            + d * F.col("n1p_w1") / F.col("c1") * pcont
+        )
+        probs["ppl_kn"] = F.when(F.col("c1").isNotNull(), p_seen).otherwise(pcont)
+    ok = F.col("w1").isNotNull() & F.col("vsize").isNotNull()
+
+    def ppl(p: Column) -> Column:
+        logp = F.when(ok, F.log(p))
+        return F.coalesce(F.round(F.exp(-F.avg(logp)) + F.lit(1e-9), 6), F.lit(-1.0))
+
+    return scored.groupBy(doc_id, "lang").agg(
+        F.count(F.when(ok, 1)).alias("n_bigrams"),
+        *[ppl(p).alias(name) for name, p in probs.items()],
+    )
+
+
+def _scored_only(scores: DataFrame, doc_id: str, ppl: str) -> DataFrame:
+    return scores.where(F.col("n_bigrams") > 0).select(
+        doc_id, "lang", "n_bigrams", F.col(ppl).alias("ppl")
+    )
+
+
 def bigram_lm_perplexity(
     docs: DataFrame,
     grid: DataFrame,
@@ -248,53 +278,14 @@ def bigram_lm_perplexity(
     lang: str = "lang",
     text: str = "text",
     doc_id: str = "doc_id",
-    vocab: DataFrame | None = None,
 ) -> DataFrame:
-    """Score every document with its language's LM:
-    ``(doc_id, lang, n_bigrams, ppl)``. Unseen context -> c1 = 0
-    (probability 1/V): vsize comes from a per-LANGUAGE lookup (the
-    distinct (lang, vsize) rows of ctx), not from the left-joined ctx
-    row — an unseen (lang, w1) misses that join, and riding vsize on
-    it alone would NULL the log prob instead of smoothing it (found in
-    round-7 review, verified by execution). Docs of a language the
-    model never saw drop out here (inner vocab join, mirroring the
-    oracle's ``JOIN voc USING (lang)``); ``perplexity_buckets`` files
-    them as 'unscored'.
-
-    Join strategy: only the |langs|-row vocab frame carries a
-    broadcast hint. grid and ctx are corpus-VOCABULARY-proportional
-    (Heaps' law — they grow with the corpus unless pruned), so their
-    joins are left to AQE: a pruned model measures small and
-    broadcasts; an over-threshold model falls back to a shuffled hash
-    join instead of OOMing the driver the way an unconditional
-    ``F.broadcast`` hint would (round-8 fix; the same medicine as the
-    islands/risk/pg_compat hint removals).
-
-    ``vocab`` (round 13): pass the (lang, vsize) frame when the caller
-    also needs the trained-language set — sharing one frame lets the
-    plan reuse a single ctx aggregation across both consumers."""
-    if vocab is None:
-        vocab = ctx.select("lang", "vsize").distinct()
-    scored = (
-        _bigrams(docs.select(doc_id, F.col(lang).alias("lang"), text), text)
-        .join(F.broadcast(vocab), "lang")
-        .join(ctx.drop("vsize"), ["lang", "w1"], "left")
-        .join(grid, ["lang", "w1", "w2"], "left")
-        .withColumn(
-            "_logp",
-            F.log(
-                (F.coalesce("c12", F.lit(0)) + F.lit(1.0))
-                / (F.coalesce("c1", F.lit(0)) + F.col("vsize"))
-            ),
-        )
+    """The scorable documents' add-one ``(doc_id, lang, n_bigrams,
+    ppl)``: `lm_scores` without its sentinel rows, so docs of a
+    language the model never saw drop out here (mirroring the oracle's
+    ``JOIN voc USING (lang)``)."""
+    return _scored_only(
+        lm_scores(docs, grid, ctx, lang=lang, text=text, doc_id=doc_id), doc_id, "ppl"
     )
-    return scored.groupBy(doc_id, "lang").agg(
-        F.count(F.lit(1)).cast("long").alias("n_bigrams"),
-        F.round(F.exp(-F.avg("_logp")) + F.lit(1e-9), 6).alias("ppl"),
-    )
-
-
-KN_DISCOUNT = 0.75  # the standard absolute-discount constant
 
 
 def bigram_lm_kn_train(
@@ -333,8 +324,8 @@ def bigram_lm_kn_train(
     Everything is an integer-count ratio, so the model is
     DuckDB-oracle-checkable like the add-one one. Train cost: ONE
     corpus-sized shuffle (`bigram_grid`); ctx/cont/totals all derive
-    from the model-sized grid (`bigram_stats`). ``min_count`` prunes
-    ROWS from all three shipped frames — grid rows with
+    from the model-sized grid (`bigram_cont`, `bigram_ctx`).
+    ``min_count`` prunes ROWS from all three shipped frames — grid rows with
     ``c12 < min_count``, ctx rows with ``c1 < min_count``, cont rows
     with ``n1p_w2 < min_count`` (cont is vocabulary-proportional too:
     one row per (lang, w2)). Values on SURVIVING rows and the
@@ -355,41 +346,13 @@ def bigram_lm_kn_perplexity(
     lang: str = "lang",
     text: str = "text",
     doc_id: str = "doc_id",
-    totals: DataFrame | None = None,
 ) -> DataFrame:
-    """Score every document with its language's KN model:
-    ``(doc_id, lang, n_bigrams, ppl)``, same output contract as the
-    add-one scorer. Join strategy mirrors it too: only the |langs|-row
-    totals frame is hint-broadcast; grid/ctx/cont are
-    vocabulary-proportional, so their joins are the planner's call
-    (broadcast when measured small — serve from parquet at rest for
-    accurate statistics — shuffled past the threshold). ``totals`` —
-    same single-ctx-aggregation sharing hook as the add-one scorer's
-    ``vocab`` (round 13)."""
-    if totals is None:
-        totals = ctx.select("lang", "n1p_all", "vsize").distinct()
-    d = F.lit(KN_DISCOUNT)
-    pcont = (F.coalesce("n1p_w2", F.lit(0)) + F.lit(1.0)) / (
-        F.col("n1p_all") + F.col("vsize")
-    )
-    p_seen = (
-        F.greatest(F.coalesce("c12", F.lit(0)) - d, F.lit(0.0)) / F.col("c1")
-        + d * F.col("n1p_w1") / F.col("c1") * pcont
-    )
-    scored = (
-        _bigrams(docs.select(doc_id, F.col(lang).alias("lang"), text), text)
-        .join(F.broadcast(totals), "lang")
-        .join(ctx.select("lang", "w1", "c1", "n1p_w1"), ["lang", "w1"], "left")
-        .join(grid, ["lang", "w1", "w2"], "left")
-        .join(cont, ["lang", "w2"], "left")
-        .withColumn(
-            "_logp",
-            F.log(F.when(F.col("c1").isNotNull(), p_seen).otherwise(pcont)),
-        )
-    )
-    return scored.groupBy(doc_id, "lang").agg(
-        F.count(F.lit(1)).cast("long").alias("n_bigrams"),
-        F.round(F.exp(-F.avg("_logp")) + F.lit(1e-9), 6).alias("ppl"),
+    """The scorable documents' KN ``(doc_id, lang, n_bigrams, ppl)``,
+    same output contract as the add-one `bigram_lm_perplexity`, and
+    the same `lm_scores` join chain."""
+    return _scored_only(
+        lm_scores(docs, grid, ctx, cont, lang=lang, text=text, doc_id=doc_id),
+        doc_id, "ppl_kn",
     )
 
 
@@ -411,25 +374,27 @@ def kn_perplexity_buckets(
     grid, ctx, cont = model if model is not None else bigram_lm_kn_train(
         docs, lang=lang, text=text
     )
-    # one ctx aggregation shared by the scorer's totals AND the
-    # unscored complement's trained set (round 13 — the two distincts
-    # were separate subtrees, costing two ctx scans per serve)
-    totals = ctx.select("lang", "n1p_all", "vsize").distinct()
-    ppl = bigram_lm_kn_perplexity(
-        docs, grid, ctx, cont, lang=lang, text=text, doc_id=doc_id, totals=totals
+    return ntile_buckets(
+        lm_scores(docs, grid, ctx, cont, lang=lang, text=text, doc_id=doc_id),
+        doc_id, ppl="ppl_kn",
     )
-    w = Window.partitionBy("lang").orderBy(F.col("ppl").asc(), F.col(doc_id).asc())
-    scored = ppl.withColumn(
-        "bucket",
-        F.element_at(
-            F.create_map(
-                *[x for k, v in _BUCKETS.items() for x in (F.lit(k), F.lit(v))]
-            ),
-            F.ntile(3).over(w),
-        ),
+
+
+def ntile_buckets(scores: DataFrame, doc_id: str = "doc_id", ppl: str = "ppl") -> DataFrame:
+    """``(doc_id, lang, n_bigrams, ppl, bucket)`` from an `lm_scores`
+    table: each language's scored docs ntile'd into head/middle/tail
+    thirds by (``ppl``, doc_id), the unscorable ones 'unscored'. One
+    window over a (lang, scorable) partition — no union, no second
+    scan for the sentinel rows."""
+    scorable = F.col("n_bigrams") > 0
+    w = Window.partitionBy("lang", scorable).orderBy(F.col(ppl).asc(), F.col(doc_id).asc())
+    tercile = F.element_at(
+        F.create_map(*[x for k, v in _BUCKETS.items() for x in (F.lit(k), F.lit(v))]),
+        F.ntile(3).over(w),
     )
-    return scored.unionByName(
-        _unscored_docs(docs, ctx, lang, text, doc_id, trained=totals)
+    return scores.select(
+        doc_id, "lang", "n_bigrams", F.col(ppl).alias("ppl"),
+        F.when(scorable, tercile).otherwise(F.lit("unscored")).alias("bucket"),
     )
 
 
@@ -500,54 +465,34 @@ def perplexity_buckets(
     grid, ctx = model if model is not None else bigram_lm_train(
         docs, lang=lang, text=text
     )
-    # one ctx aggregation shared by the scorer's vocab AND the
-    # unscored complement's trained set (round 13 — the two distincts
-    # were separate subtrees, costing two ctx scans per serve)
-    vocab = ctx.select("lang", "vsize").distinct()
-    ppl = bigram_lm_perplexity(
-        docs, grid, ctx, lang=lang, text=text, doc_id=doc_id, vocab=vocab
-    )
-    w = Window.partitionBy("lang").orderBy(F.col("ppl").asc(), F.col(doc_id).asc())
-    scored = ppl.withColumn(
-        "bucket",
-        F.element_at(
-            F.create_map(
-                *[x for k, v in _BUCKETS.items() for x in (F.lit(k), F.lit(v))]
-            ),
-            F.ntile(3).over(w),
-        ),
-    )
-    # unscorable docs are identifiable ON THE SCAN plus one broadcast
-    # anti-join (short / NULL-text / untrained-language), so no join
-    # back against the scored output is needed — a trained-language
-    # doc with >= 2 tokens always emits >= 1 bigram and always scores
-    return scored.unionByName(
-        _unscored_docs(docs, ctx, lang, text, doc_id, trained=vocab)
+    return ntile_buckets(
+        lm_scores(docs, grid, ctx, lang=lang, text=text, doc_id=doc_id), doc_id
     )
 
 
-def _bucket_by_bounds(ppl: DataFrame, bounds: DataFrame) -> DataFrame:
+def _bucket_by_bounds(scores: DataFrame, bounds: DataFrame) -> DataFrame:
     """Assign head/middle/tail by comparing each scored row against
     the |langs|x2 boundary table ``(lang, _b array<double>)`` — a
-    broadcast join + scan-side CASE, no sort anywhere. Shared by the
+    broadcast join + scan-side CASE, no sort anywhere; sentinel rows
+    (``n_bigrams = 0``) bucket 'unscored'. Shared by the
     zero-global-sort batch variant and the streaming serve (which
     ships the SAME frozen table to every micro-batch)."""
-    return (
-        ppl.join(F.broadcast(bounds), "lang")
-        .withColumn(
-            "bucket",
-            F.when(F.col("ppl") <= F.col("_b")[0], "head")
-            .when(F.col("ppl") <= F.col("_b")[1], "middle")
-            .otherwise("tail"),
-        )
-        .drop("_b")
+    b = F.col("_b")
+    bucket = (
+        F.when(F.col("n_bigrams") == 0, "unscored")
+        .when(F.col("ppl") <= b[0], "head")
+        .when(F.col("ppl") <= b[1], "middle")
+        .otherwise("tail")
+    )
+    return scores.join(F.broadcast(bounds), "lang", "left").select(
+        *scores.columns, bucket.alias("bucket")
     )
 
 
 def _boundaries(
     docs: DataFrame,
     fit,
-    score,
+    ppl: str,
     lang: str,
     text: str,
     doc_id: str,
@@ -556,12 +501,18 @@ def _boundaries(
 ) -> DataFrame:
     """Family-generic boundary freeze: fit (or take) a model, score the
     corpus, reduce to per-language tercile boundaries. The smoothing
-    family enters only through (fit, score) — the serving contract
-    (one approx_percentile pass, |langs|x2 output) is defined ONCE so
-    the add-one and KN twins cannot drift."""
+    family enters only through (fit, its `lm_scores` column) — the
+    serving contract (one approx_percentile pass, |langs|x2 output) is
+    defined ONCE so the add-one and KN twins cannot drift."""
     frames = model if model is not None else fit(docs, lang=lang, text=text)
-    ppl = score(docs, *frames, lang=lang, text=text, doc_id=doc_id)
-    return ppl.groupBy("lang").agg(
+    scores = lm_scores(docs, *frames, lang=lang, text=text, doc_id=doc_id)
+    return _tercile_bounds(scores, doc_id, ppl, accuracy)
+
+
+def _tercile_bounds(scores: DataFrame, doc_id: str, ppl: str, accuracy: int) -> DataFrame:
+    """Per-language approximate tercile boundaries ``(lang, _b)`` of
+    the scorable rows' ``ppl``: one approx_percentile pass."""
+    return _scored_only(scores, doc_id, ppl).groupBy("lang").agg(
         F.percentile_approx("ppl", [1.0 / 3.0, 2.0 / 3.0], accuracy).alias("_b")
     )
 
@@ -570,35 +521,29 @@ def _frozen_buckets(
     docs: DataFrame,
     bounds: DataFrame,
     fit,
-    score,
+    ppl: str,
     lang: str,
     text: str,
     doc_id: str,
     model: tuple[DataFrame, ...] | None,
 ) -> DataFrame:
-    """Family-generic frozen-boundary serve. Holds the THREE serving
+    """Family-generic frozen-boundary serve. Holds the serving
     subtleties in one place for both smoothing families: (a) the
     'trained' set shrinks to languages both the model AND the bounds
     know (ctx semi-joined to bounds — a trained-but-unbounded
-    language's docs file as 'unscored', never vanish; round-8
-    self-review), (b) bucket assignment is the broadcast |langs|x2
-    boundary comparison, (c) unscorables union in from the scan-side
-    complement. The model's ctx frame is positional slot 2 in every
-    family (add-one pair, KN triple)."""
+    language's docs file as 'unscored', never vanish), (b) bucket
+    assignment is the broadcast |langs|x2 boundary comparison. The
+    model's ctx frame is positional slot 2 in every family (add-one
+    pair, KN triple)."""
     frames = model if model is not None else fit(docs, lang=lang, text=text)
     grid, ctx, *rest = frames
     servable_ctx = ctx.join(
         F.broadcast(bounds.select("lang").distinct()), "lang", "left_semi"
     )
-    ppl = score(
+    scores = lm_scores(
         docs, grid, servable_ctx, *rest, lang=lang, text=text, doc_id=doc_id
-    )
-    scored = _bucket_by_bounds(ppl, bounds).select(
-        doc_id, "lang", "n_bigrams", "ppl", "bucket"
-    )
-    return scored.unionByName(
-        _unscored_docs(docs, servable_ctx, lang, text, doc_id)
-    )
+    ).select(doc_id, "lang", "n_bigrams", F.col(ppl).alias("ppl"))
+    return _bucket_by_bounds(scores, bounds)
 
 
 def perplexity_boundaries(
@@ -619,7 +564,7 @@ def perplexity_boundaries(
     every language the model can score (the inner join in
     `_bucket_by_bounds` is then total over scorable docs)."""
     return _boundaries(
-        docs, bigram_lm_train, bigram_lm_perplexity,
+        docs, bigram_lm_train, "ppl",
         lang, text, doc_id, model, accuracy,
     )
 
@@ -643,14 +588,11 @@ def perplexity_buckets_frozen(
     The serving artifact is (model AND bounds) together: a language
     present in the model but ABSENT from the boundary table cannot be
     bucketed by this filter, so its documents file as 'unscored' too —
-    never silently dropped (round-8 self-review finding: the first cut
-    inner-joined bounds after the trained-language complement was
-    computed from ctx alone, so a trained-but-unbounded language's
-    docs vanished from the output). Implemented by shrinking the
+    never silently dropped. Implemented by shrinking the
     'trained' set to the languages both frames know: ctx semi-joined
     to bounds (`_frozen_buckets`, shared with the KN twin)."""
     return _frozen_buckets(
-        docs, bounds, bigram_lm_train, bigram_lm_perplexity,
+        docs, bounds, bigram_lm_train, "ppl",
         lang, text, doc_id, model,
     )
 
@@ -670,7 +612,7 @@ def kn_perplexity_boundaries(
     (`save_lm_model(..., cont=, bounds=)`), and score unbounded
     streams against both without re-sorting anything."""
     return _boundaries(
-        docs, bigram_lm_kn_train, bigram_lm_kn_perplexity,
+        docs, bigram_lm_kn_train, "ppl_kn",
         lang, text, doc_id, model, accuracy,
     )
 
@@ -692,45 +634,49 @@ def kn_perplexity_buckets_frozen(
     twin under any delivery split (`_frozen_buckets`, shared with the
     add-one twin)."""
     return _frozen_buckets(
-        docs, bounds, bigram_lm_kn_train, bigram_lm_kn_perplexity,
+        docs, bounds, bigram_lm_kn_train, "ppl_kn",
         lang, text, doc_id, model,
     )
 
 
-def rho_excess_scores(
-    docs: DataFrame,
-    base_model: tuple[DataFrame, DataFrame],
-    ref_model: tuple[DataFrame, DataFrame, DataFrame],
-    lang: str = "lang",
-    text: str = "text",
-    doc_id: str = "doc_id",
-) -> DataFrame:
-    """(doc_id, ppl_base, ppl_ref, excess): the RHO learnability score
-    — excess = round(ln(ppl_base) − ln(ppl_ref), 6), the per-token
-    log-loss delta between the weak add-one base LM and the strong
-    Kneser-Ney reference. One definition feeds BOTH the batch
-    selection query and the frozen serve twin, so the score cannot
-    drift between them. Only docs scorable by both models appear (the
-    two scorers share the ≥2-token / known-language domain when fitted
-    on the same corpus); callers file the rest under the LM tier's
-    sentinels."""
-    base = bigram_lm_perplexity(
-        docs, *base_model, lang=lang, text=text, doc_id=doc_id
+def rho_excess(scores: DataFrame, doc_id: str = "doc_id") -> DataFrame:
+    """(doc_id, lang, ppl_base, ppl_ref, excess) from a two-family
+    `lm_scores` table: the RHO learnability score excess =
+    round(ln(ppl_base) − ln(ppl_ref), 6), the per-token log-loss delta
+    between the weak add-one base LM and the strong Kneser-Ney
+    reference, both read off the same scoring pass. Unscorable docs
+    keep their -1.0 sentinels and a NULL excess, which a cutoff never
+    ranks (`dsir_kth_weight`) and `rho_select` files as 0.0, not kept.
+    One definition feeds BOTH the batch selection query and the frozen
+    serve twin, so the score cannot drift between them."""
+    return scores.select(
+        doc_id,
+        "lang",
+        F.col("ppl").alias("ppl_base"),
+        F.col("ppl_kn").alias("ppl_ref"),
+        F.when(
+            F.col("n_bigrams") > 0, F.round(F.log("ppl") - F.log("ppl_kn"), 6)
+        ).alias("excess"),
     )
-    ref = bigram_lm_kn_perplexity(
-        docs, *ref_model, lang=lang, text=text, doc_id=doc_id
-    )
-    return (
-        base.select(doc_id, F.col("ppl").alias("ppl_base"))
-        .join(ref.select(doc_id, F.col("ppl").alias("ppl_ref")), doc_id)
-        .withColumn("excess", F.round(F.log("ppl_base") - F.log("ppl_ref"), 6))
+
+
+def rho_select(excess: DataFrame, cutoff: Column, doc_id: str = "doc_id") -> DataFrame:
+    """(doc_id, lang, ppl_base, ppl_ref, excess, kept) of a `rho_excess`
+    frame: kept = excess >= ``cutoff`` (ties all kept); an unscorable
+    doc's excess files as 0.0, never kept."""
+    return excess.select(
+        doc_id,
+        "lang",
+        "ppl_base",
+        "ppl_ref",
+        F.coalesce("excess", F.lit(0.0)).alias("excess"),
+        F.coalesce(F.col("excess") >= cutoff, F.lit(False)).alias("kept"),
     )
 
 
 def rho_excess_select_frozen(
     docs: DataFrame,
-    base_model: tuple[DataFrame, DataFrame],
-    ref_model: tuple[DataFrame, DataFrame, DataFrame],
+    model: tuple[DataFrame, DataFrame, DataFrame],
     cutoff: DataFrame,
     lang: str = "lang",
     text: str = "text",
@@ -742,37 +688,25 @@ def rho_excess_select_frozen(
     as `perplexity_buckets_frozen` (frozen model + frozen boundary)
     and `dsir_score_frozen` (frozen model + frozen cutoff).
 
-    excess = round(ln(ppl_base) − ln(ppl_ref), 6) — the per-token
-    log-loss delta between the weak base LM (add-one pair) and the
-    strong reference LM (Kneser-Ney triple); kept = excess >= cutoff,
-    a pure per-document predicate given the frozen (base_model,
-    ref_model, cutoff), so a document's row is identical whether it
+    ``model`` is the Kneser-Ney triple (grid, ctx, cont); the weak
+    base LM is its add-one projection, scored in the same pass
+    (`lm_scores`). excess = round(ln(ppl_base) − ln(ppl_ref), 6);
+    kept = excess >= cutoff, a pure per-document predicate given the
+    frozen (model, cutoff), so a document's row is identical whether it
     arrives alone, in any micro-batch, or in the full batch — the
     property the streaming twin's stream==batch test pins. Ties at the
-    cutoff are all kept (the dsir_score_frozen trade). Docs scorable
-    by neither LM (<2 tokens, NULL text, or a language the models
-    never saw) carry the LM tier's sentinels: ppl −1.0, excess 0.0,
-    kept false. The cutoff travels as an explicitly-broadcast 1-row
-    frame (a scalar by contract — derive it with
+    cutoff are all kept (the dsir_score_frozen trade). Docs the model
+    cannot score (<2 tokens, NULL text, or a language it never saw)
+    carry the LM tier's sentinels: ppl −1.0, excess 0.0, kept false.
+    The cutoff travels as an explicitly-broadcast 1-row frame (a
+    scalar by contract — derive it with
     `dsir_kth_weight(scored, frac, weight_col="excess")` over the
     reference corpus's excess frame, never a global rank)."""
-    scored = rho_excess_scores(
-        docs, base_model, ref_model, lang=lang, text=text, doc_id=doc_id
-    )
-    return (
-        docs.select(doc_id, F.col(lang).alias("lang"))
-        .join(scored, doc_id, "left")
-        .crossJoin(F.broadcast(cutoff))
-        .select(
-            doc_id,
-            "lang",
-            F.coalesce("ppl_base", F.lit(-1.0)).alias("ppl_base"),
-            F.coalesce("ppl_ref", F.lit(-1.0)).alias("ppl_ref"),
-            F.coalesce("excess", F.lit(0.0)).alias("excess"),
-            F.coalesce(
-                (F.col("excess") >= F.col("cutoff")), F.lit(False)
-            ).alias("kept"),
-        )
+    scores = lm_scores(docs, *model, lang=lang, text=text, doc_id=doc_id)
+    return rho_select(
+        rho_excess(scores, doc_id).crossJoin(F.broadcast(cutoff)),
+        F.col("cutoff"),
+        doc_id,
     )
 
 
@@ -799,11 +733,7 @@ def perplexity_buckets_approx(
     grid, ctx = model if model is not None else bigram_lm_train(
         docs, lang=lang, text=text
     )
-    ppl = bigram_lm_perplexity(docs, grid, ctx, lang=lang, text=text, doc_id=doc_id)
-    bounds = ppl.groupBy("lang").agg(
-        F.percentile_approx("ppl", [1.0 / 3.0, 2.0 / 3.0], accuracy).alias("_b")
+    scores = lm_scores(docs, grid, ctx, lang=lang, text=text, doc_id=doc_id).select(
+        doc_id, "lang", "n_bigrams", "ppl"
     )
-    scored = _bucket_by_bounds(ppl, bounds)
-    return scored.select(doc_id, "lang", "n_bigrams", "ppl", "bucket").unionByName(
-        _unscored_docs(docs, ctx, lang, text, doc_id)
-    )
+    return _bucket_by_bounds(scores, _tercile_bounds(scores, doc_id, "ppl", accuracy))

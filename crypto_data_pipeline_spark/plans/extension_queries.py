@@ -1445,34 +1445,33 @@ def embedding_similar_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.near_dup_pairs_by_cosine(_embs(spark, sf_dir), threshold=0.3)
 
 
-def _lm_model_at_rest(spark: SparkSession, sf_dir: str, docs: DataFrame) -> tuple:
-    """The fitted LM statistics (grid, ctx, cont) at rest — the serve
-    store's ``lm_model`` entry, fitted once per (session, corpus) for
-    both smoothing families, in one corpus pass: the grid lands
-    straight from its aggregation, ctx and cont derive from the landed
-    grid (model-sized scans), and each frame reloads with its known
-    schema, so no job infers parquet footers. Parquet-backed frames
-    give the hint-free serve joins accurate statistics, so a
-    model-sized grid broadcasts by measurement. ``docs`` is the
-    caller's scan of the sf_dir's documents."""
-    from crypto_data_pipeline_spark.operators.lm import bigram_grid, bigram_stats
+def _lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The per-doc LM score table ``(doc_id, lang, n_bigrams, ppl,
+    ppl_kn)`` at rest — the serve store's ``lm_model`` entry, built
+    once per (session, corpus) for both smoothing families: the grid
+    lands straight from its aggregation (one corpus pass), cont and
+    then ctx derive from the landed frames (model-sized scans), and
+    every document is scored against the landed model in one more corpus
+    pass (`lm.lm_scores`). Each frame reloads with its known schema, so
+    no job infers parquet footers, and the parquet-backed model gives
+    the hint-free scoring joins accurate statistics, so a model-sized
+    grid broadcasts by measurement. The four LM queries then read only
+    the landed scores."""
+    from crypto_data_pipeline_spark.operators import lm
 
-    def build(model_dir: str) -> tuple:
+    docs = _docs(spark, sf_dir)
+
+    def build(model_dir: str) -> DataFrame:
         def land(name: str, df: DataFrame) -> DataFrame:
             df.write.parquet(f"{model_dir}/{name}")
             return spark.read.schema(df.schema).parquet(f"{model_dir}/{name}")
 
-        grid = land("grid", bigram_grid(docs))
-        ctx, cont = bigram_stats(grid)
-        return grid, land("ctx", ctx), land("cont", cont)
+        grid = land("grid", lm.bigram_grid(docs))
+        cont = land("cont", lm.bigram_cont(grid))
+        ctx = land("ctx", lm.bigram_ctx(grid, cont))
+        return land("scores", lm.lm_scores(docs, grid, ctx, cont))
 
     return serve_store.serve(spark, sf_dir, "lm_model", ("documents",), build)
-
-
-def _lm_model(spark: SparkSession, sf_dir: str, docs: DataFrame) -> tuple:
-    """The add-one pair (grid, ctx), projected from `_lm_model_at_rest`."""
-    grid, ctx, _cont = _lm_model_at_rest(spark, sf_dir, docs)
-    return grid, ctx.select("lang", "w1", "c1", "vsize")
 
 
 def _ivf_index_at_rest(
@@ -3723,8 +3722,6 @@ FROM base WHERE ppl IS NULL
 
 @register(
     "lm_perplexity_buckets",
-    # seated in the driver gate in round 8 (the round-7 flagship; the
-    # rotation pattern of rounds 5-7)
     bench=True,
     survey_ids=("EXT-text", "EXT-sample"),
     oracle=_LM_BUCKETS_SQL,
@@ -3737,24 +3734,23 @@ def lm_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     perplexity thirds with a deterministic (ppl, doc_id) tie-break so
     the lossy filter itself hash-checks (`operators/lm.py`).
     Sub-2-token docs land in the 'unscored' sentinel bucket instead of
-    a NULL the gate can't sort. Scale shape (the round-8 retraction,
-    docs/SCALE_PROBE.md): the fitted grid is NOT bounded — distinct
+    a NULL the gate can't sort. Scale shape (docs/SCALE_PROBE.md):
+    the fitted grid is NOT bounded — distinct
     bigrams grow with corpus vocabulary (Heaps' law, measured
     75k→77M rows over the K=1..1000 clone probe) — so train exposes a
     ``min_count`` pruning knob and the serve joins carry NO broadcast
     hint: the model lands AT REST (parquet, accurate statistics) and
     AQE broadcasts it only when it measures small, falling back to a
-    shuffled join instead of an OOM past the threshold. The fit is
-    cached per (session, corpus) — the same train/serve split as the
-    NB classifier and the ANN indexes — and one fit serves all four LM
-    queries: the add-one model is a projection of the Kneser-Ney
-    statistics (`_lm_model_at_rest`). This query registers first of
-    them, so bench.py's cold_build_seconds row for it carries the
+    shuffled join instead of an OOM past the threshold. The fit and
+    the per-doc scores of both families are cached per (session,
+    corpus) — the same train/serve split as the NB classifier and the
+    ANN indexes — and one score table serves all four LM queries
+    (`_lm_scores`); this query is an ntile over it. It registers first
+    of them, so bench.py's cold_build_seconds row for it carries the
     shared fit."""
-    from crypto_data_pipeline_spark.operators.lm import perplexity_buckets
+    from crypto_data_pipeline_spark.operators.lm import ntile_buckets
 
-    docs = _docs(spark, sf_dir)
-    return perplexity_buckets(docs, model=_lm_model(spark, sf_dir, docs))
+    return ntile_buckets(_lm_scores(spark, sf_dir))
 
 
 _LM_KN_BUCKETS_SQL = f"""
@@ -3805,8 +3801,6 @@ FROM base WHERE ppl IS NULL
 
 @register(
     "lm_perplexity_buckets_kn",
-    # seated in the driver gate in round 9 (the round-8 flagship; the
-    # rotation pattern of rounds 5-8 — sessionization demoted in trade)
     bench=True,
     survey_ids=("EXT-text", "EXT-sample"),
     oracle=_LM_KN_BUCKETS_SQL,
@@ -3822,13 +3816,12 @@ def lm_perplexity_buckets_kn(spark: SparkSession, sf_dir: str) -> DataFrame:
     family hash-checks against a plain-SQL DuckDB twin. Train is
     still ONE corpus-sized shuffle — the KN statistics (context
     diversity, continuation counts, distinct-bigram totals) all
-    derive from the model-sized grid. The fitted triple is the shared
-    at-rest LM entry (`_lm_model_at_rest`), so the serve joins read
-    measured parquet statistics instead of lineage estimates."""
-    from crypto_data_pipeline_spark.operators.lm import kn_perplexity_buckets
+    derive from the model-sized grid. The KN scores are a column of
+    the shared at-rest score table (`_lm_scores`), so this query is an
+    ntile over it."""
+    from crypto_data_pipeline_spark.operators.lm import ntile_buckets
 
-    docs = _docs(spark, sf_dir)
-    return kn_perplexity_buckets(docs, model=_lm_model_at_rest(spark, sf_dir, docs))
+    return ntile_buckets(_lm_scores(spark, sf_dir), ppl="ppl_kn")
 
 
 _RHO_EXCESS_SQL = """
@@ -3899,11 +3892,6 @@ FROM documents d LEFT JOIN scored s USING (doc_id)
 
 @register(
     "rho_excess_perplexity_select",
-    # r11: seated in the driver gate (VERDICT r10 next #1) in place of
-    # the rows-only model_comparison — the round-10 flagship gets a
-    # driver-certified hash row; bench-flagged per house rule (every
-    # gate query bench-observable: timing row, shuffle-byte gate,
-    # PLAN_AUDIT).
     bench=True,
     survey_ids=("EXT-sample", "EXT-text"),
     oracle=_RHO_EXCESS_SQL,
@@ -3918,8 +3906,9 @@ def rho_excess_perplexity_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     Kneser-Ney LM as the reference (both already fitted, cached at
     rest, and individually hash-checked). High excess ≈ learnable
     (the weak model fails, the strong one doesn't); low or negative
-    excess ≈ noise or already-learnt. Selection is the round-10
-    machinery: the exact k-th-largest excess from dsir_kth_weight's
+    excess ≈ noise or already-learnt. Both perplexities are columns
+    of the shared at-rest score table (`_lm_scores`). Selection is the
+    exact k-th-largest excess from dsir_kth_weight's
     histogram refinement applied as a per-row predicate — no window,
     ties-all-kept. Docs scored by neither LM (<2 tokens) carry the
     'unscored' sentinels (-1.0 ppl, 0.0 excess, kept=false). The
@@ -3927,33 +3916,9 @@ def rho_excess_perplexity_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold — hash-checks against one DuckDB twin."""
     from crypto_data_pipeline_spark.operators import lm as lm_ops
 
-    docs = _docs(spark, sf_dir)
-    # rho_scored: the persisted per-doc excess perplexity, scanned twice by the cutoff
-    scored = serve_store.serve(
-        spark, sf_dir, "rho_scored", ("documents",),
-        lambda _tmp: lm_ops.rho_excess_scores(
-            docs,
-            _lm_model(spark, sf_dir, docs),
-            _lm_model_at_rest(spark, sf_dir, docs),
-        ).persist(),
-        release=DataFrame.unpersist,
-    )
-    cutoff = dsir.dsir_kth_weight(scored, 0.25, weight_col="excess")
-    kept = scored.withColumn(
-        "kept", (F.col("excess") >= F.lit(cutoff)).cast("boolean")
-    )
-    return (
-        docs.select("doc_id", "lang")
-        .join(kept, "doc_id", "left")
-        .select(
-            "doc_id",
-            "lang",
-            F.coalesce("ppl_base", F.lit(-1.0)).alias("ppl_base"),
-            F.coalesce("ppl_ref", F.lit(-1.0)).alias("ppl_ref"),
-            F.coalesce("excess", F.lit(0.0)).alias("excess"),
-            F.coalesce("kept", F.lit(False)).alias("kept"),
-        )
-    )
+    excess = lm_ops.rho_excess(_lm_scores(spark, sf_dir))
+    cutoff = dsir.dsir_kth_weight(excess, 0.25, weight_col="excess")
+    return lm_ops.rho_select(excess, F.lit(cutoff))
 
 
 # source-level curation thresholds — one definition feeds BOTH the
@@ -3963,9 +3928,6 @@ _SRC_REVIEW_DUP, _SRC_REVIEW_KEEP, _SRC_REVIEW_TAIL = 0.2, 0.6, 0.5
 
 @register(
     "source_curation_report",
-    # seated in the driver gate in round 8 alongside lm_perplexity_buckets;
-    # bench-flagged in round 9 — every gate query should be
-    # bench-observable (timing row, shuffle-byte gate, PLAN_AUDIT)
     bench=True,
     survey_ids=("EXT-text", "EXT-dedup", "EXT-sample"),
     oracle=f"""
@@ -4011,36 +3973,25 @@ def source_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines. Scale shape: the rule battery and content hash are
     zero-shuffle expressions on the scan; the LM bucket join is the
     one doc-keyed shuffle; the report itself is |sources| rows. The
-    add-one model is projected from the shared at-rest LM entry
-    (`_lm_model`), so this query fits nothing once any LM query has
+    tail flag is an ntile over the shared at-rest LM score table
+    (`_lm_scores`), so this query scores nothing once any LM query has
     run on the corpus; its per-doc frame persists per (session,
     corpus) and rebuilds when the documents change."""
-    from crypto_data_pipeline_spark.operators.lm import perplexity_buckets
+    from crypto_data_pipeline_spark.operators.lm import ntile_buckets
 
     docs = _docs(spark, sf_dir)
     # src_report: the persisted per-doc (source, ch, keep, is_tail) battery frame
     def build(_tmp: str) -> DataFrame:
-        # unhex (round 13, guide §2.3 — shuffle narrower types): ch only
-        # feeds countDistinct, and unhex is bijective on md5 hex, so the
-        # distinct-(source, ch) exchange carries 16 binary bytes per pair
-        # instead of a 32-char UTF8 string — same count, same report,
-        # measured 385,984 → 310,973 shuffle bytes at sf0.1 (that exchange
-        # is corpus-sized at 100 TB; the report itself is |sources| rows).
+        # ch only feeds countDistinct, and unhex is bijective on md5 hex,
+        # so the distinct-(source, ch) exchange carries 16 binary bytes
+        # per pair instead of a 32-char UTF8 string
         base = text.with_quality_filter(text.with_text_stats(docs)).select(
             "source",
             "doc_id",
             F.unhex(F.md5(text.normalized("text"))).alias("ch"),
             "keep",
         )
-        # round 13: a scored-rows-only left join (skip the unscored union
-        # branch, coalesce misses to 0) was tried here and MEASURED WORSE —
-        # LeftOuter only allows BuildRight, the window'd scored frame's
-        # size estimate is planner-opaque, so the initial plan went
-        # SortMergeJoin and the base side paid a doc_id Exchange it never
-        # pays today (shuffle bytes 385,984 → 626,333 at sf0.1). The inner
-        # join against the full bucket frame keeps BuildLeft available and
-        # the base side broadcast: zero doc-keyed exchange.
-        lmb = perplexity_buckets(docs, model=_lm_model(spark, sf_dir, docs)).select(
+        lmb = ntile_buckets(_lm_scores(spark, sf_dir)).select(
             "doc_id", (F.col("bucket") == "tail").cast("int").alias("is_tail")
         )
         return base.join(lmb, "doc_id").select(

@@ -1,7 +1,8 @@
 """The serve store: the one owner of every per-(session, corpus) serve
 entry — state a query family derives once from the corpus and serves
-to many calls (the silver history, the fitted LM, the ANN, PQ and
-signature indexes, the DSIR features, the curation stages, and one
+to many calls (the silver history, the fitted LM with its per-doc
+score table, the ANN, PQ and signature indexes, the DSIR features,
+the curation stages, the source report's per-doc frame, and one
 ``schema:{table}`` entry per table that `sources.tables.load_table`
 reads with, so a repeat load infers no schema).
 

@@ -139,6 +139,14 @@ def fan_out(df: DataFrame, factor: int = 1) -> DataFrame:
     return df
 
 
+def release_checkpoint(df: DataFrame) -> None:
+    """Unpersist the blocks behind ``df = x.localCheckpoint()`` once no
+    frame that reads them runs again: ``DataFrame.unpersist`` only
+    uncaches a ``persist``ed frame, and a checkpoint's blocks are
+    otherwise freed only when the JVM collects its RDD."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
 def literal_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
     """Small literal DataFrame built as a JVM array-of-structs explode
     instead of ``createDataFrame`` over Python rows (round 13, guide

@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
 
 
 def latest_per_key(df: DataFrame, keys: list[str], order_by: list[str]) -> DataFrame:
@@ -93,13 +93,21 @@ def upsert_parquet_incremental(
     ``partitionOverwriteMode=dynamic`` so untouched partition
     directories are never rewritten."""
     partition_cols = list(partition_cols)
+    # the table holds this function's writes of new_rows' columns, laid
+    # out data columns first, so every read-back names that schema and
+    # no job infers a parquet footer
+    fields = new_rows.schema.fields
+    schema = T.StructType(
+        [f for f in fields if f.name not in partition_cols]
+        + [f for c in partition_cols for f in fields if f.name == c]
+    )
     if not _exists(spark, path):
         merged = latest_per_key(new_rows, keys, list(order_by))
         merged.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-        return spark.read.parquet(path)
+        return spark.read.schema(schema).parquet(path)
 
     touched = [tuple(r) for r in new_rows.select(*partition_cols).distinct().collect()]
-    existing = spark.read.parquet(path)
+    existing = spark.read.schema(schema).parquet(path)
     part_tuple = F.struct(*[F.col(c) for c in partition_cols])
     touched_lit = F.array(
         *[
@@ -119,7 +127,7 @@ def upsert_parquet_incremental(
         .partitionBy(*partition_cols)
         .parquet(path)
     )
-    return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path)
 
 
 def refresh_monthly_aggregate(

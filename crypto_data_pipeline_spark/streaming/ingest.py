@@ -24,7 +24,7 @@ Spark re-design:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from crypto_data_pipeline_spark.sources.upsert import refresh_monthly_aggregate, upsert_parquet
@@ -175,7 +175,11 @@ def _bootstrap_covers(spark: SparkSession, bloom_root: str) -> set[int]:
     from pyspark.errors.exceptions.captured import AnalysisException
 
     try:
-        rows = spark.read.parquet(f"{bloom_root}/_covers").collect()
+        rows = (
+            spark.read.schema("covered_batch_id long")
+            .parquet(f"{bloom_root}/_covers")
+            .collect()
+        )
     except AnalysisException:
         return set()
     return {r.covered_batch_id for r in rows}
@@ -238,24 +242,30 @@ def ingest_corpus_batch(
     written LAST, so a crash between the two writes replays as another
     rebuild, never as false coverage). Without this, a store predating
     its ``_bloom`` would make old duplicates read bloom-negative =
-    "proven novel" forever — the gap a reviewer flagged in round 6.
+    "proven novel" forever.
     """
     from pyspark.errors.exceptions.captured import AnalysisException
 
     from crypto_data_pipeline_spark.operators import dedup
+    from crypto_data_pipeline_spark.sources.tables import release_checkpoint
 
     s = batch.sparkSession
     store_ids = _batch_dir_ids(s, store_root) - {batch_id}
+    # the store holds this function's own writes of the batch's columns,
+    # so it reads with that schema (no job infers a footer); a dir
+    # without data files — a crashed first write's — reads as no store
     try:
-        store = (
-            s.read.parquet(store_root)
-            .where(F.col("batch_id") != batch_id)
-            .drop("batch_id")
-        )
-        store.schema  # force resolution inside the try
-    except AnalysisException:  # first delivery: no store yet (a crashed
-        store = s.createDataFrame([], batch.schema)  # first write's
-        store_ids = set()  # file-less dir also reads as "no store"
+        store = s.read.schema(
+            T.StructType(batch.schema.fields + [T.StructField("batch_id", T.LongType())])
+        ).parquet(store_root)
+        has_files = bool(store.inputFiles())
+    except AnalysisException:  # first delivery: no store dir yet
+        has_files = False
+    if has_files:
+        store = store.where(F.col("batch_id") != batch_id).drop("batch_id")
+    else:
+        store = s.createDataFrame([], batch.schema)
+        store_ids = set()
     if bloom_m is None:
         admitted = dedup.incremental_ingest_dedup(store, batch, id_col, text)
     else:
@@ -270,7 +280,8 @@ def ingest_corpus_batch(
         bits = boot = None
         if store_ids <= covered and bloom_ids:
             bits = (
-                s.read.parquet(bloom_root)
+                s.read.schema("bit long, batch_id long")
+                .parquet(bloom_root)
                 .where(F.col("batch_id") != batch_id)
                 .select("bit")
                 .distinct()
@@ -296,10 +307,14 @@ def ingest_corpus_batch(
         # bloom_prefilter_ingest from the (empty) store scan. An empty
         # FRAME here would be a correctness bug — every row would read
         # bloom-negative and skip the exact check.
-        admitted = dedup.bloom_prefilter_ingest(
+        # the staged delivery (content hash, bloom_pass) in one scan of
+        # the batch, its lineage cut: the admit plan and both writes then
+        # plan over a batch-sized leaf, not the staging plan
+        flagged = dedup.bloom_prefilter_flags(
             store, batch, m_bits=bloom_m, k=bloom_k,
             id_col=id_col, text=text, bits=bits,
-        ).persist()
+        ).localCheckpoint()
+        admitted = dedup.bloom_admit(store, flagged, id_col=id_col, text=text).persist()
         (
             admitted.select(
                 F.explode(
@@ -317,6 +332,7 @@ def ingest_corpus_batch(
     )
     if bloom_m is not None:
         admitted.unpersist()
+        release_checkpoint(flagged)
 
 
 def stream_corpus_ingest(
@@ -516,8 +532,7 @@ def stream_rho_select(
     out_root: str,
     checkpoint_dir: str,
     schema,
-    base_model: tuple[DataFrame, DataFrame],
-    ref_model: tuple[DataFrame, DataFrame, DataFrame],
+    model: tuple[DataFrame, DataFrame, DataFrame],
     cutoff: DataFrame,
     text: str = "text",
     id_col: str = "doc_id",
@@ -526,8 +541,9 @@ def stream_rho_select(
     """Streaming RHO-loss learnability selection — the serve-online
     half of the excess-perplexity split, symmetric with
     `stream_lm_score` and `stream_dsir_score`: every arriving document
-    delivery is scored by BOTH frozen LMs (the weak add-one base and
-    the strong Kneser-Ney reference), the per-token log-loss delta is
+    delivery is scored in one pass by the frozen Kneser-Ney triple
+    ``model`` (the strong reference) and its add-one projection (the
+    weak base), the per-token log-loss delta is
     thresholded against the FROZEN excess cutoff
     (`operators/lm.py:rho_excess_select_frozen`), and
     ``(doc_id, lang, ppl_base, ppl_ref, excess, kept)`` lands as
@@ -544,7 +560,7 @@ def stream_rho_select(
 
     def score(batch: DataFrame, batch_id: int) -> None:
         rho_excess_select_frozen(
-            batch, base_model, ref_model, cutoff,
+            batch, model, cutoff,
             lang=lang, text=text, doc_id=id_col,
         ).write.mode("overwrite").parquet(f"{out_root}/batch_id={batch_id}")
 

@@ -1049,3 +1049,20 @@ def test_ann_registry_recall_floor_sf001(spark):
             got.setdefault(r.query_id, set()).add(r.vec_id)
         hits = sum(len(got.get(q, set()) & t) for q, t in truth.items())
         assert hits / total >= floor, (name, hits, total)
+
+
+def test_dedup_clusters_leaves_nothing_persisted(spark, sf_dir):
+    """Two dedup_clusters calls persist nothing beyond what their live
+    results read: the shingle sets are not cached for the session, and
+    the label propagation releases every checkpoint but the final
+    labels, one per result frame."""
+    from crypto_data_pipeline_spark.plans.registry import load_with_extras
+
+    def persisted() -> set[int]:
+        return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
+    before = persisted()
+    fn = load_with_extras()["dedup_clusters"].fn
+    frames = [fn(spark, sf_dir) for _ in range(2)]
+    assert frames[0].count() == frames[1].count() > 0
+    assert len(persisted() - before) == len(frames)

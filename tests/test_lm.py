@@ -603,13 +603,22 @@ def test_approx_buckets_agree_with_exact(spark, sf_dir):
 def test_lm_plan_contract(spark, sf_dir):
     """Scale shape: the fitted model rides in as broadcasts, no
     row-at-a-time Python appears, and no cartesian product sneaks into
-    the scoring join."""
+    the scoring join. The served query reads the landed score table,
+    so the scoring join is the one `lm_scores` plans against the
+    entry's at-rest model."""
+    from crypto_data_pipeline_spark import serve_store
     from crypto_data_pipeline_spark.plans.registry import load_with_extras
+    from crypto_data_pipeline_spark.sources.tables import load_table
 
     df = load_with_extras()["lm_perplexity_buckets"].fn(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan
-    assert "CartesianProduct" not in plan
+    served = df._jdf.queryExecution().executedPlan().toString()
+    model = lm.load_lm_model(spark, serve_store._ENTRIES["lm_model"].tmp, with_cont=True)
+    scoring = lm.lm_scores(load_table(spark, sf_dir, "documents"), *model)
+    plan = scoring._jdf.queryExecution().executedPlan().toString()
+    for p in (served, plan):
+        assert "BatchEvalPython" not in p
+        assert "CartesianProduct" not in p
+    assert "Join" not in served  # the served query scores nothing
     assert "BroadcastHashJoin" in plan  # the model joins broadcast
 
 

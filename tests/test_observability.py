@@ -232,6 +232,7 @@ def test_profile_call_record_and_job_group(spark):
 
     rec = profile_call(spark, grouped, None)
     assert set(row) | {"build_jobs"} <= set(rec)
+    assert rec["py4j_calls"] > 0 and rec["plan_chars"] > 0
     assert rec["shuffle_bytes_written"] > 0 and rec["n_exchanges"] == 1
     assert rec["n_jobs"] >= 1 and rec["build_jobs"] == 0
     assert rec["wall"] >= rec["py_build"] >= 0.0

@@ -420,3 +420,75 @@ def test_funnel_ordered_steps_single_exchange(spark, sf_dir):
 
     q = load_with_extras()["funnel_ordered_steps"]
     assert exchange_count(q.fn(spark, sf_dir)) == 1
+
+
+def _nodes(plan):
+    """Every node of a physical plan, through AQE wrappers and into
+    cached relations' own plans; a reused exchange ran once, so it is
+    not walked again."""
+    cls = plan.getClass().getSimpleName()
+    if cls == "AdaptiveSparkPlanExec":
+        yield from _nodes(plan.executedPlan())
+        return
+    if cls.endswith("QueryStageExec"):
+        yield from _nodes(plan.plan())
+        return
+    if cls.startswith("Reused"):
+        return
+    yield plan
+    if cls == "InMemoryTableScanExec":
+        yield from _nodes(plan.relation().cachedPlan())
+    it = plan.children().iterator()
+    while it.hasNext():
+        yield from _nodes(it.next())
+
+
+def _scans(plan, needle: str) -> int:
+    """Parquet scans in ``plan`` of a path containing ``needle``."""
+    return sum(
+        n.getClass().getSimpleName() == "FileSourceScanExec"
+        and needle in n.relation().location().rootPaths().mkString(",")
+        for n in _nodes(plan)
+    )
+
+
+def test_ingest_stages_the_delivery_in_one_scan(spark, tmp_path, monkeypatch):
+    """A bloom-tier delivery is read once: every frame the ingest
+    writes or checkpoints scans the delivery's files at most once, so
+    the admit plan and both writes plan over the staged batch, not over
+    the delivery again."""
+    from pyspark.sql import DataFrameWriter
+
+    from crypto_data_pipeline_spark.streaming.ingest import ingest_corpus_batch
+
+    store = str(tmp_path / "store")
+    rows = [(i, f"document number {i} about topic {i % 7}") for i in range(40)]
+    for batch_id, part in enumerate((rows[:30], rows[20:])):
+        path = str(tmp_path / f"delivery{batch_id}.parquet")
+        spark.createDataFrame(part, "doc_id long, text string").write.parquet(path)
+        frames = []
+        delivery = spark.read.parquet(path)
+        for cls, name in ((DataFrameWriter, "parquet"), (type(delivery), "localCheckpoint")):
+            real = getattr(cls, name)
+
+            def spy(self, *a, _real=real, **kw):
+                frames.append(getattr(self, "_df", self))
+                return _real(self, *a, **kw)
+
+            monkeypatch.setattr(cls, name, spy)
+        ingest_corpus_batch(delivery, batch_id, store, bloom_m=1 << 12)
+        monkeypatch.undo()
+        scans = [_scans(f._jdf.queryExecution().executedPlan(), path) for f in frames]
+        assert max(scans) == 1, scans
+    assert spark.read.parquet(store).count() == 40
+
+
+def test_served_lm_reads_score_corpus_once(spark, sf_dir):
+    """With the LM entry served, the KN bucket query and the source
+    report read the landed per-doc scores: each scans the documents at
+    most once, and neither plans a union branch for unscored docs."""
+    for name in ("lm_perplexity_buckets_kn", "source_curation_report"):
+        SPECS[name].fn(spark, sf_dir).collect()  # the served entries
+        plan = SPECS[name].fn(spark, sf_dir)._jdf.queryExecution().executedPlan()
+        assert _scans(plan, "documents.parquet") <= 1, name
+        assert all(n.getClass().getSimpleName() != "UnionExec" for n in _nodes(plan)), name

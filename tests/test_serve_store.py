@@ -26,7 +26,6 @@ ENTRY_QUERIES = {
     "silver": ("events", "monthly_avg_price"),
     "lm_model": ("documents", "lm_perplexity_buckets_kn"),
     "src_report": ("documents", "source_curation_report"),
-    "rho_scored": ("documents", "rho_excess_perplexity_select"),
     "dsir": ("documents", "dsir_importance_resample"),
     "nb_model": ("documents", "nb_lang_classifier"),
     "sig_store": ("documents", "dedup_minhash_incremental"),

@@ -1029,9 +1029,7 @@ def test_stream_rho_select_matches_batch_across_delivery_orders(spark, tmp_path)
     serve = spark.createDataFrame(serve_rows, schema)
     want = {
         tuple(r)
-        for r in lm_ops.rho_excess_select_frozen(
-            serve, base_model, ref_model, cutoff
-        ).collect()
+        for r in lm_ops.rho_excess_select_frozen(serve, ref_model, cutoff).collect()
     }
     assert {t[0] for t in want} == {r[0] for r in serve_rows}  # nothing vanishes
     by_id = {t[0]: t for t in want}
@@ -1051,7 +1049,7 @@ def test_stream_rho_select_matches_batch_across_delivery_orders(spark, tmp_path)
         for part in parts:
             spark.createDataFrame(part, schema).write.mode("append").parquet(bronze)
             q = stream_rho_select(
-                spark, bronze, out, ckpt, schema, base_model, ref_model, cutoff
+                spark, bronze, out, ckpt, schema, ref_model, cutoff
             )
             q.awaitTermination()
         got = {
@@ -1065,7 +1063,7 @@ def test_stream_rho_select_matches_batch_across_delivery_orders(spark, tmp_path)
     # same checkpoint, nothing new -> no-op
     q = stream_rho_select(
         spark, str(tmp_path / "rho_bronze_0"), str(tmp_path / "rho_out_0"),
-        str(tmp_path / "rho_ckpt_0"), schema, base_model, ref_model, cutoff,
+        str(tmp_path / "rho_ckpt_0"), schema, ref_model, cutoff,
     )
     q.awaitTermination()
     got = {
