@@ -40,10 +40,11 @@ def connected_components(
     exactly ONE job: the new label table is marked for a lazy
     ``localCheckpoint`` and the changed-label count is aggregated over
     it — that single action both materializes the checkpoint and
-    returns the convergence scalar. Each superseded label checkpoint
-    and, at convergence, the edge checkpoint are released at once; the
-    result reads only the final labels. Raises if ``max_iter`` rounds
-    aren't enough, rather than silently returning half-merged clusters.
+    returns the convergence scalar. Each superseded label checkpoint is
+    released at once, and the edge checkpoint on every exit; the result
+    reads only the final labels. Raises if ``max_iter`` rounds aren't
+    enough, rather than silently returning half-merged clusters, and
+    then releases the last labels too.
 
     Symmetrization is ONE explode over the edge list, not a
     two-branch union: Catalyst does not share subtrees across union
@@ -66,30 +67,35 @@ def connected_components(
     labels = sym.select(F.col("s").alias("v")).distinct().withColumn("lbl", F.col("v"))
 
     prev = None
-    for _ in range(max_iter):
-        msgs = sym.join(labels, sym.s == labels.v).select(
-            F.col("d").alias("v"), F.col("lbl"), F.lit(None).cast("long").alias("old")
-        )
-        mine = labels.select("v", "lbl", F.col("lbl").alias("old"))
-        # min(old) recovers each vertex's previous label (msgs carry
-        # null old); lbl < old marks a change — no second join needed.
-        cp = (
-            mine.unionByName(msgs)
-            .groupBy("v")
-            .agg(F.min("lbl").alias("lbl"), F.min("old").alias("old"))
-            .withColumn("chg", (F.col("lbl") < F.col("old")).cast("long"))
-            .localCheckpoint(eager=False)
-        )
-        # sum() over an empty label table is NULL — an empty edge set
-        # is already converged, not a 25-round timeout
-        n_changed = cp.agg(F.sum("chg")).collect()[0][0] or 0
-        if prev is not None:  # the new labels are materialized
+    try:
+        for _ in range(max_iter):
+            msgs = sym.join(labels, sym.s == labels.v).select(
+                F.col("d").alias("v"), F.col("lbl"), F.lit(None).cast("long").alias("old")
+            )
+            mine = labels.select("v", "lbl", F.col("lbl").alias("old"))
+            # min(old) recovers each vertex's previous label (msgs carry
+            # null old); lbl < old marks a change — no second join needed.
+            cp = (
+                mine.unionByName(msgs)
+                .groupBy("v")
+                .agg(F.min("lbl").alias("lbl"), F.min("old").alias("old"))
+                .withColumn("chg", (F.col("lbl") < F.col("old")).cast("long"))
+                .localCheckpoint(eager=False)
+            )
+            # sum() over an empty label table is NULL — an empty edge set
+            # is already converged, not a 25-round timeout
+            n_changed = cp.agg(F.sum("chg")).collect()[0][0] or 0
+            if prev is not None:  # the new labels are materialized
+                release_checkpoint(prev)
+            prev, labels = cp, cp.select("v", "lbl")
+            if n_changed == 0:
+                prev = None  # the result reads these labels
+                return labels.select("v", F.col("lbl").alias("component"))
+        raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
+    finally:
+        release_checkpoint(sym)
+        if prev is not None:
             release_checkpoint(prev)
-        prev, labels = cp, cp.select("v", "lbl")
-        if n_changed == 0:
-            release_checkpoint(sym)
-            return labels.select("v", F.col("lbl").alias("component"))
-    raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
 
 
 def connected_components_star(

@@ -33,8 +33,13 @@ def test_cycle_and_duplicate_edges(spark):
 
 
 def test_nonconvergence_raises(spark):
+    """A loop that runs out of rounds raises and releases the edge and
+    label checkpoints it made."""
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
     with pytest.raises(RuntimeError, match="did not converge"):
         _cc(spark, [(i, i + 1) for i in range(30)], max_iter=2)
+    assert jsc.getPersistentRDDs().size() == before
 
 
 def test_cc_loops_leave_session_conf_alone(spark, conf_sets):

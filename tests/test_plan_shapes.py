@@ -492,3 +492,18 @@ def test_served_lm_reads_score_corpus_once(spark, sf_dir):
         plan = SPECS[name].fn(spark, sf_dir)._jdf.queryExecution().executedPlan()
         assert _scans(plan, "documents.parquet") <= 1, name
         assert all(n.getClass().getSimpleName() != "UnionExec" for n in _nodes(plan)), name
+
+
+def test_ngram_pairs_shingle_the_corpus_once(spark, sf_dir):
+    """The exact n-gram pairs shingle the documents once with nothing
+    cached: the executed plan scans them once and builds the shingles in
+    one Generate, whose window shuffle the two prefix sides and the
+    verify pruning reuse."""
+    df = SPECS["dedup_ngram_jaccard"].fn(spark, sf_dir)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    nodes = [(n.getClass().getSimpleName(), n) for n in _nodes(plan)]
+    assert _scans(plan, "documents.parquet") == 1
+    generators = [n.generator().toString() for c, n in nodes if c == "GenerateExec"]
+    assert sum("concat_ws" in g for g in generators) == 1  # word_shingles' join
+    assert not any(c == "InMemoryTableScanExec" for c, _ in nodes)
