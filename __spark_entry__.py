@@ -45,8 +45,7 @@ def oracle_sql() -> dict[str, str]:
     stateful streaming sessionizer (integer session frame), the LSH
     ANN path (deterministic hyperplanes inlined as SQL literals), and
     the engine-portable MinHash-LSH / simhash / fixed-quantizer IVF
-    pipelines (driver-seated since round 7; the xxhash64/KMeans fast
-    paths remain the production defaults as bench-flagged extras).
+    pipelines (the KMeans fast path is a bench-flagged extra).
     As of round 11 every driver entry has an oracle — the one
     rows-only query (model_comparison, the iterative ML model zoo) was
     rotated to an extra, its values pinned by the hash-green

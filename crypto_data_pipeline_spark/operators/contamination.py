@@ -111,7 +111,7 @@ def decontaminate_stream(
 
     return (
         corpus.withColumn("_tk", tokens(text))
-        .withColumn("_sh", word_shingles(k=n, toks=F.col("_tk")))
+        .withColumn("_sh", word_shingles(k=n))
         .drop("_tk")
         .mapInPandas(keep_clean, schema)
     )

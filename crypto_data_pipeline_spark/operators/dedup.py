@@ -3,19 +3,28 @@
 Five families, from exact to fuzzy:
 
   * exact       — md5 over normalized text, hash-groupBy (one shuffle).
-  * minhash+LSH — shingle → minhash signature → band → bucket join →
-                  candidate pairs → exact-Jaccard verify.
-  * simhash     — 64-bit sign-of-weighted-bits fingerprint; near-dup =
-                  small Hamming distance, banded for bucketing.
+  * minhash+LSH — shingle → polynomial shingle hashes → (a·x+b) mod P
+                  signature → band → bucket groupBy → candidate pairs
+                  → exact-Jaccard verify.
+  * simhash     — 60-bit Charikar sketch, bit = majority vote over the
+                  tokens' hash bits; near-dup = Hamming ≤ 3, banded
+                  into 15-bit keys for bucketing.
   * n-gram Jaccard — exact verified similarity on candidate pairs.
   * embedding cosine — see similarity.py.
 
+One pipeline per sketch, and each is exact int64 arithmetic that
+DuckDB reproduces bit for bit, so the lossy stages hash-check against
+their SQL twins in plans/extension_queries.py. The sketch expressions
+are SQL text parsed by one `F.expr` each: a 32-row signature costs one
+driver round trip to build, where the equivalent Column tree costs
+hundreds.
+
 Scale design: nothing here ever materializes an O(n²) cross product.
-Candidate generation is always a shuffle-on-bucket-key equi-join (LSH
-bands / simhash bands), so cost is O(sum of bucket sizes²) — the
-standard web-scale dedup layout (MinHashLSH as in Broder '97 /
-the Spark MLlib MinHashLSH design, re-expressed with higher-order
-array functions so signatures stay inside codegen).
+Candidate generation is always a shuffle on a bucket key (LSH bands /
+simhash bands), so cost is O(sum of bucket sizes²) — the standard
+web-scale dedup layout (MinHashLSH as in Broder '97 / the Spark MLlib
+MinHashLSH design, re-expressed with higher-order array functions so
+signatures never leave the JVM).
 """
 
 from __future__ import annotations
@@ -24,8 +33,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from crypto_data_pipeline_spark.exprcache import memo_expr
-from crypto_data_pipeline_spark.operators.text import normalized, tokens
+from crypto_data_pipeline_spark.operators.sampling import spark_sql_avalanche_bucket
+from crypto_data_pipeline_spark.operators.text import normalized, tokens, tokens_sql
 
 
 # ---------------------------------------------------------------------------
@@ -78,247 +87,38 @@ def exact_dedup_prioritized(
 # ---------------------------------------------------------------------------
 # shingles + minhash
 
+PORTABLE_MOD = 2147483647  # 2^31 - 1: products of two residues fit int64
+PORTABLE_BASE = 131
 
-def word_shingles(text: str = "text", k: int = 3, toks: Column | None = None) -> Column:
-    """Distinct k-word shingles of the normalized text (k-shingling as
-    in Broder's resemblance paper). Short docs (<k words) contribute
-    their whole text as one shingle.
 
-    Pass ``toks`` as a STAGED column (a bare attribute reference) when
-    calling from a DataFrame builder: an outer EXPRESSION referenced
-    inside the slice lambda is re-evaluated per element (no CSE inside
-    higher-order functions), so the inline default re-tokenizes the
-    document once per shingle — O(len^2)."""
-    toks = tokens(text) if toks is None else toks
-    n = F.size(toks)
-    shingled = F.transform(
-        F.sequence(F.lit(0), n - k),
-        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)),
+def _shingles_sql(toks: str, k: int) -> str:
+    """SQL text of the distinct k-word shingles of the token-array
+    column ``toks``. A document of fewer than k words is one shingle,
+    its whole text."""
+    return (
+        f"array_distinct(CASE WHEN size({toks}) >= {k} "
+        f"THEN transform(sequence(0, size({toks}) - {k}), "
+        f"i -> concat_ws(' ', slice({toks}, i + 1, {k}))) "
+        f"ELSE array(concat_ws(' ', {toks})) END)"
     )
-    return F.array_distinct(F.when(n >= k, shingled).otherwise(F.array(F.concat_ws(" ", toks))))
+
+
+def word_shingles(toks: str = "_tk", k: int = 3) -> Column:
+    """Distinct k-word shingles (k-shingling as in Broder's resemblance
+    paper) of a STAGED token-array column, e.g. ``tokens(text)``
+    selected as ``_tk``. Stage it: an expression in its place would be
+    re-evaluated once per shingle inside the slice lambda, because
+    higher-order-function lambdas get no common-subexpression
+    elimination."""
+    return F.expr(_shingles_sql(toks, k))
 
 
 def shingle_sets(df: DataFrame, id_col: str = "doc_id", text: str = "text", k: int = 3) -> DataFrame:
     """(id, sh) — each doc's distinct shingle set, materialized ONCE as
-    a projection stage. Downstream signature/verify operators consume
-    the `sh` column instead of re-deriving the shingle expression (an
-    expression tree repeated n_hashes× defeats codegen CSE and was the
-    dominant cost in the first cut of this operator)."""
+    a projection stage, so downstream operators consume the `sh`
+    column instead of re-deriving the shingle expression."""
     staged = df.select(F.col(id_col).alias("id"), tokens(text).alias("_tk"))
-    return staged.select(
-        "id", word_shingles(k=k, toks=F.col("_tk")).alias("sh")
-    )
-
-
-def _rotl(h: Column, r: int) -> Column:
-    return F.shiftleft(h, r).bitwiseOR(F.shiftrightunsigned(h, 64 - r))
-
-
-def hashed_shingle_sets(df: DataFrame, id_col: str = "doc_id", text: str = "text", k: int = 3) -> DataFrame:
-    """(id, hs: array<long>) — distinct k-shingle HASHES, string-free.
-
-    Profiling showed string shingle construction (slice + concat_ws per
-    window position) dominating the minhash pipeline. Here each token
-    is xxhash64'd once, and a shingle hash is the XOR of the k token
-    hashes under position-distinct rotations (order-sensitive, no
-    string materialization). ~3× cheaper than string shingling and the
-    downstream minhash consumes longs directly."""
-    # expression fragments memoized per session (exprcache): identical
-    # trees over the named refs, rebuilt 0 times instead of per call
-    th = memo_expr(
-        ("dedup.token_hashes", text),
-        lambda: F.transform(tokens(text), lambda t: F.xxhash64(t)),
-    )
-    staged = df.select(F.col(id_col).alias("id"), th.alias("th"))
-
-    def build_hs() -> Column:
-        t_col = F.col("th")
-        n = F.size(t_col)
-
-        def shingle_hash(i: Column) -> Column:
-            h = _rotl(F.element_at(t_col, i + 1), k - 1)
-            for j in range(1, k):
-                e = F.element_at(t_col, i + j + 1)
-                h = h.bitwiseXOR(_rotl(e, k - 1 - j) if k - 1 - j > 0 else e)
-            return h
-
-        whole_doc = F.aggregate(
-            t_col, F.lit(0).cast("long"), lambda a, x: _rotl(a, 1).bitwiseXOR(x)
-        )
-        hs = F.when(
-            n >= k, F.transform(F.sequence(F.lit(0), n - k), shingle_hash)
-        ).otherwise(F.array(whole_doc))
-        return F.array_distinct(hs)
-
-    return staged.select("id", memo_expr(("dedup.xx_shingles", k), build_hs).alias("hs"))
-
-
-def _perm_masks(num_hashes: int) -> list[int]:
-    """Deterministic 64-bit XOR masks (golden-ratio multiples, signed)."""
-    out = []
-    for j in range(num_hashes):
-        m = (0x9E3779B97F4A7C15 * (j + 1)) & 0xFFFFFFFFFFFFFFFF
-        out.append(m - (1 << 64) if m >= (1 << 63) else m)
-    return out
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 32) -> Column:
-    """num_hashes-long minhash signature.
-
-    Cost design: the expensive operation is string hashing, so each
-    shingle is xxhash64'd ONCE; the num_hashes "permutations" are cheap
-    XOR bijections of that base hash (h_j = min over shingles of
-    base ^ mask_j) — the standard one-hash + universal-permutation
-    minhash family. Arrays + higher-order functions only; the whole
-    signature never leaves the JVM. Pass a *column reference* (e.g.
-    from shingle_sets), not a derived expression."""
-    hashed = F.transform(shingles, lambda s: F.xxhash64(s))
-    return _signature_from_hashes(hashed, num_hashes)
-
-
-def _signature_from_hashes(hashed: Column, num_hashes: int) -> Column:
-    # Deliberately unrolled per mask: a nested HOF over a literal mask
-    # array benches 2-4x slower here (lambda-variable dispatch per
-    # element), while the unrolled form stays in codegen.
-    #
-    # The mask MUST be bound through a closure (helper function), not a
-    # `lambda h, m=m:` default argument: PySpark dispatches HOF lambdas
-    # on PARAMETER COUNT, so a two-parameter lambda is the
-    # (element, index) form and the "default" m silently becomes the
-    # array index — every mask then computes the identical
-    # min(h ^ position) and the signature degenerates to 32 copies of
-    # one mask-free value (LSH collapses to near-exact matching; found
-    # by tools/dedup_scale_probe.py when non-identical planted
-    # near-dups stopped colliding).
-    def min_under_mask(m: int) -> Column:
-        return F.array_min(F.transform(hashed, lambda h: h.bitwiseXOR(F.lit(m))))
-
-    return F.array(*[min_under_mask(m) for m in _perm_masks(num_hashes)])
-
-
-def lsh_band_buckets(
-    sets: DataFrame, num_hashes: int = 32, bands: int = 8
-) -> DataFrame:
-    """(band_idx, band_hash, ids): the banding's bucket frame BEFORE
-    the hot-bucket cap — one signature pass, one shuffle on the band
-    key. lsh_candidate_pairs consumes it (filtered to 2..max_bucket
-    and pair-expanded); tools/dedup_scale_probe.py reads its size
-    histogram directly so cap engagement is a measured artifact, not
-    an inference from the dropped pairs."""
-    assert num_hashes % bands == 0
-    r = num_hashes // bands
-    sig = memo_expr(
-        ("dedup.xx_signature", num_hashes),
-        lambda: _signature_from_hashes(F.col("hs"), num_hashes),
-    )
-    band_arr = memo_expr(
-        ("dedup.xx_bands", num_hashes, bands),
-        lambda: F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_idx"),
-                        F.xxhash64(F.slice(F.col("sig"), b * r + 1, r)).alias("band_hash"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ),
-    )
-    banded = (
-        sets.select(F.col("id"), sig.alias("sig"))
-        .select("id", band_arr.alias("band"))
-        .select("id", "band.band_idx", "band.band_hash")
-    )
-    return banded.groupBy("band_idx", "band_hash").agg(
-        F.array_sort(F.collect_set("id")).alias("ids")
-    )
-
-
-def lsh_candidate_pairs(
-    sets: DataFrame,
-    num_hashes: int = 32,
-    bands: int = 8,
-    max_bucket: int = 200,
-) -> DataFrame:
-    """MinHash-LSH banding: split the signature into `bands` bands of
-    r = num_hashes/bands rows, hash each band, shuffle on
-    (band_idx, band_hash), emit intra-bucket pairs (a < b).
-
-    One signature pass + ONE shuffle: buckets are built with
-    groupBy/collect_set and pairs expanded with array combinatorics —
-    no self-join, so the (expensive) signature expression evaluates
-    once per doc, not twice. Buckets larger than `max_bucket` are
-    dropped (LSH hot-bucket guard: a degenerate bucket of size B costs
-    O(B²) pairs; at web scale a stopword-like shingle pattern would
-    otherwise dominate the whole job — the standard cap-and-drop
-    mitigation).
-
-    `sets` is a hashed_shingle_sets() frame (id, hs). Returns distinct
-    (id_a, id_b)."""
-    buckets = lsh_band_buckets(sets, num_hashes, bands).where(
-        (F.size("ids") >= 2) & (F.size("ids") <= max_bucket)
-    )
-    pairs = buckets.select(_pair_expansion().alias("p"))
-    return pairs.select("p.id_a", "p.id_b").distinct()
-
-
-def _pair_expansion() -> Column:
-    """Upper-triangular pair explosion of a sorted ``ids`` array —
-    shared (and session-memoized) by both banding pipelines."""
-    return memo_expr(
-        ("dedup.pair_expansion",),
-        lambda: F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("ids"),
-                    lambda x, i: F.transform(
-                        F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
-                        lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-                    ),
-                )
-            )
-        ),
-    )
-
-
-def jaccard_verified_pairs(
-    sets: DataFrame,
-    candidates: DataFrame,
-    threshold: float = 0.7,
-) -> DataFrame:
-    """Exact n-gram Jaccard on candidate pairs.
-
-    Jaccard is computed over the hashed shingle sets (id, hs) — set
-    semantics are identical up to (negligible) 64-bit hash collisions.
-    Pass a `sets` frame already pruned to the candidate ids (see
-    minhash_dedup_pairs) — both pair sides broadcast it. The hint is
-    deliberate and BOUNDED, unlike an entity-proportional frame: the
-    broadcast side is capped by the LSH bucket cap (max_bucket rows
-    per band bucket) and, in the production staged pipeline, by
-    exact-dedup running first — the candidate-id set is the near-dup
-    frontier, not the corpus. Callers feeding unpruned sets at scale
-    should drop to the plain join and let AQE measure."""
-    out = (
-        candidates.join(
-            F.broadcast(sets.withColumnRenamed("id", "id_a").withColumnRenamed("hs", "hs_a")), "id_a"
-        )
-        .join(F.broadcast(sets.withColumnRenamed("id", "id_b").withColumnRenamed("hs", "hs_b")), "id_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("hs_a", "hs_b")).cast("double")
-            / F.size(F.array_union("hs_a", "hs_b")),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-    )
-    return out
-
-
-# --- portable MinHash twin: every stage reproducible in ANSI-ish SQL ---
-
-PORTABLE_MOD = 2147483647  # 2^31 - 1: products of two residues fit int64
-PORTABLE_BASE = 131
+    return staged.select("id", word_shingles(k=k).alias("sh"))
 
 
 def portable_minhash_params(num_hashes: int, seed: int = 7) -> list[tuple[int, int]]:
@@ -344,41 +144,33 @@ def _poly_fold(arr: Column) -> Column:
     )
 
 
+def _poly_fold_sql(arr: str) -> str:
+    """SQL text of `_poly_fold`: (h·131 + x) mod 2^31-1 over ``arr``."""
+    return f"aggregate({arr}, 0L, (h, x) -> (h * {PORTABLE_BASE} + x) % {PORTABLE_MOD})"
+
+
+def _char_hash_sql(s: str) -> str:
+    """SQL text of the polynomial char hash of the string ``s``."""
+    return _poly_fold_sql(f"transform(split({s}, ''), c -> ascii(c))")
+
+
 def portable_hashed_shingle_sets(
     df: DataFrame, id_col: str = "doc_id", text: str = "text", k: int = 3
 ) -> DataFrame:
     """(id, hs): distinct word-k-shingle hashes under the polynomial
     char hash (h·131 + codepoint) mod 2^31-1 — exact integer arithmetic
     both engines execute bit-identically (the same family the rolling
-    fingerprint proves portable). The CHECKABLE twin of
-    hashed_shingle_sets' xxhash64 fast path.
+    fingerprint proves portable).
 
-    Deliberately NO ``fan_out`` here (round 13, measured): unlike the
-    simhash pipelines (one signature pass, 47s single-task), this
-    frame's consumers either persist it once (the curation signature
-    stage) or re-derive it on BOTH sides of the banding self-join per
-    call — adding the adaptive repartition made dedup_minhash_portable
-    ~3x WORSE on CPU (8.2 → 22.5 CPU-s steady at sf0.1: a full-text
-    shuffle per call per branch) for no wall gain."""
-    # two staging hops (tokens, then shingles) so neither array
-    # expression re-evaluates inside a downstream lambda; each hop's
-    # expression is session-memoized (exprcache)
-    tk = memo_expr(("text.tokens", text), lambda: tokens(text))
-    staged = df.select(F.col(id_col).alias("id"), tk.alias("_tk"))
-    sh = memo_expr(
-        ("dedup.port_shingles", k), lambda: word_shingles(k=k, toks=F.col("_tk"))
-    )
-    staged = staged.select("id", sh.alias("_sh"))
-    hs = memo_expr(
-        ("dedup.port_shingle_hashes",),
-        lambda: F.array_distinct(
-            F.transform(
-                F.col("_sh"),
-                lambda s: _poly_fold(F.transform(F.split(s, ""), F.ascii)),
-            )
-        ),
-    )
-    return staged.select("id", hs.alias("hs"))
+    Deliberately NO ``fan_out`` here: this frame's consumers either
+    persist it once (the curation signature stage) or derive it under
+    both the banding branch and the verify join per call, where an
+    adaptive repartition costs a full-text shuffle per branch
+    (measured 8.2 → 22.5 CPU-s steady at sf0.1) for no wall gain."""
+    # tokens are staged: the shingle lambda reads `_tk` per position
+    staged = df.select(F.col(id_col).alias("id"), tokens(text).alias("_tk"))
+    hs = f"array_distinct(transform({_shingles_sql('_tk', k)}, s -> {_char_hash_sql('s')}))"
+    return staged.select("id", F.expr(hs).alias("hs"))
 
 
 def portable_minhash_signatures(
@@ -388,33 +180,102 @@ def portable_minhash_signatures(
     shingle_k: int = 3,
     num_hashes: int = 16,
 ) -> DataFrame:
-    """(id, hs, sig): the per-document COMPUTE stage of the portable
-    MinHash pipeline — distinct shingle hashes plus the num_hashes
-    (a·x+b) mod P signature — factored out of
-    `minhash_dedup_pairs_portable` (round 12; VERDICT r11 next #6) so
-    that (a) the scale probe can attribute the near-dup stage's cost
-    between signature compute, the band shuffle, and verification,
-    and (b) callers can land this frame AT REST keyed by content and
-    reuse it across re-curations: the signature is a pure function of
-    the text, so an incremental pipeline recomputes it only for novel
-    documents instead of re-paying the per-corpus compute (stage
-    attribution measured in docs/SCALE_PROBE.md, round 12)."""
+    """(id, hs, sig): the per-document COMPUTE stage of the MinHash
+    pipeline — distinct shingle hashes plus the num_hashes-row
+    (a·x+b) mod P signature. A frame of its own so that (a) the scale
+    probes attribute the near-dup stage's cost between signature
+    compute, the band shuffle and verification, and (b) callers can
+    land it AT REST and pass it back through ``signatures=``: the
+    signature is a pure function of the text, so an incremental
+    re-curation signs only novel documents (docs/SCALE_PROBE.md)."""
     sets = portable_hashed_shingle_sets(df, id_col, text, shingle_k)
+    sig = ", ".join(
+        f"array_min(transform(hs, h -> (h * {a} + {b}) % {PORTABLE_MOD}))"
+        for a, b in portable_minhash_params(num_hashes)
+    )
+    return sets.select("id", "hs", F.expr(f"array({sig})").alias("sig"))
 
-    def build_sig() -> Column:
-        params = portable_minhash_params(num_hashes)
 
-        def affine(a: int, b: int):
-            # closure factory, NOT default-arg lambdas: pyspark reads
-            # the function's parameter count as the HOF lambda arity
-            return lambda h: (h * a + b) % F.lit(PORTABLE_MOD)
+def portable_lsh_band_buckets(
+    signatures: DataFrame, num_hashes: int = 16, bands: int = 4
+) -> DataFrame:
+    """(band_idx, band_hash, ids): the banding's buckets BEFORE the
+    hot-bucket cap — polynomial keys of the r = num_hashes/bands rows
+    of each band over the (id, sig) frame, one groupBy on
+    (band_idx, band_hash). tools/dedup_scale_probe.py reads its size
+    histogram, so cap engagement is a measured artifact."""
+    if num_hashes % bands:
+        raise ValueError("num_hashes must divide into equal bands")
+    r = num_hashes // bands
+    keys = ", ".join(
+        f"named_struct('band_idx', {b}, 'band_hash', "
+        f"{_poly_fold_sql(f'slice(sig, {b * r + 1}, {r})')})"
+        for b in range(bands)
+    )
+    return (
+        signatures.select("id", F.expr(f"inline(array({keys}))"))
+        .groupBy("band_idx", "band_hash")
+        .agg(F.array_sort(F.collect_set("id")).alias("ids"))
+    )
 
-        return F.array(
-            *[F.array_min(F.transform(F.col("hs"), affine(a, b))) for a, b in params]
+
+# the upper-triangular pairs (id_a < id_b) of a sorted `ids` array
+_PAIRS_SQL = (
+    "inline(flatten(transform(ids, (x, i) -> transform(slice(ids, i + 2, size(ids)), "
+    "y -> named_struct('id_a', x, 'id_b', y)))))"
+)
+
+
+def portable_lsh_candidate_pairs(
+    signatures: DataFrame,
+    num_hashes: int = 16,
+    bands: int = 4,
+    max_bucket: int = 200,
+) -> DataFrame:
+    """The SHUFFLE stage of the MinHash pipeline: distinct
+    (id_a, id_b) pairs sharing a band bucket. One signature pass and
+    ONE shuffle — buckets are a groupBy/collect_set and pairs expand
+    with array combinatorics, no self-join. Buckets larger than
+    ``max_bucket`` are dropped (the LSH hot-bucket guard: a bucket of
+    B ids costs O(B²) pairs, and at web scale a stopword-like shingle
+    pattern would otherwise dominate the whole job)."""
+    buckets = portable_lsh_band_buckets(signatures, num_hashes, bands).where(
+        (F.size("ids") >= 2) & (F.size("ids") <= max_bucket)
+    )
+    return buckets.select(F.expr(_PAIRS_SQL)).distinct()
+
+
+def jaccard_verified_pairs(
+    sets: DataFrame,
+    candidates: DataFrame,
+    threshold: float = 0.7,
+) -> DataFrame:
+    """Exact n-gram Jaccard on candidate pairs.
+
+    Jaccard is computed over the hashed shingle sets (id, hs) — set
+    semantics are identical up to (negligible) shingle-hash collisions.
+    Pass a `sets` frame already pruned to the candidate ids (see
+    minhash_dedup_pairs_portable) — both pair sides broadcast it. The
+    hint is deliberate and BOUNDED, unlike an entity-proportional
+    frame: the broadcast side is capped by the LSH bucket cap
+    (max_bucket rows per band bucket) and, in the staged pipeline, by
+    exact-dedup running first — the candidate-id set is the near-dup
+    frontier, not the corpus. Callers feeding unpruned sets at scale
+    should drop to the plain join and let AQE measure."""
+    out = (
+        candidates.join(
+            F.broadcast(sets.withColumnRenamed("id", "id_a").withColumnRenamed("hs", "hs_a")), "id_a"
         )
-
-    sig = memo_expr(("dedup.port_signature", num_hashes), build_sig)
-    return sets.select("id", "hs", sig.alias("sig"))
+        .join(F.broadcast(sets.withColumnRenamed("id", "id_b").withColumnRenamed("hs", "hs_b")), "id_b")
+        .withColumn(
+            "jaccard",
+            F.size(F.array_intersect("hs_a", "hs_b")).cast("double")
+            / F.size(F.array_union("hs_a", "hs_b")),
+        )
+        .where(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+    )
+    return out
 
 
 def minhash_dedup_pairs_portable(
@@ -428,21 +289,19 @@ def minhash_dedup_pairs_portable(
     max_bucket: int = 200,
     signatures: DataFrame | None = None,
 ) -> DataFrame:
-    """MinHash-LSH near-dup pairs with EVERY stage engine-portable:
-    polynomial shingle hashes, (a·x+b) mod P signature rows, polynomial
-    band keys, bucket pairing, exact-Jaccard verify — so the whole
-    lossy pipeline (not just its exactness baseline) hash-checks
-    against a DuckDB oracle. Same one-shuffle banding plan as the
-    xxhash64 fast path (lsh_candidate_pairs); the fast path remains
-    the production default, this twin is the differential proof.
+    """MinHash-LSH near-dup pairs (Broder '97), exact-Jaccard verified
+    at ``threshold``: polynomial shingle hashes, (a·x+b) mod P
+    signature rows, polynomial band keys, one capped bucket groupBy,
+    then Jaccard over the candidate documents only. Every stage is
+    exact integer arithmetic, so the DuckDB twin
+    (plans/extension_queries.py:_portable_minhash_oracle) reproduces
+    the whole lossy pipeline and hash-checks it. Nothing is persisted.
 
     ``signatures``: a precomputed `portable_minhash_signatures` frame
     (id, hs, sig) — pass it to serve signatures from rest/cache
     instead of recomputing the corpus (the incremental re-curation
     path; it must have been built with the SAME shingle_k/num_hashes,
     which the caller owns since the frame may come from storage)."""
-    # no persist: the twin recomputes the (cheap at check SF) shingle
-    # pass rather than managing cache lifecycle inside a library call
     sigs = (
         signatures
         if signatures is not None
@@ -450,85 +309,10 @@ def minhash_dedup_pairs_portable(
     )
     sets = sigs.select("id", "hs")
     pairs = portable_lsh_candidate_pairs(sigs, num_hashes, bands, max_bucket)
-    # prune verification to candidate docs only, as in minhash_dedup_pairs
+    # verification reads only the candidate docs' shingle sets
     cand_ids = pairs.select(F.explode(F.array("id_a", "id_b")).alias("_cid")).distinct()
     pruned = sets.join(F.broadcast(cand_ids), F.col("id") == F.col("_cid"), "left_semi")
     return jaccard_verified_pairs(pruned, pairs, threshold)
-
-
-def portable_lsh_candidate_pairs(
-    signatures: DataFrame,
-    num_hashes: int = 16,
-    bands: int = 4,
-    max_bucket: int = 200,
-) -> DataFrame:
-    """The SHUFFLE stage of the portable pipeline, factored out
-    (round 12) so the probe attributes band-join cost separately from
-    signature compute and verification: polynomial band keys over the
-    (id, sig) frame, one groupBy on (band_idx, band_hash), hot buckets
-    capped, upper-triangular pair explosion, distinct."""
-    if num_hashes % bands:
-        raise ValueError("num_hashes must divide into equal bands")
-    r = num_hashes // bands
-    band_arr = memo_expr(
-        ("dedup.port_bands", num_hashes, bands),
-        lambda: F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_idx"),
-                        _poly_fold(F.slice(F.col("sig"), b * r + 1, r)).alias("band_hash"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ),
-    )
-    banded = (
-        signatures.select("id", "sig")
-        .select("id", band_arr.alias("band"))
-        .select("id", "band.band_idx", "band.band_hash")
-    )
-    buckets = (
-        banded.groupBy("band_idx", "band_hash")
-        .agg(F.array_sort(F.collect_set("id")).alias("ids"))
-        .where((F.size("ids") >= 2) & (F.size("ids") <= max_bucket))
-    )
-    return buckets.select(_pair_expansion().alias("p")).select(
-        "p.id_a", "p.id_b"
-    ).distinct()
-
-
-def minhash_dedup_pairs(
-    df: DataFrame,
-    threshold: float = 0.7,
-    id_col: str = "doc_id",
-    text: str = "text",
-    shingle_k: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-) -> DataFrame:
-    """End-to-end MinHash-LSH near-dup detection: shingle once, LSH
-    candidates, exact-Jaccard verification at `threshold`."""
-    from crypto_data_pipeline_spark.sources.tables import fan_out
-
-    sets = hashed_shingle_sets(fan_out(df), id_col, text, shingle_k)
-    # candidates are a tiny pair list but an expensive plan (the full
-    # minhash pipeline); they are consumed three times downstream (id
-    # census + two pair-join sides) — persist so the signature pass
-    # runs once. (Round 13 re-measured the persist-free alternative —
-    # ReusedExchange does NOT reliably dedupe the subtree across the
-    # broadcast consumer, walls 0.84 → 1.7-2.5s — so the persist
-    # stays.)
-    cands = lsh_candidate_pairs(sets, num_hashes, bands).persist()
-    # prune the RAW docs to candidate ids BEFORE shingling (a semi-join
-    # cannot be pushed below the shingle projection by the optimizer),
-    # so verification re-shingles only the handful of candidate docs,
-    # never the corpus
-    cand_ids = cands.select(F.explode(F.array("id_a", "id_b")).alias("_cid")).distinct()
-    pruned_docs = df.join(F.broadcast(cand_ids), F.col(id_col) == F.col("_cid"), "left_semi")
-    pruned_sets = hashed_shingle_sets(pruned_docs, id_col, text, shingle_k).persist()
-    return jaccard_verified_pairs(pruned_sets, cands, threshold=threshold)
 
 
 def ngram_jaccard_pairs(
@@ -538,10 +322,9 @@ def ngram_jaccard_pairs(
     text: str = "text",
     k: int = 3,
 ) -> DataFrame:
-    """Exact n-gram Jaccard dedup via prefix filtering — the hash-free,
-    engine-portable member of the dedup family (its DuckDB oracle
-    reproduces it verbatim, unlike the xxhash64-based minhash and
-    simhash paths), with NO recall loss.
+    """Exact n-gram Jaccard dedup via prefix filtering — the hash-free
+    member of the dedup family, with NO recall loss (the MinHash and
+    simhash pipelines trade recall for cost).
 
     Candidate generation is the PPJoin prefix filter (Xiao et al.,
     WWW'08): under any global total order of shingles, two sets with
@@ -561,7 +344,7 @@ def ngram_jaccard_pairs(
     exploded = (
         fan_out(df)
         .select(F.col(id_col).alias("id"), tokens(text).alias("_tk"))
-        .select("id", F.explode(word_shingles(k=k, toks=F.col("_tk"))).alias("s"))
+        .select("id", F.explode(word_shingles(k=k)).alias("s"))
     )
     # per doc: shingles sorted by (global freq asc, shingle) — structs
     # compare field-wise identically in Spark and DuckDB. The frequency
@@ -628,81 +411,32 @@ def ngram_jaccard_pairs(
 # ---------------------------------------------------------------------------
 # simhash
 
+SIMHASH_BITS = 60
+SIMHASH_BANDS = 4  # 15-bit band keys: pigeonhole-complete for Hamming <= 3
 
-def simhash64(text: str = "text") -> Column:
-    """Charikar simhash: per token take xxhash64, accumulate +1/-1 per
-    bit across tokens, sign-pack into a 64-bit long. One aggregate over
-    the token array with a 64-length accumulator — single pass, no
-    explode, no Python.
 
-    The per-token hash is staged through one ``transform`` pass (round
-    13, guide §4.2): higher-order-function lambdas are interpreted with
-    NO common-subexpression elimination, so hashing inside the 64
-    ``when`` branches of the bit-contribution array re-evaluated the
-    token hash 64x per token. Hashing once into an array<long> and
-    folding over the HASHES leaves only cheap shift/mask ops in the
-    hot lambda — value-identical (same hash per token, same
-    accumulation order)."""
-    hs = F.transform(tokens(text), lambda t: F.xxhash64(t))
-
-    def contrib(h: Column) -> Column:
-        return F.array(
-            *[
-                F.when(F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-                for i in range(64)
-            ]
-        )
-
-    acc = F.aggregate(
-        hs,
-        F.array(*[F.lit(0) for _ in range(64)]),
-        lambda a, h: F.zip_with(a, contrib(h), lambda x, y: x + y),
+def simhash_sketch(text: str = "text") -> Column:
+    """60-bit Charikar simhash (STOC 2002) of the normalized text. Each
+    token's polynomial char hash passes through
+    `sampling.avalanche_bucket` twice (salts 0 and 1, low 30 bits
+    each) for 60 well-mixed bits, and sketch bit b is set iff more than
+    half of the tokens set bit b (2·count > n_tokens), so the expected
+    Hamming distance of two texts is 60·θ/π for the angle θ between
+    their token vectors. One SQL expression: the hashed token array is
+    the aggregate's argument, evaluated once, and the per-bit vote
+    accumulates in one pass over it. The DuckDB twin is
+    plans/extension_queries.py:_portable_simhash_oracle."""
+    low30 = (1 << 30) - 1
+    hashes = f"transform({tokens_sql(text)}, t -> {_char_hash_sql('t')})"
+    mixed = (
+        f"transform({hashes}, h -> ({spark_sql_avalanche_bucket('h', 0)} & {low30}) "
+        f"| shiftleft({spark_sql_avalanche_bucket('h', 1)} & {low30}, 30))"
     )
-    # sign-pack: bit 63 is the two's-complement sign bit of the long
-    packed = F.lit(0).cast("long")
-    for i in range(64):
-        bit_val = (1 << i) if i < 63 else -(1 << 63)
-        packed = packed.bitwiseOR(
-            F.when(F.element_at(acc, i + 1) > 0, F.lit(bit_val).cast("long")).otherwise(F.lit(0).cast("long"))
-        )
-    return packed
-
-
-def simhash_candidate_pairs(df: DataFrame, id_col: str = "doc_id", text: str = "text", max_hamming: int = 3) -> DataFrame:
-    """Near-dup pairs by simhash: band the 64 bits into 4 × 16-bit keys
-    (any pair within Hamming distance 3 must agree on ≥1 band), bucket-
-    join, verify true Hamming distance with bit_count(xor)."""
-    from crypto_data_pipeline_spark.sources.tables import fan_out
-
-    sh = fan_out(df).select(F.col(id_col).alias("id"), simhash64(text).alias("sh"))
-    bands = sh.select(
-        "id",
-        "sh",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_idx"),
-                        F.shiftright("sh", b * 16).bitwiseAND(F.lit(0xFFFF)).alias("band_key"),
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("band"),
-    ).select("id", "sh", "band.band_idx", "band.band_key")
-    a, b = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"), F.col("a.sh").alias("sh_a"), F.col("b.sh").alias("sh_b"))
-        .distinct()
-        .withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
-        .where(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
+    return F.expr(
+        f"aggregate({mixed}, array_repeat(0, {SIMHASH_BITS}), "
+        "(acc, h) -> transform(acc, (c, b) -> c + IF((shiftright(h, b) & 1) = 1, 1, -1)), "
+        "acc -> aggregate(transform(acc, (c, b) -> IF(c > 0, shiftleft(1L, b), 0L)), "
+        "0L, (p, v) -> p | v))"
     )
 
 
@@ -711,90 +445,43 @@ def simhash_pairs_portable(
     id_col: str = "doc_id",
     text: str = "text",
     max_hamming: int = 3,
-    bits: int = 28,
-    bands: int = 4,
 ) -> DataFrame:
-    """Charikar simhash near-dup pairs with the engine-portable
-    polynomial token hash instead of xxhash64: a 28-bit sign-pack
-    (4 × 7-bit bands, pigeonhole-complete for Hamming ≤ 3), banded
-    candidates, exact bit_count(xor) verify — every value integer and
-    reproducible in DuckDB, so the full lossy simhash pipeline
-    hash-checks. Same plan shape as simhash_candidate_pairs; the
-    64-bit xxhash64 version stays the production fast path.
-
-    Round 13 (guide §4.2, §2.1): the per-token polynomial fold is
-    staged through ONE ``transform`` pass before the bit accumulation —
-    interpreted HOF lambdas do no common-subexpression elimination, so
-    folding inside each of the ``bits`` ``when`` branches re-ran the
-    whole char-level fold 28x per token (measured 47.6 CPU-s / 46.9 s
-    single-task wall for 5k docs at sf0.1). The input also fans out to
-    cluster parallelism like the xxhash64 path — a no-op whenever the
-    scan is already multi-split."""
+    """Near-dup pairs (id_a < id_b, hamming) whose `simhash_sketch`es
+    differ in at most ``max_hamming`` bits (Manku, Jain & Das Sarma,
+    WWW 2007). The 60 bits split into 4 band keys of 15 bits; a pair
+    within Hamming 3 agrees on at least one of them (pigeonhole), so
+    grouping the docs by band key finds every such pair, and
+    bit_count(xor) verifies the exact distance inside each bucket.
+    One groupBy, not a band self-join, whose two sides would each
+    compute the sketch. The input fans
+    out to cluster parallelism — a no-op whenever the scan is already
+    multi-split — because the per-token hashing is the pipeline's CPU
+    cost."""
     from crypto_data_pipeline_spark.sources.tables import fan_out
 
-    if bits % bands:
-        raise ValueError("bits must divide into equal bands")
-    width = bits // bands
-    mask = (1 << width) - 1
-
-    def tok_hash(t: Column) -> Column:
-        return _poly_fold(F.transform(F.split(t, ""), F.ascii))
-
-    hs = F.transform(tokens(text), tok_hash)
-
-    def contrib(h: Column) -> Column:
-        return F.array(
-            *[
-                F.when(F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-                for i in range(bits)
-            ]
-        )
-
-    acc = F.aggregate(
-        hs,
-        F.array(*[F.lit(0) for _ in range(bits)]),
-        lambda a, h: F.zip_with(a, contrib(h), lambda x, y: x + y),
+    width = SIMHASH_BITS // SIMHASH_BANDS
+    keys = ", ".join(
+        f"named_struct('band_idx', {b}, 'band_key', shiftright(sh, {b * width}) & {(1 << width) - 1})"
+        for b in range(SIMHASH_BANDS)
     )
-    packed = F.lit(0).cast("long")
-    for i in range(bits):
-        packed = packed.bitwiseOR(
-            F.when(F.element_at(acc, i + 1) > 0, F.lit(1 << i).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    sh = fan_out(df).select(F.col(id_col).alias("id"), packed.alias("sh"))
-    banded = sh.select(
-        "id",
-        "sh",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_idx"),
-                        F.shiftright("sh", b * width).bitwiseAND(F.lit(mask)).alias("band_key"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band"),
-    ).select("id", "sh", "band.band_idx", "band.band_key")
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-            F.col("a.sh").alias("sh_a"), F.col("b.sh").alias("sh_b"),
-        )
-        .distinct()
-        .withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))).cast("int"))
-        .where(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
+    buckets = (
+        fan_out(df)
+        .select(F.col(id_col).alias("id"), simhash_sketch(text).alias("sh"))
+        .select("id", "sh", F.expr(f"inline(array({keys}))"))
+        .groupBy("band_idx", "band_key")
+        .agg(F.array_sort(F.collect_list(F.struct("id", "sh"))).alias("m"))
+        .where(F.size("m") >= 2)
     )
+    pairs = buckets.select(
+        F.expr(
+            "inline(flatten(transform(m, (x, i) -> transform(slice(m, i + 2, size(m)), "
+            "y -> named_struct('id_a', x.id, 'id_b', y.id, "
+            "'hamming', CAST(bit_count(x.sh ^ y.sh) AS INT))))))"
+        )
+    )
+    return pairs.where(
+        (F.col("id_a") < F.col("id_b")) & (F.col("hamming") <= max_hamming)
+    ).distinct()
 
 
 def winnowing_pairs(
@@ -827,19 +514,11 @@ def winnowing_pairs(
         .agg(F.array_sort(F.collect_set("id")).alias("ids"))
         .where((F.size("ids") >= 2) & (F.size("ids") <= max_bucket))
     )
-    pairs = buckets.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("ids"),
-                    lambda x, i: F.transform(
-                        F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
-                        lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-                    ),
-                )
-            )
-        ).alias("p")
-    ).groupBy("p.id_a", "p.id_b").agg(F.count(F.lit(1)).cast("long").alias("shared"))
+    pairs = (
+        buckets.select(F.expr(_PAIRS_SQL))
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).cast("long").alias("shared"))
+    )
     return (
         pairs.where(F.col("shared") >= min_shared)
         .join(F.broadcast(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n_fps", "n_a")), "id_a")

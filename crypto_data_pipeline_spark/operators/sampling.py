@@ -203,6 +203,17 @@ def sql_avalanche_bucket(key_expr: str, salt: int = 0) -> str:
     return f"((xor({h2}, {h2} >> 13)) * {_A1} + {_B1}) % {MOD}"
 
 
+def spark_sql_avalanche_bucket(key_expr: str, salt: int = 0) -> str:
+    """``avalanche_bucket`` as Spark SQL text, for keys that are lambda
+    variables inside a SQL higher-order function (Spark spells xor
+    ``^``, which is DuckDB's power operator, hence the two twins).
+    Each intermediate term is spelled multiple times — pass a column
+    reference or a lambda variable."""
+    h1 = f"((pmod({key_expr} + {salt}, {MOD}) * {_A1} + {_B1}) % {MOD})"
+    h2 = f"((({h1} ^ shiftright({h1}, 15)) * {_A2}) % {MOD})"
+    return f"((({h2} ^ shiftright({h2}, 13)) * {_A1} + {_B1}) % {MOD})"
+
+
 def sql_split_case(key_expr: str, weights: Mapping[str, float], salt: int = 0) -> str:
     """ANSI-SQL twin of ``split_column``."""
     total = float(sum(weights.values()))

@@ -34,6 +34,11 @@ def tokens(text: str | Column = "text") -> Column:
     return F.split(normalized(text), " ")
 
 
+def tokens_sql(text: str = "text") -> str:
+    """`tokens` of the column ``text`` as Spark SQL text."""
+    return f"split(regexp_replace(trim(lower(`{text}`)), '\\\\s+', ' '), ' ')"
+
+
 def with_text_stats(df: DataFrame, text: str = "text") -> DataFrame:
     """Quality-scoring features: length, word count, punctuation ratio,
     stopword ratio, mean word length, and a composite quality score.
@@ -43,10 +48,7 @@ def with_text_stats(df: DataFrame, text: str = "text") -> DataFrame:
     n_chars = F.length(text)
     n_words = F.size(toks)
     punct = F.length(text) - F.length(F.regexp_replace(text, r"[!?.,;:]", ""))
-    stop = F.size(F.expr(
-        f"filter(split(regexp_replace(trim(lower({text})), '\\\\s+', ' '), ' '), "
-        f"t -> t in {STOPWORDS['en']})"
-    ))
+    stop = F.size(F.expr(f"filter({tokens_sql(text)}, t -> t in {STOPWORDS['en']})"))
     word_len_sum = F.aggregate(F.transform(toks, lambda t: F.length(t)), F.lit(0), lambda a, x: a + x)
     return (
         df.withColumn("n_chars_calc", n_chars.cast("long"))

@@ -45,7 +45,7 @@ def test_full_corpus_pipeline_composes(spark, sf_dir):
     assert 0 < n3 <= n2
 
     # 4. near-dup clustering: keep one representative per cluster
-    pairs = dedup.minhash_dedup_pairs(uniq, threshold=0.5)
+    pairs = dedup.minhash_dedup_pairs_portable(uniq, threshold=0.5, num_hashes=32, bands=8)
     comps = connected_components(pairs, src="id_a", dst="id_b")
     drop = comps.where(F.col("v") != F.col("component")).select(
         F.col("v").alias("doc_id")

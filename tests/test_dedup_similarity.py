@@ -1,6 +1,7 @@
-"""Recall/precision tests for the hash-based dedup + ANN operators —
-the check the DuckDB oracle can't do (xxhash64 isn't reproducible in
-SQL), promised by the rows-only catalog entries.
+"""Recall/precision tests for the hash-based dedup + ANN operators.
+The DuckDB oracles prove that Spark computes each lossy pipeline
+exactly as specified; these tests prove that the specification finds
+the near-duplicates and neighbours it should.
 
 Ground truth is brute-force: all-pairs exact Jaccard over word
 3-shingles (dedup) and exact cosine top-k (similarity), computed with
@@ -57,8 +58,8 @@ def true_pairs(corpus):
 
 def test_minhash_signature_is_a_real_minhash(spark):
     """The signature family's statistical contract, pinned at unit
-    speed: (1) the 32 mask slots are DISTINCT values on a nontrivial
-    doc (the round-10 dedup scale probe caught them collapsing to one
+    speed: (1) the 32 hash slots are DISTINCT values on a nontrivial
+    doc (a dedup scale probe once caught them collapsing to one
     mask-free value — a PySpark HOF lambda bound its mask as a second
     parameter, which silently becomes the array index); (2) per-slot
     agreement between two sets estimates their exact Jaccard (the
@@ -73,14 +74,11 @@ def test_minhash_signature_is_a_real_minhash(spark):
         ],
         ["doc_id", "text"],
     )
-    sets = dedup.hashed_shingle_sets(docs)
-    sig = dedup._signature_from_hashes(F.col("hs"), 32)
-    rows = {r.doc_id: r for r in sets.select(
-        F.col("id").alias("doc_id"), "hs", sig.alias("s")).collect()}
-    assert len(set(rows[0].s)) > 16, "signature slots collapsed to few values"
+    rows = {r.id: r for r in dedup.portable_minhash_signatures(docs, num_hashes=32).collect()}
+    assert len(set(rows[0].sig)) > 16, "signature slots collapsed to few values"
     j = len(set(rows[0].hs) & set(rows[1].hs)) / len(set(rows[0].hs) | set(rows[1].hs))
-    agree = sum(1 for a, b in zip(rows[0].s, rows[1].s) if a == b) / 32
-    # J ~= 0.56 here; a binomial(32, J) stays within +-0.3 of J with
+    agree = sum(1 for a, b in zip(rows[0].sig, rows[1].sig) if a == b) / 32
+    # J ~= 0.58 here; a binomial(32, J) stays within +-0.3 of J with
     # overwhelming probability, and the degenerate signature reads 0.0
     assert abs(agree - j) < 0.3, (agree, j)
 
@@ -89,12 +87,14 @@ def test_minhash_lsh_recall_and_precision(spark, sf_dir, true_pairs):
     docs = load_table(spark, sf_dir, "documents")
     got = {
         (r.id_a, r.id_b): r.jaccard
-        for r in dedup.minhash_dedup_pairs(docs, threshold=THRESHOLD).collect()
+        for r in dedup.minhash_dedup_pairs_portable(
+            docs, threshold=THRESHOLD, num_hashes=32, bands=8
+        ).collect()
     }
     assert true_pairs, "fixture corpus must contain near-dup pairs"
     # precision 1.0: every emitted pair IS a true near-dup pair (the
     # final stage verifies exact Jaccard, so no false positives beyond
-    # 64-bit shingle-hash collisions)
+    # shingle-hash collisions)
     assert set(got) <= set(true_pairs)
     # recall: banding (8 bands × 4 rows) catches >= 90% at J >= 0.5 in
     # expectation; require 0.8 as a stable floor
@@ -115,23 +115,42 @@ def test_ngram_jaccard_prefix_filter_exact(spark, sf_dir, true_pairs):
         assert abs(j - true_pairs[(a, b)]) < 1e-5
 
 
+def test_simhash_null_text_pairs_with_nothing(spark):
+    """A NULL text has no sketch, so it is nobody's near-duplicate, in
+    Spark and in the DuckDB twin alike; two empty texts are identical
+    content and pair at distance 0."""
+    import duckdb
+
+    from crypto_data_pipeline_spark.plans.extension_queries import _portable_simhash_oracle
+
+    rows = [(1, None), (2, None), (3, "a b c d e f g"), (4, "a b c d e f h"), (5, ""), (6, "")]
+    got = sorted(
+        tuple(r)
+        for r in dedup.simhash_pairs_portable(
+            spark.createDataFrame(rows, "doc_id long, text string")
+        ).collect()
+    )
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    assert got == sorted(con.execute(_portable_simhash_oracle()).fetchall())
+    assert (5, 6, 0) in got
+    assert not any(r[0] in (1, 2) or r[1] in (1, 2) for r in got)
+
+
 @pytest.mark.slow
 def test_simhash_hamming_is_exact(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.simhash_candidate_pairs(docs, max_hamming=3).collect()
+    pairs = dedup.simhash_pairs_portable(docs, max_hamming=3).collect()
+    assert pairs, "fixture corpus must contain simhash near-dup pairs"
     sh = {
-        r.id: r.sh
-        for r in docs.selectExpr("doc_id AS id")
-        .join(
-            docs.selectExpr("doc_id AS id", "text"),
-            "id",
-        )
-        .select("id", dedup.simhash64("text").alias("sh"))
-        .collect()
+        r.doc_id: r.sh
+        for r in docs.select("doc_id", dedup.simhash_sketch("text").alias("sh")).collect()
     }
     for r in pairs:
         assert r.id_a < r.id_b
-        recomputed = bin((sh[r.id_a] ^ sh[r.id_b]) & 0xFFFFFFFFFFFFFFFF).count("1")
+        assert 0 <= sh[r.id_a] < 1 << dedup.SIMHASH_BITS
+        recomputed = bin(sh[r.id_a] ^ sh[r.id_b]).count("1")
         assert recomputed == r.hamming <= 3
 
 
@@ -1051,18 +1070,30 @@ def test_ann_registry_recall_floor_sf001(spark):
         assert hits / total >= floor, (name, hits, total)
 
 
-def test_dedup_clusters_leaves_nothing_persisted(spark, sf_dir):
-    """Two dedup_clusters calls persist nothing beyond what their live
-    results read: the shingle sets are not cached for the session, and
-    the label propagation releases every checkpoint but the final
-    labels, one per result frame."""
+def _persisted_by_two_calls(spark, sf_dir, name: str) -> int:
+    """RDDs left persisted by two calls of the registered query
+    ``name`` whose results are still alive."""
     from crypto_data_pipeline_spark.plans.registry import load_with_extras
 
     def persisted() -> set[int]:
         return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
 
     before = persisted()
-    fn = load_with_extras()["dedup_clusters"].fn
+    fn = load_with_extras()[name].fn
     frames = [fn(spark, sf_dir) for _ in range(2)]
     assert frames[0].count() == frames[1].count() > 0
-    assert len(persisted() - before) == len(frames)
+    return len(persisted() - before)
+
+
+def test_dedup_clusters_leaves_nothing_persisted(spark, sf_dir):
+    """Two dedup_clusters calls persist nothing beyond what their live
+    results read: the shingle sets are not cached for the session, and
+    the label propagation releases every checkpoint but the final
+    labels, one per result frame."""
+    assert _persisted_by_two_calls(spark, sf_dir, "dedup_clusters") == 2
+
+
+def test_dedup_minhash_lsh_leaves_nothing_persisted(spark, sf_dir):
+    """The MinHash pipeline persists nothing: a later call on the same
+    corpus recomputes its pairs instead of reading a cached result."""
+    assert _persisted_by_two_calls(spark, sf_dir, "dedup_minhash_lsh") == 0

@@ -172,3 +172,18 @@ def test_weighted_sample_inclusion_tracks_weight(spark):
     # 20x weight -> near-certain inclusion; unit items split the rest
     assert heavy > 150, counts
     assert heavy > 2 * max_light, counts
+
+
+def test_spark_sql_avalanche_twin_equals_column_form(spark):
+    """The SQL-text avalanche the simhash sketch inlines computes the
+    same bucket as `avalanche_bucket`, negative keys and both salts
+    included."""
+    keys = spark.range(-2000, 2000).select(
+        (F.col("id") * F.lit(1_000_003)).alias("k")
+    )
+    for salt in (0, 1):
+        diff = keys.where(
+            F.expr(sampling.spark_sql_avalanche_bucket("k", salt))
+            != sampling.avalanche_bucket(F.col("k"), salt)
+        ).count()
+        assert diff == 0, salt

@@ -1,7 +1,7 @@
 """Statistical-contract pins — suite-sized versions of
-tools/stat_contract_probe.py (round 11; VERDICT r10 next #3).
+tools/stat_contract_probe.py.
 
-The round-10 MinHash mask bug proved that hash-green oracles certify
+A past MinHash mask bug proved that hash-green oracles certify
 cross-engine AGREEMENT, not DISTRIBUTIONAL correctness: Spark and
 DuckDB happily agree on degenerate signatures. These tests pin each
 sketch/fingerprint operator to its published theory on deterministic
@@ -42,24 +42,26 @@ def _planted_pair_frame(spark, n_pairs: int, width: int, subst: int):
 
 @pytest.mark.slow
 def test_simhash_hamming_tracks_arccos_curve(spark):
-    """Charikar contract: E[Hamming] = 64*arccos(cos)/pi. Measured at
-    500 pairs per point (tools/stat_contract_probe.py records the
-    same curve at 10k): 9.85/14.42/21.00 vs theory 10.30/14.72/21.33.
-    A degenerate bit pipeline (all-equal contributions, the MinHash
-    mask class) collapses every mean to ~0 or ~32 — far outside these
-    bands. Identical texts must land at exactly 0 (determinism)."""
+    """Charikar contract: E[Hamming] = 60*arccos(cos)/pi for the 60-bit
+    sketch, pinned at theory +-1.5 with 500 pairs per point. Measured:
+    9.37/13.72/19.94 vs theory 9.65/13.80/20.00. A degenerate bit
+    pipeline (all-equal contributions, the MinHash mask class)
+    collapses every mean to ~0 or ~30, and a sketch with too few
+    well-mixed bits sits far below the curve (a 28-bit polynomial-hash
+    sketch read 1.07/1.94/4.56) — both outside these bands. Identical
+    texts must land at exactly 0 (determinism)."""
     width, n = 64, 500
     expectations = {
         0: (0.0, 0.0),      # exact: identical text, identical hash
-        8: (8.8, 11.8),     # theory 10.30
-        16: (13.2, 16.2),   # theory 14.72
-        32: (19.8, 22.8),   # theory 21.33
+        8: (8.15, 11.15),   # theory 9.65
+        16: (12.3, 15.3),   # theory 13.80
+        32: (18.5, 21.5),   # theory 20.00
     }
     for subst, (lo, hi) in expectations.items():
         mean = (
             _planted_pair_frame(spark, n, width, subst)
             .select(F.bit_count(
-                D.simhash64("ta").bitwiseXOR(D.simhash64("tb"))
+                D.simhash_sketch("ta").bitwiseXOR(D.simhash_sketch("tb"))
             ).alias("h"))
             .agg(F.avg("h")).collect()[0][0]
         )
@@ -68,10 +70,10 @@ def test_simhash_hamming_tracks_arccos_curve(spark):
 
 @pytest.mark.slow
 def test_simhash_band_join_pigeonhole_recall_is_exact(spark):
-    """Any pair at Hamming <= 3 agrees on >= 1 of the 4 16-bit bands
-    (pigeonhole) — so the banded candidate join's recall on such pairs
+    """Any pair at Hamming <= 3 agrees on >= 1 of the 4 15-bit bands
+    (pigeonhole) — so the banded candidate search's recall on such pairs
     is EXACTLY 1.0, not approximately. Planted 1-token substitutions
-    put ~60% of pairs at <= 3; every one must be found."""
+    put about half of the pairs at <= 3; every one must be found."""
     n, width = 300, 64
     base = spark.range(n).select(
         F.col("id"),
@@ -91,7 +93,7 @@ def test_simhash_band_join_pigeonhole_recall_is_exact(spark):
     ).select((F.col("id") + n).alias("id"), "text")
     docs = base.unionByName(var).withColumnRenamed("id", "doc_id")
 
-    sh = docs.select("doc_id", D.simhash64("text").alias("sh"))
+    sh = docs.select("doc_id", D.simhash_sketch("text").alias("sh"))
     a, b = sh.alias("a"), sh.alias("b")
     close = (
         a.join(b, F.col("b.doc_id") - F.col("a.doc_id") == n)
@@ -100,7 +102,7 @@ def test_simhash_band_join_pigeonhole_recall_is_exact(spark):
     )
     assert close > 100  # the planted family lands where theory says
     found = (
-        D.simhash_candidate_pairs(docs, max_hamming=3)
+        D.simhash_pairs_portable(docs, max_hamming=3)
         .where(F.col("id_b") - F.col("id_a") == n)
         .count()
     )

@@ -1,6 +1,5 @@
-"""MinHash dedup tier at corpus scale — the round-9 gap: the ANN tier
-got a 2M-vector probe (tools/ann_scale_probe.py), the dedup tier had
-plan-shape evidence but no above-toy measurement.
+"""MinHash dedup tier at corpus scale: the above-toy measurement of
+the near-dup pipeline, as tools/ann_scale_probe.py is for the ANN tier.
 
 Synthesizes N documents with DELIBERATE structure, all generated as
 JVM-side expressions (no Python in the data path):
@@ -14,15 +13,16 @@ JVM-side expressions (no Python in the data path):
   member is the same template with one doc-unique token — pairwise
   Jaccard ≈ 0.8, so uncapped banding would bucket ~N/500 docs together
   and emit O((N/500)²) pairs; at 2M that is ~8M pairs from 4,000 docs.
-  This is the skew the hot-bucket cap (lsh_candidate_pairs
+  This is the skew the hot-bucket cap (portable_lsh_candidate_pairs
   max_bucket) exists for; the probe measures the cap ENGAGING.
 - everything else: doc-unique token streams (no accidental near-dups
   beyond hash coincidence).
 
-Measured per N, end to end on the production operator path
-(hashed_shingle_sets → lsh_candidate_pairs → minhash_dedup_pairs):
+Measured per N, end to end on the operator path at 32 hashes in 8
+bands (portable_minhash_signatures → portable_lsh_candidate_pairs →
+minhash_dedup_pairs_portable):
 
-- bucket histogram BEFORE the cap (lsh_band_buckets): buckets over
+- bucket histogram BEFORE the cap (portable_lsh_band_buckets): buckets over
   the cap, rows inside them, max bucket size — cap engagement as a
   direct artifact;
 - candidate pairs after the cap, pairs-scored-per-doc, candidate
@@ -61,6 +61,7 @@ N_TOKENS = 60
 VOCAB = 997
 MAX_BUCKET = 200
 THRESHOLD = 0.7
+NUM_HASHES, BANDS = 32, 8
 
 
 def synth_docs(spark, n: int) -> DataFrame:
@@ -99,8 +100,8 @@ def probe_n(spark, n: int) -> dict:
     docs.count()  # materialize; generation is not what we time
 
     # --- cap engagement: the pre-cap bucket histogram -----------------
-    sets = dedup.hashed_shingle_sets(docs)
-    buckets = dedup.lsh_band_buckets(sets).persist()
+    sigs = dedup.portable_minhash_signatures(docs, num_hashes=NUM_HASHES).persist()
+    buckets = dedup.portable_lsh_band_buckets(sigs, NUM_HASHES, BANDS).persist()
     b = buckets.agg(
         F.count(F.lit(1)).alias("n_buckets"),
         F.sum((F.size("ids") > MAX_BUCKET).cast("long")).alias("n_capped"),
@@ -109,13 +110,16 @@ def probe_n(spark, n: int) -> dict:
         ).alias("rows_in_capped"),
         F.max(F.size("ids")).alias("max_bucket_size"),
     ).collect()[0]
-    cands = dedup.lsh_candidate_pairs(sets, max_bucket=MAX_BUCKET)
+    cands = dedup.portable_lsh_candidate_pairs(sigs, NUM_HASHES, BANDS, MAX_BUCKET)
     n_cands = cands.count()
     buckets.unpersist()
+    sigs.unpersist()
 
     # --- the full pipeline, timed end to end --------------------------
     t0 = time.perf_counter()
-    verified = dedup.minhash_dedup_pairs(docs, threshold=THRESHOLD).persist()
+    verified = dedup.minhash_dedup_pairs_portable(
+        docs, THRESHOLD, num_hashes=NUM_HASHES, bands=BANDS, max_bucket=MAX_BUCKET
+    ).persist()
     n_verified = verified.count()
     wall = round(time.perf_counter() - t0, 3)
 

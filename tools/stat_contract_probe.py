@@ -1,24 +1,25 @@
 """Statistical-contract probe — the standing defense for operators
 whose correctness is a DISTRIBUTIONAL property no value-pinned fixture
-can see (VERDICT r10 next #3; the round-10 MinHash mask bug proved the
-class: every hash-green oracle certifies that Spark and DuckDB compute
-the SAME numbers, not that the numbers have the promised statistics).
+can see (a past MinHash mask bug proved the class: every hash-green
+oracle certifies that Spark and DuckDB compute the SAME numbers, not
+that the numbers have the promised statistics).
 
 Four contracts, each measured against its published theory at scale:
 
-- SimHash (operators/dedup.py:simhash64): planted token-substitution
-  families at controlled cosine — mean Hamming distance must track
-  Charikar's 64*arccos(cos)/pi curve (Goemans-Williamson hyperplane
-  rounding), and the 4x16-bit band join must find EVERY pair at
-  Hamming <= 3 (pigeonhole — exact, not statistical).
+- SimHash (operators/dedup.py:simhash_sketch): planted
+  token-substitution families at controlled cosine — mean Hamming
+  distance must track Charikar's 60*arccos(cos)/pi curve
+  (Goemans-Williamson hyperplane rounding), and the 4x15-bit banding
+  (simhash_pairs_portable) must find EVERY pair at Hamming <= 3
+  (pigeonhole — exact, not statistical).
 - Bloom (operators/dedup.py:bloom_prefilter_flags): measured FPR on
   fresh non-members vs the realized-fill prediction (set_bits/m)^k
   and the idealized (1-e^{-kn/m})^k.
 - HLL (operators/sketch.py:hll_registers/hll_estimate): relative
   error over disjoint SEQUENTIAL-key groups (the id columns the
   operator is pointed at — the hash's adversarial case) vs the
-  1.04/sqrt(m) standard error. This probe caught a real bug in round
-  11: the original single-affine key hash put +54% error on 100k
+  1.04/sqrt(m) standard error. This probe caught a real bug: the
+  original single-affine key hash put +54% error on 100k
   sequential keys (10x the contract) while every fixture passed —
   fixed by the affine->xorshift->affine composition in _hll_j_rho.
 - CMS (operators/sketch.py:cms_point_estimates): overcount >= 0
@@ -68,7 +69,7 @@ def probe_simhash(spark, n_pairs: int, width: int = 64) -> list[dict]:
         r = (
             df.select(
                 F.bit_count(
-                    D.simhash64("ta").bitwiseXOR(D.simhash64("tb"))
+                    D.simhash_sketch("ta").bitwiseXOR(D.simhash_sketch("tb"))
                 ).alias("h")
             )
             .agg(F.avg("h").alias("mean"), F.stddev("h").alias("sd"))
@@ -80,12 +81,12 @@ def probe_simhash(spark, n_pairs: int, width: int = 64) -> list[dict]:
             "cosine": round(cos, 4),
             "mean_hamming": round(float(r["mean"]), 3),
             "sd": round(float(r["sd"] or 0.0), 3),
-            "theory": round(64 * math.acos(cos) / math.pi, 3),
+            "theory": round(D.SIMHASH_BITS * math.acos(cos) / math.pi, 3),
         })
 
     # pigeonhole: pairs planted at Hamming <= 3 (1-token substitution
     # lands there with high probability) MUST all surface from the
-    # banded candidate join — zero recall loss is the contract
+    # banded candidate search — zero recall loss is the contract
     base = spark.range(n_pairs).select(
         F.col("id"),
         F.concat_ws(" ", F.transform(
@@ -106,12 +107,12 @@ def probe_simhash(spark, n_pairs: int, width: int = 64) -> list[dict]:
         )).alias("text"),
     ).select((F.col("id") + n_pairs).alias("id"), "text")
     docs = base.unionByName(var).withColumnRenamed("id", "doc_id")
-    pairs = D.simhash_candidate_pairs(docs, max_hamming=3)
+    pairs = D.simhash_pairs_portable(docs, max_hamming=3)
     found = (
         pairs.where(F.col("id_b") - F.col("id_a") == n_pairs).count()
     )
     # ground truth: how many planted pairs actually land at <= 3
-    sh = docs.select("doc_id", D.simhash64("text").alias("sh"))
+    sh = docs.select("doc_id", D.simhash_sketch("text").alias("sh"))
     a = sh.where(F.col("doc_id") < n_pairs).alias("a")
     b = sh.where(F.col("doc_id") >= n_pairs).alias("b")
     close = (
