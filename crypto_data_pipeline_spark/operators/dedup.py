@@ -162,11 +162,9 @@ def portable_hashed_shingle_sets(
     both engines execute bit-identically (the same family the rolling
     fingerprint proves portable).
 
-    Deliberately NO ``fan_out`` here: this frame's consumers either
-    persist it once (the curation signature stage) or derive it under
-    both the banding branch and the verify join per call, where an
-    adaptive repartition costs a full-text shuffle per branch
-    (measured 8.2 → 22.5 CPU-s steady at sf0.1) for no wall gain."""
+    No ``fan_out`` here: its partition check launches a build-time job
+    on an input that shuffles (dedup_staged_pipeline's exact-dedup
+    survivors), so the caller fans out a plain scan instead."""
     # tokens are staged: the shingle lambda reads `_tk` per position
     staged = df.select(F.col(id_col).alias("id"), tokens(text).alias("_tk"))
     hs = f"array_distinct(transform({_shingles_sql('_tk', k)}, s -> {_char_hash_sql('s')}))"
@@ -296,6 +294,8 @@ def minhash_dedup_pairs_portable(
     exact integer arithmetic, so the DuckDB twin
     (plans/extension_queries.py:_portable_minhash_oracle) reproduces
     the whole lossy pipeline and hash-checks it. Nothing is persisted.
+    Pass an under-partitioned scan through `sources.tables.fan_out`
+    first: the signature stage is the pipeline's CPU cost.
 
     ``signatures``: a precomputed `portable_minhash_signatures` frame
     (id, hs, sig) — pass it to serve signatures from rest/cache
@@ -307,11 +307,18 @@ def minhash_dedup_pairs_portable(
         if signatures is not None
         else portable_minhash_signatures(df, id_col, text, shingle_k, num_hashes)
     )
-    sets = sigs.select("id", "hs")
     pairs = portable_lsh_candidate_pairs(sigs, num_hashes, bands, max_bucket)
     # verification reads only the candidate docs' shingle sets
     cand_ids = pairs.select(F.explode(F.array("id_a", "id_b")).alias("_cid")).distinct()
-    pruned = sets.join(F.broadcast(cand_ids), F.col("id") == F.col("_cid"), "left_semi")
+    if signatures is not None:
+        sets = sigs.select("id", "hs")
+        pruned = sets.join(F.broadcast(cand_ids), F.col("id") == F.col("_cid"), "left_semi")
+    else:
+        # prune the RAW docs before hashing: the optimizer cannot push a
+        # semi join below the shingle projection, so pruning the hashed
+        # sets would re-hash the whole corpus for a few candidates
+        pruned_docs = df.join(F.broadcast(cand_ids), F.col(id_col) == F.col("_cid"), "left_semi")
+        pruned = portable_hashed_shingle_sets(pruned_docs, id_col, text, shingle_k)
     return jaccard_verified_pairs(pruned, pairs, threshold)
 
 
@@ -440,20 +447,13 @@ def simhash_sketch(text: str = "text") -> Column:
     )
 
 
-def simhash_pairs_portable(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text: str = "text",
-    max_hamming: int = 3,
+def simhash_band_buckets(
+    df: DataFrame, id_col: str = "doc_id", text: str = "text"
 ) -> DataFrame:
-    """Near-dup pairs (id_a < id_b, hamming) whose `simhash_sketch`es
-    differ in at most ``max_hamming`` bits (Manku, Jain & Das Sarma,
-    WWW 2007). The 60 bits split into 4 band keys of 15 bits; a pair
-    within Hamming 3 agrees on at least one of them (pigeonhole), so
-    grouping the docs by band key finds every such pair, and
-    bit_count(xor) verifies the exact distance inside each bucket.
-    One groupBy, not a band self-join, whose two sides would each
-    compute the sketch. The input fans
+    """(band_idx, band_key, m): the docs' `simhash_sketch`es grouped by
+    each of the 4 15-bit band keys, ``m`` the bucket's sorted
+    (id, sh) members. A NULL text has no sketch and joins no bucket
+    (a groupBy would put every NULL key in one bucket). The input fans
     out to cluster parallelism — a no-op whenever the scan is already
     multi-split — because the per-token hashing is the pipeline's CPU
     cost."""
@@ -464,24 +464,43 @@ def simhash_pairs_portable(
         f"named_struct('band_idx', {b}, 'band_key', shiftright(sh, {b * width}) & {(1 << width) - 1})"
         for b in range(SIMHASH_BANDS)
     )
-    buckets = (
+    # the sketch is NULL iff the text is; filtering the sketch column
+    # would be pushed below its projection and compute every sketch twice
+    return (
         fan_out(df)
+        .where(F.col(text).isNotNull())
         .select(F.col(id_col).alias("id"), simhash_sketch(text).alias("sh"))
         .select("id", "sh", F.expr(f"inline(array({keys}))"))
         .groupBy("band_idx", "band_key")
         .agg(F.array_sort(F.collect_list(F.struct("id", "sh"))).alias("m"))
-        .where(F.size("m") >= 2)
     )
+
+
+def simhash_pairs_portable(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text: str = "text",
+    max_hamming: int = 3,
+) -> DataFrame:
+    """Near-dup pairs (id_a < id_b, hamming) whose `simhash_sketch`es
+    differ in at most ``max_hamming`` bits (Manku, Jain & Das Sarma,
+    WWW 2007). The 60 bits split into 4 band keys of 15 bits; a pair
+    within Hamming 3 agrees on at least one of them (pigeonhole), so
+    `simhash_band_buckets` finds every such pair, and bit_count(xor)
+    verifies the exact distance inside each bucket. One groupBy, not a
+    band self-join, whose two sides would each compute the sketch. The
+    distance filter runs inside the pair expansion, so a bucket's
+    array holds only the pairs that survive, not all B²/2."""
+    buckets = simhash_band_buckets(df, id_col, text).where(F.size("m") >= 2)
     pairs = buckets.select(
         F.expr(
-            "inline(flatten(transform(m, (x, i) -> transform(slice(m, i + 2, size(m)), "
+            "inline(flatten(transform(m, (x, i) -> transform(filter(slice(m, i + 2, size(m)), "
+            f"y -> x.id < y.id AND bit_count(x.sh ^ y.sh) <= {int(max_hamming)}), "
             "y -> named_struct('id_a', x.id, 'id_b', y.id, "
             "'hamming', CAST(bit_count(x.sh ^ y.sh) AS INT))))))"
         )
     )
-    return pairs.where(
-        (F.col("id_a") < F.col("id_b")) & (F.col("hamming") <= max_hamming)
-    ).distinct()
+    return pairs.distinct()
 
 
 def winnowing_pairs(

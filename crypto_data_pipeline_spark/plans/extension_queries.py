@@ -28,7 +28,7 @@ from crypto_data_pipeline_spark.operators import (
 )
 from crypto_data_pipeline_spark.operators.text import LANG_PRIORITY, STOPWORDS
 from crypto_data_pipeline_spark.plans.registry import register
-from crypto_data_pipeline_spark.sources.tables import load_table
+from crypto_data_pipeline_spark.sources.tables import fan_out, load_table
 
 # DuckDB spelling of text.normalized()
 NORM_SQL = "regexp_replace(trim(lower(text)), '\\s+', ' ', 'g')"
@@ -375,9 +375,10 @@ def dedup_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The same MinHash-LSH pipeline at 32 hashes in 8 bands of 4
     rows: a steeper S-curve around the 0.5 threshold for twice the
-    signature work. The bench's MinHash row."""
+    signature work. The bench's MinHash row; its input fans out to
+    cluster parallelism, since the signatures are its CPU cost."""
     return dedup.minhash_dedup_pairs_portable(
-        _docs(spark, sf_dir), threshold=0.5, num_hashes=32, bands=8
+        fan_out(_docs(spark, sf_dir)), threshold=0.5, num_hashes=32, bands=8
     )
 
 

@@ -136,6 +136,32 @@ def test_simhash_null_text_pairs_with_nothing(spark):
     assert got == sorted(con.execute(_portable_simhash_oracle()).fetchall())
     assert (5, 6, 0) in got
     assert not any(r[0] in (1, 2) or r[1] in (1, 2) for r in got)
+    # NULL sketches are dropped before banding: a NULL band key would
+    # gather every NULL-text document into one bucket per band, whose
+    # pair expansion grows with the square of their number
+    many = spark.createDataFrame(
+        rows + [(i, None) for i in range(100, 400)], "doc_id long, text string"
+    )
+    buckets = dedup.simhash_band_buckets(many)
+    assert buckets.where(F.col("band_key").isNull()).count() == 0
+    assert buckets.select(F.explode("m.id").alias("id")).where(F.col("id") >= 100).count() == 0
+    assert sorted(tuple(r) for r in dedup.simhash_pairs_portable(many).collect()) == got
+
+
+def test_tokens_sql_equals_tokens(spark):
+    """The SQL-text tokenizer the simhash sketch and the stopword ratio
+    inline splits every text exactly as `text.tokens` does: case,
+    surrounding and repeated whitespace of every kind, empty and NULL
+    texts."""
+    from crypto_data_pipeline_spark.operators.text import tokens, tokens_sql
+
+    texts = [
+        "Plain words here", "  Leading and trailing  ", "tabs\tand\nnew\r\nlines",
+        "MIXED Case ÉTÉ", "many     spaces", "", "   ", None, "a\u00a0b", "x\x0by\x0cz",
+    ]
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
+    diff = df.where(~F.expr(tokens_sql("text")).eqNullSafe(tokens("text")))
+    assert diff.count() == 0, diff.collect()
 
 
 @pytest.mark.slow
