@@ -135,13 +135,22 @@ def nb_train(
     return classes, grid
 
 
+# The landed model's schemas: `load_nb_model` reads them back without a
+# footer-inference job (a string ``label``, as every caller fits on).
+_NB_SCHEMAS = {
+    "classes": "label string, n_class_tokens long, vsize long, log_prior double,"
+    " log_unseen double",
+    "grid": "term string, label string, loglik double",
+}
+
+
 def save_nb_model(path: str, classes: DataFrame, grid: DataFrame) -> None:
     """Land the fitted model AT REST (parquet dirs ``classes/`` and
     ``grid/`` under ``path``) — same contract as `operators/lm.py:
-    save_lm_model`: train-once/serve-many across sessions, and
+    lm_fit`: train-once/serve-many across sessions, and
     statistics-accurate frames for the serve planner. Checkpoint
-    lineage estimates are unreliable enough that the round-8 bench
-    caught the serve join going shuffled on a megabyte grid (97 KB ->
+    lineage estimates are unreliable enough that a bench once caught
+    the serve join going shuffled on a megabyte grid (97 KB ->
     1.8 MB shuffle); a parquet scan measures its real size, so a
     model-sized grid broadcasts again."""
     classes.write.mode("overwrite").parquet(f"{path}/classes")
@@ -149,10 +158,11 @@ def save_nb_model(path: str, classes: DataFrame, grid: DataFrame) -> None:
 
 
 def load_nb_model(spark, path: str) -> tuple[DataFrame, DataFrame]:
-    """Reload ``(classes, grid)`` landed by `save_nb_model`."""
-    return (
-        spark.read.parquet(f"{path}/classes"),
-        spark.read.parquet(f"{path}/grid"),
+    """Reload ``(classes, grid)`` landed by `save_nb_model`, with the
+    model's known schemas, so the reload launches no job."""
+    return tuple(
+        spark.read.schema(_NB_SCHEMAS[name]).parquet(f"{path}/{name}")
+        for name in ("classes", "grid")
     )
 
 
@@ -169,11 +179,10 @@ def nb_predict(
 
     Join strategy: the |classes|-row frame keeps its broadcast hint;
     the likelihood grid is training-VOCABULARY-proportional (it grows
-    with the corpus), so its join is AQE's call — the
-    localCheckpointed grid measures small and broadcasts at any sane
-    vocabulary, and an over-threshold one degrades to a shuffled hash
-    join instead of OOMing the driver (round-8 fix, same pattern as
-    the bigram LM's grid/ctx joins)."""
+    with the corpus), so its join is AQE's call — a model-sized grid
+    measures small and broadcasts, and an over-threshold one degrades
+    to a shuffled hash join instead of OOMing the driver (the same
+    pattern as the bigram LM's model joins)."""
     terms = docs.select(F.col(doc_id).alias("doc_id"), F.explode(tokens(text)).alias("term"))
     scored = (
         terms.crossJoin(F.broadcast(classes.select("label", "log_prior", "log_unseen")))

@@ -191,6 +191,11 @@ def plan_runtime_metrics(df: DataFrame, include_cached: bool = False) -> dict[st
     return totals
 
 
+# py4j's memory-detach command prefix (protocol MEMORY_COMMAND_NAME +
+# MEMORY_DEL_SUBCOMMAND_NAME)
+_PY4J_DETACH = "m\nd\n"
+
+
 def profile_call(spark, fn, sf_dir: str) -> dict:
     """Run one query call ``fn(spark, sf_dir)`` and return its record,
     the batch analogue of Structured Streaming's per-trigger progress
@@ -204,7 +209,9 @@ def profile_call(spark, fn, sf_dir: str) -> dict:
       launched while ``fn`` ran;
     * ``py4j_calls``: py4j round trips while ``fn`` ran (the Python
       side of plan construction), counted on the gateway client's
-      ``send_command``;
+      ``send_command``, without the memory-detach commands that
+      `JavaObject` finalizers send through it whenever Python happens
+      to collect one, so the count repeats for identical code;
     * ``plan_chars``: the length of the executed plan's formatted
       explain, which Spark renders again at every AQE stage;
     * the executed plan's `plan_runtime_metrics`;
@@ -229,9 +236,10 @@ def profile_call(spark, fn, sf_dir: str) -> dict:
     client = sc._gateway._gateway_client
     send, calls = client.send_command, [0]
 
-    def counted(*args, **kwargs):
-        calls[0] += 1
-        return send(*args, **kwargs)
+    def counted(command, *args, **kwargs):
+        if not command.startswith(_PY4J_DETACH):
+            calls[0] += 1
+        return send(command, *args, **kwargs)
 
     try:
         cpu0 = proc_tree_cpu_seconds()

@@ -1455,12 +1455,10 @@ def embedding_similar_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The per-doc LM score table ``(doc_id, lang, n_bigrams, ppl,
     ppl_kn)`` at rest — the serve store's ``lm_model`` entry, built
-    once per (session, corpus) for both smoothing families: the grid
-    lands straight from its aggregation (one corpus pass), cont and
-    then ctx derive from the landed frames (model-sized scans), and
-    every document is scored against the landed model in one more corpus
-    pass (`lm.lm_scores`). Each frame reloads with its known schema, so
-    no job infers parquet footers, and the parquet-backed model gives
+    once per (session, corpus): `lm.lm_fit` lands the model (one corpus
+    pass), and every document is scored against the landed model in
+    one more corpus pass (`lm.lm_scores`), whose table lands beside it
+    and reloads with its known schema. The parquet-backed model gives
     the hint-free scoring joins accurate statistics, so a model-sized
     grid broadcasts by measurement. The four LM queries then read only
     the landed scores."""
@@ -1469,14 +1467,9 @@ def _lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
 
     def build(model_dir: str) -> DataFrame:
-        def land(name: str, df: DataFrame) -> DataFrame:
-            df.write.parquet(f"{model_dir}/{name}")
-            return spark.read.schema(df.schema).parquet(f"{model_dir}/{name}")
-
-        grid = land("grid", lm.bigram_grid(docs))
-        cont = land("cont", lm.bigram_cont(grid))
-        ctx = land("ctx", lm.bigram_ctx(grid, cont))
-        return land("scores", lm.lm_scores(docs, grid, ctx, cont))
+        scores = lm.lm_scores(docs, *lm.lm_fit(docs, model_dir))
+        scores.write.parquet(f"{model_dir}/scores")
+        return spark.read.schema(scores.schema).parquet(f"{model_dir}/scores")
 
     return serve_store.serve(spark, sf_dir, "lm_model", ("documents",), build)
 
@@ -3736,25 +3729,25 @@ FROM base WHERE ppl IS NULL
 def lm_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet's third curation pillar (Wenzek et al. 2020) next to the
     engine's lang-id and dedup tiers: per-language add-one bigram LMs
-    trained in ONE grouping-sets pass, every document scored by its
-    language's model, each language ntile'd into head/middle/tail
+    fitted in one corpus-sized aggregation, every document scored by
+    its language's model, each language ntile'd into head/middle/tail
     perplexity thirds with a deterministic (ppl, doc_id) tie-break so
     the lossy filter itself hash-checks (`operators/lm.py`).
     Sub-2-token docs land in the 'unscored' sentinel bucket instead of
     a NULL the gate can't sort. Scale shape (docs/SCALE_PROBE.md):
     the fitted grid is NOT bounded — distinct
     bigrams grow with corpus vocabulary (Heaps' law, measured
-    75k→77M rows over the K=1..1000 clone probe) — so train exposes a
-    ``min_count`` pruning knob and the serve joins carry NO broadcast
-    hint: the model lands AT REST (parquet, accurate statistics) and
-    AQE broadcasts it only when it measures small, falling back to a
-    shuffled join instead of an OOM past the threshold. The fit and
-    the per-doc scores of both families are cached per (session,
-    corpus) — the same train/serve split as the NB classifier and the
-    ANN indexes — and one score table serves all four LM queries
-    (`_lm_scores`); this query is an ntile over it. It registers first
-    of them, so bench.py's cold_build_seconds row for it carries the
-    shared fit."""
+    75k→77M rows over the K=1..1000 clone probe) — so `lm.lm_fit`
+    exposes a ``min_count`` pruning knob and the serve joins carry NO
+    broadcast hint: the model lands AT REST (parquet, accurate
+    statistics) and AQE broadcasts it only when it measures small,
+    falling back to a shuffled join instead of an OOM past the
+    threshold. The fit and the per-doc scores of both families are
+    built once per (session, corpus) — the same train/serve split as
+    the NB classifier and the ANN indexes — and one score table serves
+    all four LM queries (`_lm_scores`); this query is an ntile over it.
+    It registers first of them, so bench.py's cold_build_seconds row
+    for it carries the shared fit."""
     from crypto_data_pipeline_spark.operators.lm import ntile_buckets
 
     return ntile_buckets(_lm_scores(spark, sf_dir))
@@ -3818,14 +3811,12 @@ def lm_perplexity_buckets_kn(spark: SparkSession, sf_dir: str) -> DataFrame:
     continuation probabilities by context diversity — what CCNet's
     actual models use) instead of add-one, same per-language
     head/middle/tail split and 'unscored' sentinel
-    (`operators/lm.py:bigram_lm_kn_train/kn_perplexity_buckets`).
-    Every quantity is an integer-count ratio, so even this smoothing
-    family hash-checks against a plain-SQL DuckDB twin. Train is
-    still ONE corpus-sized shuffle — the KN statistics (context
-    diversity, continuation counts, distinct-bigram totals) all
-    derive from the model-sized grid. The KN scores are a column of
-    the shared at-rest score table (`_lm_scores`), so this query is an
-    ntile over it."""
+    (`operators/lm.py:lm_scores`, its ``ppl_kn`` column). Every
+    quantity is an integer-count ratio, so even this smoothing family
+    hash-checks against a plain-SQL DuckDB twin. Both families come
+    from the same `lm.lm_fit` model and the same shared at-rest score
+    table (`_lm_scores`), so this query is an ntile over its
+    ``ppl_kn`` column."""
     from crypto_data_pipeline_spark.operators.lm import ntile_buckets
 
     return ntile_buckets(_lm_scores(spark, sf_dir), ppl="ppl_kn")

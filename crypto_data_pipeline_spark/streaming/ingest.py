@@ -419,63 +419,38 @@ def stream_lm_score(
     out_root: str,
     checkpoint_dir: str,
     schema,
-    model: tuple[DataFrame, ...],
+    model: tuple[DataFrame, DataFrame, DataFrame],
     bounds: DataFrame,
-    text: str = "text",
-    id_col: str = "doc_id",
-    lang: str = "lang",
+    ppl: str = "ppl",
 ) -> StreamingQuery:
     """Streaming LM quality filter — the serve-online half of the
     bigram LM's train/serve split, symmetric with `stream_classify`:
-    every arriving document delivery is scored against the
-    checkpointed model and bucketed against the FROZEN per-language
-    boundary table (`operators/lm.py:perplexity_boundaries` /
-    `kn_perplexity_boundaries` — exactly the artifact the
-    zero-global-sort batch variant computes), landing
-    ``(doc_id, lang, n_bigrams, ppl, bucket)`` as immutable
-    ``batch_id=N`` directories. ``model`` selects the smoothing
-    family by arity: the add-one pair (grid, ctx) serves through
-    `perplexity_buckets_frozen`, the Kneser-Ney triple
-    (grid, ctx, cont) through `kn_perplexity_buckets_frozen` — both
-    share the frozen-boundary contract, so stream==batch holds for
-    either family.
+    every arriving document delivery is scored against the at-rest
+    model (the `operators/lm.py:lm_fit` triple) and bucketed by its
+    score column ``ppl`` (``"ppl"`` add-one or ``"ppl_kn"``
+    Kneser-Ney) against the FROZEN per-language boundary table
+    (`lm.tercile_bounds`), landing ``(doc_id, lang, n_bigrams, ppl,
+    bucket)`` as immutable ``batch_id=N`` directories through
+    `lm.bounded_buckets`.
 
     Because buckets come from frozen boundaries, a document's row is
     independent of what else shares its micro-batch — stream output
-    equals the batch twin (`perplexity_buckets_frozen`) under ANY
-    delivery split, which the test pins across >= 3 orders. The model
-    joins are AQE's choice (pruned model -> broadcast; oversized ->
-    shuffled), the boundary join is an explicitly-broadcast |langs|x2
-    frame, and the stream is never shuffled except by its own doc
-    key. Per-batch overwrite dirs make at-least-once replay
-    idempotent; availableNow = catch-up-and-stop."""
-    from crypto_data_pipeline_spark.operators.lm import (
-        kn_perplexity_buckets_frozen,
-        perplexity_buckets_frozen,
-    )
+    equals the batch form (`bounded_buckets(lm_scores(docs, *model),
+    bounds, ppl)`) under ANY delivery split, which the test pins across
+    >= 3 orders. The model joins are AQE's choice (pruned model ->
+    broadcast; oversized -> shuffled), the boundary join is an
+    explicitly-broadcast |langs|x2 frame, and the stream is never
+    shuffled except by its own doc key. Per-batch overwrite dirs make
+    at-least-once replay idempotent; availableNow =
+    catch-up-and-stop."""
+    from crypto_data_pipeline_spark.operators.lm import bounded_buckets, lm_scores
 
-    # dispatch on the model's SHAPE, not bare arity: the third frame of
-    # the KN triple is cont (lang, w2, n1p_w2). A (grid, ctx, bounds)
-    # 3-tuple from load_lm_model(with_bounds=True) must fail here with
-    # a usable message, not reach the KN scorer and die per-batch on
-    # missing columns — bounds travels as its own argument
-    if len(model) == 2:
-        scorer = perplexity_buckets_frozen
-    elif len(model) == 3 and "n1p_w2" in model[2].columns:
-        scorer = kn_perplexity_buckets_frozen
-    else:
-        raise ValueError(
-            "model must be the add-one pair (grid, ctx) or the KN triple "
-            f"(grid, ctx, cont); got {len(model)} frames with last columns "
-            f"{list(model[-1].columns)} — pass the boundary table via the "
-            "separate `bounds` argument"
-        )
     stream = spark.readStream.schema(schema).parquet(bronze_dir)
 
     def score(batch: DataFrame, batch_id: int) -> None:
-        scorer(
-            batch, bounds, lang=lang, text=text, doc_id=id_col, model=model
-        ).write.mode("overwrite").parquet(f"{out_root}/batch_id={batch_id}")
+        bounded_buckets(lm_scores(batch, *model), bounds, ppl).write.mode(
+            "overwrite"
+        ).parquet(f"{out_root}/batch_id={batch_id}")
 
     return (
         stream.writeStream.foreachBatch(score)
@@ -534,18 +509,15 @@ def stream_rho_select(
     schema,
     model: tuple[DataFrame, DataFrame, DataFrame],
     cutoff: DataFrame,
-    text: str = "text",
-    id_col: str = "doc_id",
-    lang: str = "lang",
 ) -> StreamingQuery:
     """Streaming RHO-loss learnability selection — the serve-online
     half of the excess-perplexity split, symmetric with
     `stream_lm_score` and `stream_dsir_score`: every arriving document
-    delivery is scored in one pass by the frozen Kneser-Ney triple
-    ``model`` (the strong reference) and its add-one projection (the
-    weak base), the per-token log-loss delta is
-    thresholded against the FROZEN excess cutoff
-    (`operators/lm.py:rho_excess_select_frozen`), and
+    delivery is scored in one pass by the at-rest model (the
+    `operators/lm.py:lm_fit` triple; Kneser-Ney is the strong
+    reference, its add-one projection the weak base), the per-token
+    log-loss delta is thresholded against the FROZEN excess cutoff
+    (`lm.rho_excess_select_frozen`), and
     ``(doc_id, lang, ppl_base, ppl_ref, excess, kept)`` lands as
     immutable ``batch_id=N`` overwrite directories (at-least-once
     replay is a no-op rewrite). kept is a pure per-document predicate
@@ -559,10 +531,9 @@ def stream_rho_select(
     stream = spark.readStream.schema(schema).parquet(bronze_dir)
 
     def score(batch: DataFrame, batch_id: int) -> None:
-        rho_excess_select_frozen(
-            batch, model, cutoff,
-            lang=lang, text=text, doc_id=id_col,
-        ).write.mode("overwrite").parquet(f"{out_root}/batch_id={batch_id}")
+        rho_excess_select_frozen(batch, model, cutoff).write.mode(
+            "overwrite"
+        ).parquet(f"{out_root}/batch_id={batch_id}")
 
     return (
         stream.writeStream.foreachBatch(score)

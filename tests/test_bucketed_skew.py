@@ -234,20 +234,17 @@ def test_aqe_splits_skewed_smj_at_runtime(spark):
 
 
 @pytest.mark.slow
-def test_lm_serve_shuffled_fallback_splits_token_skew(spark):
-    """Round-8 stretch: when the LM model joins fall back to shuffled
-    (round-8 removed the broadcast hints so oversized models degrade
-    instead of OOMing), the corpus side shuffles on (lang, w1[, w2]).
+def test_lm_serve_shuffled_fallback_splits_token_skew(spark, tmp_path):
+    """When the LM model joins fall back to shuffled (they carry no
+    broadcast hint, so an oversized model degrades instead of OOMing),
+    the corpus side shuffles on (lang, w1[, w2]) or (lang, w2).
     Language skew alone DISPERSES over that key (the token columns
     ride in the hash), but token-frequency skew — Zipf stop-words —
     concentrates partitions for real. Contract: with a 90%-mass hot
     bigram and broadcast disabled, AQE splits the skewed partitions
-    (SortMergeJoin(skew=true)) on BOTH model joins, and the output is
-    identical to the broadcast path's."""
-    from crypto_data_pipeline_spark.operators.lm import (
-        bigram_lm_perplexity,
-        bigram_lm_train,
-    )
+    (SortMergeJoin(skew=true)) on ALL THREE model joins (ctx, grid,
+    cont), and the output is identical to the broadcast path's."""
+    from crypto_data_pipeline_spark.operators.lm import lm_fit, lm_scores
 
     hot = [(i, "en", "the cat " * 30) for i in range(9000)]
     tail = [
@@ -259,11 +256,8 @@ def test_lm_serve_shuffled_fallback_splits_token_skew(spark):
         .repartition(32)
         .localCheckpoint(eager=True)
     )
-    grid, ctx = bigram_lm_train(docs)
-    want = {
-        (r.doc_id, r.n_bigrams, r.ppl)
-        for r in bigram_lm_perplexity(docs, grid, ctx).collect()
-    }
+    model = lm_fit(docs, str(tmp_path / "model"))
+    want = {tuple(r) for r in lm_scores(docs, *model).collect()}
 
     keys = (
         "spark.sql.autoBroadcastJoinThreshold",
@@ -287,13 +281,13 @@ def test_lm_serve_shuffled_fallback_splits_token_skew(spark):
     spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8KB")
     spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
     try:
-        df = bigram_lm_perplexity(docs, grid, ctx)
-        got = {(r.doc_id, r.n_bigrams, r.ppl) for r in df.collect()}
+        df = lm_scores(docs, *model)
+        got = {tuple(r) for r in df.collect()}
         plan = (
             df._jdf.queryExecution().executedPlan().toString()
             .split("== Initial Plan ==")[0]
         )
-        assert plan.count("SortMergeJoin(skew=true)") == 2, plan
+        assert plan.count("SortMergeJoin(skew=true)") == 3, plan
         assert got == want
     finally:
         for k, v in saved.items():

@@ -17,11 +17,15 @@ def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, lang string, text string")
 
 
-def test_bigram_lm_hand_computed(spark):
+def _fit(docs, path, min_count: int = 1):
+    return lm.lm_fit(docs, str(path), min_count=min_count)
+
+
+def test_bigram_lm_hand_computed(spark, tmp_path):
     """Corpus 'a b a b' + 'a b': grid/ctx counts and the scored
     cross-entropy must equal the arithmetic done by hand."""
     docs = _docs(spark, [(1, "en", "a b a b"), (2, "en", "a b")])
-    grid, ctx = lm.bigram_lm_train(docs)
+    grid, ctx, cont = _fit(docs, tmp_path / "m1")
     g = {(r.w1, r.w2): r.c12 for r in grid.collect()}
     # bigrams: doc1 -> (a,b),(b,a),(a,b); doc2 -> (a,b)
     assert g == {("a", "b"): 3, ("b", "a"): 1}
@@ -30,7 +34,7 @@ def test_bigram_lm_hand_computed(spark):
 
     ppl = {
         r.doc_id: (r.n_bigrams, r.ppl)
-        for r in lm.bigram_lm_perplexity(docs, grid, ctx).collect()
+        for r in lm.lm_scores(docs, grid, ctx, cont).collect()
     }
     # P(b|a) = (3+1)/(3+2) = 0.8 ; P(a|b) = (1+1)/(1+2) = 2/3
     p_ab, p_ba = 0.8, 2.0 / 3.0
@@ -40,19 +44,19 @@ def test_bigram_lm_hand_computed(spark):
 
     # min_count=2: (b,a) and context b fall out of the model; vsize
     # stays 2, so P(a|b) = (0+1)/(0+2) on the smoothing path
-    grid, ctx = lm.bigram_lm_train(docs, min_count=2)
+    grid, ctx, cont = _fit(docs, tmp_path / "m2", min_count=2)
     assert {(r.w1, r.w2): r.c12 for r in grid.collect()} == {("a", "b"): 3}
     assert {r.w1: (r.c1, r.vsize) for r in ctx.collect()} == {"a": (3, 2)}
     ppl = {
         r.doc_id: (r.n_bigrams, r.ppl)
-        for r in lm.bigram_lm_perplexity(docs, grid, ctx).collect()
+        for r in lm.lm_scores(docs, grid, ctx, cont).collect()
     }
     h1 = -(math.log(p_ab) + math.log(0.5) + math.log(p_ab)) / 3
     assert ppl[1] == (3, round(math.exp(h1) + 1e-9, 6))
     assert ppl[2] == (1, round(1 / p_ab + 1e-9, 6))
 
 
-def test_language_models_are_isolated_and_sentinel_bucket(spark):
+def test_language_models_are_isolated_and_sentinel_bucket(spark, tmp_path):
     """A bigram seen often in one language must not raise its
     probability in another (per-language grids); docs without a bigram
     land in 'unscored' with the -1.0 sentinel; scored docs ntile into
@@ -64,7 +68,9 @@ def test_language_models_are_isolated_and_sentinel_bucket(spark):
         + [(12, "fr", "q r")]
         + [(20, "en", "solo")]  # 1 token -> unscorable
     )
-    out = {r.doc_id: r for r in lm.perplexity_buckets(_docs(spark, rows)).collect()}
+    docs = _docs(spark, rows)
+    scores = lm.lm_scores(docs, *_fit(docs, tmp_path))
+    out = {r.doc_id: r for r in lm.ntile_buckets(scores).collect()}
     assert out[20].bucket == "unscored" and out[20].ppl == -1.0
     # fr's model: bigrams (x,y)x1, (q,r)x2, vsize = {y, r} = 2
     # doc10: P(y|x) = (1+1)/(1+2) -> ppl = 1.5
@@ -75,184 +81,150 @@ def test_language_models_are_isolated_and_sentinel_bucket(spark):
     assert buckets == {"head", "middle", "tail"}
 
 
-def test_serve_path_unseen_context_and_unscorable_docs(spark):
-    """Round-7 review findings, both verified-by-execution: (a) a
-    served doc whose context word the model never saw must score with
-    the documented 1/V smoothing, not a NULL that sorts into 'head';
-    (b) NULL-text docs (ANSI size(NULL) is NULL, not -1) and docs of a
-    language the model never saw must surface as 'unscored', never
-    vanish from the output."""
-    train = _docs(spark, [(1, "en", "a b a b")])
-    grid, ctx = lm.bigram_lm_train(train)
+def test_serve_path_unseen_context_and_unscorable_docs(spark, tmp_path):
+    """(a) a served doc whose context word the model never saw must
+    score with the documented 1/V smoothing, not a NULL that sorts into
+    'head'; (b) NULL-text docs (ANSI size(NULL) is NULL, not -1) and
+    docs of a language the model never saw must surface as 'unscored',
+    never vanish from the output."""
+    model = _fit(_docs(spark, [(1, "en", "a b a b")]), tmp_path)
 
     # (a) unseen context 'z': P = 1/V = 1/2 per bigram -> ppl = 2.0
     serve = _docs(spark, [(10, "en", "z q z q")])
-    got = lm.bigram_lm_perplexity(serve, grid, ctx).collect()
+    got = lm.lm_scores(serve, *model).collect()
     assert [(r.doc_id, r.n_bigrams, r.ppl) for r in got] == [
         (10, 3, round(2.0 + 1e-9, 6))
     ]
 
     # (b) NULL text, single token, and untrained language all bucket
-    # as 'unscored' in BOTH bucket variants — nothing disappears
+    # as 'unscored' in BOTH bucket forms — nothing disappears
     serve2 = _docs(
         spark,
         [(20, "en", "a b a"), (21, "en", None), (22, "en", "solo"),
          (23, "xx", "a b a b")],
     )
-    for fn in (lm.perplexity_buckets, lm.perplexity_buckets_approx):
-        out = {r.doc_id: r.bucket for r in fn(serve2, model=(grid, ctx)).collect()}
-        assert set(out) == {20, 21, 22, 23}, fn.__name__
-        assert out[21] == out[22] == out[23] == "unscored", fn.__name__
-        assert out[20] != "unscored", fn.__name__
+    s = lm.lm_scores(serve2, *model)
+    for form, df in (("ntile", lm.ntile_buckets(s)),
+                     ("bounded", lm.bounded_buckets(s, lm.tercile_bounds(s)))):
+        out = {r.doc_id: r.bucket for r in df.collect()}
+        assert set(out) == {20, 21, 22, 23}, form
+        assert out[21] == out[22] == out[23] == "unscored", form
+        assert out[20] != "unscored", form
 
 
-@pytest.mark.slow
-def test_lm_matches_python_reference_on_random_corpora(spark):
-    """Seeded random corpora replayed against a literal Python model
-    (same coverage idea as hypothesis, one session — the
-    test_cdc_properties pattern): bigram counts, add-one probabilities,
-    6-dp perplexities AND the per-language ntile bucket assignment must
-    all agree, including unscorable docs and languages whose corpus has
-    no bigram at all."""
-    import random
-    import re
-    from collections import Counter, defaultdict
-
-    def py_model(rows):
-        grids, ctxs, vocs = {}, {}, defaultdict(set)
-        per_doc = {}
-        for did, lang, t in rows:
-            ts = re.sub(r"\s+", " ", t.strip().lower()).split(" ")
-            pairs = list(zip(ts[:-1], ts[1:]))
-            per_doc[did] = (lang, pairs)
-            grids.setdefault(lang, Counter()).update(pairs)
-            ctxs.setdefault(lang, Counter()).update(w1 for w1, _ in pairs)
-            vocs[lang].update(w2 for _, w2 in pairs)
-        out = {}
-        for did, (lang, pairs) in per_doc.items():
-            if not pairs:
-                out[did] = [lang, 0, -1.0, "unscored"]
-                continue
-            lp = [
-                math.log(
-                    (grids[lang][p] + 1) / (ctxs[lang][p[0]] + len(vocs[lang]))
-                )
-                for p in pairs
-            ]
-            ppl = round(math.exp(-sum(lp) / len(lp)) + 1e-9, 6)
-            out[did] = [lang, len(pairs), ppl, None]
-        for lang in {r[1] for r in rows}:
-            scored = sorted(
-                (d for d in out if out[d][0] == lang and out[d][3] is None),
-                key=lambda d: (out[d][2], d),
-            )
-            n, k = len(scored), 3
-            sizes = [n // k + (1 if i < n % k else 0) for i in range(k)]
-            i = 0
-            for bucket, sz in zip(("head", "middle", "tail"), sizes):
-                for d in scored[i:i + sz]:
-                    out[d][3] = bucket
-                i += sz
-        return {d: tuple(v) for d, v in out.items()}
-
-    rng = random.Random(13)
-    alphabet = ["aa", "bb", "cc", "dd", "ee"]
-    for case in range(15):
-        rows = []
-        for did in range(rng.randint(3, 12)):
-            lang = rng.choice(["en", "fr"])
-            n = rng.randint(1, 8)
-            rows.append(
-                (did, lang, " ".join(rng.choice(alphabet) for _ in range(n)))
-            )
-        got = {
-            r.doc_id: (r.lang, r.n_bigrams, r.ppl, r.bucket)
-            for r in lm.perplexity_buckets(_docs(spark, rows)).collect()
-        }
-        assert got == py_model(rows), (case, rows)
+def _py_terciles(out: dict) -> dict:
+    """File each language's scored docs (bucket None) into
+    head/middle/tail by (ppl, doc_id), the ntile(3) split."""
+    for lang in {v[0] for v in out.values()}:
+        scored = sorted(
+            (d for d in out if out[d][0] == lang and out[d][3] is None),
+            key=lambda d: (out[d][2], d),
+        )
+        n, k = len(scored), 3
+        sizes = [n // k + (1 if i < n % k else 0) for i in range(k)]
+        i = 0
+        for bucket, sz in zip(("head", "middle", "tail"), sizes):
+            for d in scored[i:i + sz]:
+                out[d][3] = bucket
+            i += sz
+    return {d: tuple(v) for d, v in out.items()}
 
 
-@pytest.mark.slow
-def test_kn_matches_python_reference_on_random_corpora(spark):
-    """Interpolated Kneser-Ney (round-8): seeded random corpora
-    replayed against a literal Python model — discounted seen mass,
-    context-diversity backoff, add-one-smoothed continuation
-    probabilities, 6-dp perplexities AND the per-language ntile
-    buckets must all agree, including unscorable docs."""
-    import random
+def _py_lm(rows, min_count: int = 1) -> dict:
+    """A literal Python model of both smoothing families:
+    {doc_id: (lang, n_bigrams, ppl, ppl_kn)}, with the 'unscored'
+    sentinels (0, -1.0, -1.0) for a doc without bigrams or of a
+    language whose every context count falls under ``min_count``.
+    Pruning: a bigram, context or continuation under ``min_count``
+    counts as 0 (a pruned context takes the unseen-context path);
+    vsize and n1p_all stay exact from the FULL counts."""
     import re
     from collections import Counter, defaultdict
 
     D = 0.75
+    grids = defaultdict(Counter)
+    per_doc = {}
+    for did, lang, t in rows:
+        ts = re.sub(r"\s+", " ", t.strip().lower()).split(" ")
+        pairs = list(zip(ts[:-1], ts[1:]))
+        per_doc[did] = (lang, pairs)
+        grids[lang].update(pairs)
+    out = {}
+    for did, (lang, pairs) in per_doc.items():
+        g = grids[lang]
+        c1, n1p_w1, n1p_w2 = Counter(), Counter(), Counter()
+        for (w1, w2), c in g.items():
+            c1[w1] += c
+            n1p_w1[w1] += 1
+            n1p_w2[w2] += 1
+        if not pairs or max(c1.values()) < min_count:
+            out[did] = (lang, 0, -1.0, -1.0)
+            continue
+        v, n1p_all = len(n1p_w2), len(g)
 
-    def py_model(rows):
-        grids = defaultdict(Counter)
-        per_doc = {}
-        for did, lg, t in rows:
-            ts = re.sub(r"\s+", " ", t.strip().lower()).split(" ")
-            pairs = list(zip(ts[:-1], ts[1:]))
-            per_doc[did] = (lg, pairs)
-            grids[lg].update(pairs)
-        stats = {}
-        for lg, g in grids.items():
-            c1, n1p_w1, n1p_w2 = Counter(), Counter(), Counter()
-            for (w1, w2), c in g.items():
-                c1[w1] += c
-                n1p_w1[w1] += 1
-                n1p_w2[w2] += 1
-            stats[lg] = (c1, n1p_w1, n1p_w2, len(g), len({w2 for _, w2 in g}))
-        out = {}
-        for did, (lg, pairs) in per_doc.items():
-            if not pairs or lg not in stats:
-                out[did] = [lg, 0, -1.0, "unscored"]
-                continue
-            c1, n1p_w1, n1p_w2, n1p_all, v = stats[lg]
-            g = grids[lg]
-            lp = []
-            for w1, w2 in pairs:
-                pcont = (n1p_w2[w2] + 1.0) / (n1p_all + v)
-                if w1 in c1:
-                    p = (
-                        max(g[(w1, w2)] - D, 0.0) / c1[w1]
-                        + D * n1p_w1[w1] / c1[w1] * pcont
-                    )
-                else:
-                    p = pcont
-                lp.append(math.log(p))
-            ppl = round(math.exp(-sum(lp) / len(lp)) + 1e-9, 6)
-            out[did] = [lg, len(pairs), ppl, None]
-        for lg in {r[1] for r in rows}:
-            scored = sorted(
-                (d for d in out if out[d][0] == lg and out[d][3] is None),
-                key=lambda d: (out[d][2], d),
+        def kept(n):
+            return n if n >= min_count else 0
+
+        lp, lp_kn = [], []
+        for w1, w2 in pairs:
+            c12, ctx = kept(g[(w1, w2)]), kept(c1[w1])
+            lp.append(math.log((c12 + 1) / (ctx + v)))
+            pcont = (kept(n1p_w2[w2]) + 1.0) / (n1p_all + v)
+            if ctx:
+                p = max(c12 - D, 0.0) / ctx + D * n1p_w1[w1] / ctx * pcont
+            else:
+                p = pcont
+            lp_kn.append(math.log(p))
+        out[did] = (lang, len(pairs)) + tuple(
+            round(math.exp(-sum(x) / len(x)) + 1e-9, 6) for x in (lp, lp_kn)
+        )
+    return out
+
+
+def _random_corpora(seed: int, n_cases: int, alphabet, min_docs, max_docs, min_toks, max_toks):
+    import random
+
+    rng = random.Random(seed)
+    for _ in range(n_cases):
+        yield [
+            (
+                did,
+                rng.choice(["en", "fr"]),
+                " ".join(rng.choice(alphabet) for _ in range(rng.randint(min_toks, max_toks))),
             )
-            n, k = len(scored), 3
-            sizes = [n // k + (1 if i < n % k else 0) for i in range(k)]
-            i = 0
-            for bucket, sz in zip(("head", "middle", "tail"), sizes):
-                for d in scored[i:i + sz]:
-                    out[d][3] = bucket
-                i += sz
-        return {d: tuple(val) for d, val in out.items()}
+            for did in range(rng.randint(min_docs, max_docs))
+        ]
 
-    rng = random.Random(41)
+
+@pytest.mark.slow
+def test_lm_matches_python_reference_on_random_corpora(spark, tmp_path):
+    """Seeded random corpora replayed against a literal Python model
+    (same coverage idea as hypothesis, one session — the
+    test_cdc_properties pattern): from ONE fit, the add-one and the
+    interpolated Kneser-Ney 6-dp perplexities (discounted seen mass,
+    context-diversity backoff, add-one-smoothed continuations) AND each
+    family's per-language ntile buckets must all agree, including
+    unscorable docs and languages whose corpus has no bigram at all."""
     alphabet = ["aa", "bb", "cc", "dd", "ee"]
-    for case in range(10):
-        rows = []
-        for did in range(rng.randint(3, 12)):
-            lg = rng.choice(["en", "fr"])
-            n = rng.randint(1, 8)
-            rows.append(
-                (did, lg, " ".join(rng.choice(alphabet) for _ in range(n)))
-            )
-        got = {
-            r.doc_id: (r.lang, r.n_bigrams, r.ppl, r.bucket)
-            for r in lm.kn_perplexity_buckets(_docs(spark, rows)).collect()
-        }
-        assert got == py_model(rows), (case, rows)
+    corpora = [*_random_corpora(13, 15, alphabet, 3, 12, 1, 8),
+               *_random_corpora(41, 10, alphabet, 3, 12, 1, 8)]
+    for case, rows in enumerate(corpora):
+        docs = _docs(spark, rows)
+        scores = lm.lm_scores(docs, *_fit(docs, tmp_path / f"m{case}"))
+        want = _py_lm(rows)
+        for i, ppl in ((2, "ppl"), (3, "ppl_kn")):
+            got = {
+                r.doc_id: (r.lang, r.n_bigrams, r.ppl, r.bucket)
+                for r in lm.ntile_buckets(scores, ppl).collect()
+            }
+            ref = _py_terciles({
+                d: [v[0], v[1], v[i], None if v[1] else "unscored"]
+                for d, v in want.items()
+            })
+            assert got == ref, (case, ppl, rows)
 
 
-def test_kn_diversity_beats_raw_frequency(spark):
+def test_kn_diversity_beats_raw_frequency(spark, tmp_path):
     """The property KN exists for: a continuation that is frequent but
     follows only ONE context ('francisco' after 'san') must get LESS
     unseen-context mass than a rarer but diverse continuation. Scored
@@ -264,164 +236,120 @@ def test_kn_diversity_beats_raw_frequency(spark):
         [(1, "en", "san zz san zz san zz san zz san zz san zz"),
          (2, "en", "aa qq bb qq cc qq dd ee")],
     )
-    grid, ctx, cont = lm.bigram_lm_kn_train(train)
+    model = _fit(train, tmp_path)
     serve = _docs(spark, [(10, "en", "unseen zz"), (11, "en", "unseen qq")])
-    got = {
-        r.doc_id: r.ppl
-        for r in lm.bigram_lm_kn_perplexity(serve, grid, ctx, cont).collect()
-    }
+    got = {r.doc_id: r.ppl_kn for r in lm.lm_scores(serve, *model).collect()}
     # lower perplexity = higher probability: the diverse 'qq' wins
     assert got[11] < got[10], got
 
 
 @pytest.mark.slow
-def test_min_count_pruning_matches_python_reference(spark):
-    """The pruning rule, pinned against a literal Python model on
-    seeded random corpora: grid keeps c12 >= min_count, ctx keeps
-    c1 >= min_count, vsize stays exact from the FULL counts, and a
-    pruned bigram/context scores through the add-one smoothing path
-    ((coalesce(c12,0)+1)/(coalesce(c1,0)+V)). min_count=1 must be
-    byte-identical to the unpruned model (exact back-compat)."""
-    import random
-    import re
-    from collections import Counter, defaultdict
-
-    def py_ppl(rows, min_count):
-        grids, ctxs, vocs = {}, {}, defaultdict(set)
-        per_doc = {}
-        for did, lang, t in rows:
-            ts = re.sub(r"\s+", " ", t.strip().lower()).split(" ")
-            pairs = list(zip(ts[:-1], ts[1:]))
-            per_doc[did] = (lang, pairs)
-            grids.setdefault(lang, Counter()).update(pairs)
-            ctxs.setdefault(lang, Counter()).update(w1 for w1, _ in pairs)
-            vocs[lang].update(w2 for _, w2 in pairs)
-        out = {}
-        for did, (lang, pairs) in per_doc.items():
-            if not pairs:
-                continue
-            # a language whose every context count falls under
-            # min_count leaves the model entirely (no ctx row carries
-            # its vsize) — its docs are 'untrained-language' and drop
-            # out of bigram_lm_perplexity (perplexity_buckets files
-            # them as 'unscored')
-            if max(ctxs[lang].values()) < min_count:
-                continue
-            lp = []
-            for p in pairs:
-                c12 = grids[lang][p] if grids[lang][p] >= min_count else 0
-                c1 = ctxs[lang][p[0]] if ctxs[lang][p[0]] >= min_count else 0
-                lp.append(math.log((c12 + 1) / (c1 + len(vocs[lang]))))
-            out[did] = (len(pairs), round(math.exp(-sum(lp) / len(lp)) + 1e-9, 6))
-        return out
-
-    rng = random.Random(29)
+def test_min_count_pruning_matches_python_reference(spark, tmp_path):
+    """The pruning rule of both families, pinned against a literal
+    Python model on seeded random corpora: grid keeps c12 >= min_count,
+    ctx keeps c1 >= min_count, cont keeps n1p_w2 >= min_count; vsize and
+    n1p_all stay exact from the FULL counts; a pruned row falls through
+    scoring's coalesce(..., 0) path (a pruned context takes the
+    unseen-context probability), and a language whose every context is
+    pruned scores as untrained. The unpruned statistics a pruned fit
+    lands under ``unpruned/`` equal the min_count=1 model."""
     alphabet = ["aa", "bb", "cc", "dd", "ee", "ff"]
-    for case in range(10):
-        rows = [
-            (
-                did,
-                rng.choice(["en", "fr"]),
-                " ".join(rng.choice(alphabet) for _ in range(rng.randint(2, 10))),
-            )
-            for did in range(rng.randint(4, 10))
-        ]
+    corpora = [*_random_corpora(29, 10, alphabet, 4, 10, 2, 10),
+               *_random_corpora(47, 10, alphabet, 4, 10, 2, 10)]
+    for case, rows in enumerate(corpora):
         docs = _docs(spark, rows)
         for mc in (1, 2, 3):
-            grid, ctx = lm.bigram_lm_train(docs, min_count=mc)
+            model = _fit(docs, tmp_path / f"m{case}_{mc}", min_count=mc)
             got = {
-                r.doc_id: (r.n_bigrams, r.ppl)
-                for r in lm.bigram_lm_perplexity(docs, grid, ctx).collect()
+                r.doc_id: (r.lang, r.n_bigrams, r.ppl, r.ppl_kn)
+                for r in lm.lm_scores(docs, *model).collect()
             }
-            assert got == py_ppl(rows, mc), (case, mc, rows)
-        # min_count=1 back-compat: model frames identical to unpruned
-        g1, c1 = lm.bigram_lm_train(docs, min_count=1)
-        g0, c0 = lm.bigram_lm_train(docs)
-        assert sorted(map(tuple, g1.collect())) == sorted(map(tuple, g0.collect()))
-        assert sorted(map(tuple, c1.collect())) == sorted(map(tuple, c0.collect()))
+            assert got == _py_lm(rows, mc), (case, mc, rows)
+        full = lm.lm_load(spark, str(tmp_path / f"m{case}_2" / "unpruned"))
+        for f1, f0 in zip(lm.lm_load(spark, str(tmp_path / f"m{case}_1")), full):
+            assert sorted(map(tuple, f1.collect())) == sorted(map(tuple, f0.collect()))
 
 
-def test_min_count_prunes_rows_and_keeps_vsize_exact(spark):
+def test_min_count_prunes_rows_and_keeps_vsize_exact(spark, tmp_path):
     """Structural check of the pruning rule on a hand-built corpus:
-    the rare bigram leaves the grid, the rare context leaves ctx, and
-    every surviving ctx row still carries the FULL vocabulary size."""
+    the rare bigram leaves the grid, the rare context leaves ctx, the
+    rare continuations leave cont, and every surviving ctx row still
+    carries the FULL vocabulary size."""
     # en: (a,b)x3, (b,a)x3, (a,c)x2, (c,a)x1  -> c1: a=5, b=3, c=1
     docs = _docs(spark, [(1, "en", "a b a b a c a b"), (2, "en", "b a c")])
-    grid, ctx = lm.bigram_lm_train(docs, min_count=2)
+    grid, ctx, cont = _fit(docs, tmp_path, min_count=2)
     g = {(r.w1, r.w2): r.c12 for r in grid.collect()}
     assert g == {("a", "b"): 3, ("b", "a"): 3, ("a", "c"): 2}  # (c,a) pruned
     c = {r.w1: (r.c1, r.vsize) for r in ctx.collect()}
     # context c (c1=1) pruned; vsize stays the FULL {a,b,c} = 3
     assert c == {"a": (5, 3), "b": (3, 3)}
+    # continuation counts: a follows {b, c}; b and c follow only a
+    assert {r.w2: r.n1p_w2 for r in cont.collect()} == {"a": 2}
 
 
-def test_lm_join_strategy_is_measured_not_hinted(spark):
-    """The fitted grid/ctx are corpus-vocabulary-proportional, so the
-    scoring joins must leave the strategy to AQE (round-8 fix; the
-    round-7 code force-broadcast them). Contract: (a) at fixture
-    scale AQE still picks BroadcastHashJoin for the model joins on its
-    own; (b) with broadcast disabled the SAME code plans a shuffled
-    join — which the old hint would have overridden unconditionally,
-    OOMing the driver on a real web-scale vocabulary."""
+def test_lm_join_strategy_is_measured_not_hinted(spark, tmp_path):
+    """The fitted grid/ctx/cont are corpus-vocabulary-proportional, so
+    the scoring joins must leave the strategy to AQE. Contract: (a) at
+    fixture scale AQE still picks BroadcastHashJoin for the model joins
+    on its own; (b) with broadcast disabled the SAME code plans a
+    shuffled join — which a broadcast hint would override
+    unconditionally, OOMing the driver on a web-scale vocabulary."""
     rows = [(i, "en", "a b c d e f g h") for i in range(50)]
     docs = _docs(spark, rows)
-    grid, ctx = lm.bigram_lm_train(docs)
+    model = _fit(docs, tmp_path)
 
     def final_plan(df) -> str:
         df._jdf.queryExecution().toRdd().count()
         return df._jdf.queryExecution().executedPlan().toString()
 
-    plan = final_plan(lm.bigram_lm_perplexity(docs, grid, ctx))
+    plan = final_plan(lm.lm_scores(docs, *model))
     assert "BroadcastHashJoin" in plan, plan  # AQE's measured choice
 
     saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        plan = final_plan(lm.bigram_lm_perplexity(docs, grid, ctx))
+        plan = final_plan(lm.lm_scores(docs, *model))
         assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
 
 
 def test_model_at_rest_roundtrip_and_broadcast(spark, tmp_path):
-    """save_lm_model/load_lm_model: a model reloaded from parquet must
-    score byte-identically to the in-session fit (grid/ctx/bounds all
-    round-trip), and — the planner half of the contract — a pruned
-    megabyte-scale model read from REST must BROADCAST in the scoring
-    plan, because a parquet scan carries accurate size statistics
-    where checkpoint lineage estimates can be wildly wrong."""
+    """`lm_fit` lands the model losslessly: the pruned frames read back
+    from rest (and again by `lm_load`) equal the lineage-only fit
+    (`bigram_grid` -> `bigram_cont` -> `bigram_ctx`, pruned), and both
+    score columns of the reloaded model equal the returned one's. The
+    planner half: a pruned model read from REST must BROADCAST in ALL
+    FOUR scoring joins (the totals hint, ctx/grid/cont by measurement),
+    because a parquet scan carries accurate size statistics."""
     rows = [(i, "en", f"a b a c tok{i % 40} a b") for i in range(200)] + [
         (500 + i, "fr", f"x y x z w{i % 11}") for i in range(60)
     ]
     docs = _docs(spark, rows)
-    grid, ctx = lm.bigram_lm_train(docs, min_count=2)
-    bounds = lm.perplexity_boundaries(docs, model=(grid, ctx))
-    want = {
-        (r.doc_id, r.n_bigrams, r.ppl, r.bucket)
-        for r in lm.perplexity_buckets_frozen(
-            docs, bounds, model=(grid, ctx)
-        ).collect()
-    }
+    model = _fit(docs, tmp_path / "m", min_count=2)
 
-    lm.save_lm_model(str(tmp_path / "m"), grid, ctx, bounds)
-    g2, c2, b2 = lm.load_lm_model(spark, str(tmp_path / "m"), with_bounds=True)
-    assert sorted(map(tuple, g2.collect())) == sorted(map(tuple, grid.collect()))
-    assert sorted(map(tuple, c2.collect())) == sorted(map(tuple, ctx.collect()))
+    grid = lm.bigram_grid(docs)
+    cont = lm.bigram_cont(grid)
+    lineage = (grid, lm.bigram_ctx(grid, cont), cont)
+    reloaded = lm.lm_load(spark, str(tmp_path / "m"))
+    for landed, again, fitted, count in zip(
+        model, reloaded, lineage, ("c12", "c1", "n1p_w2")
+    ):
+        want = sorted(map(tuple, fitted.where(F.col(count) >= 2).collect()))
+        assert sorted(map(tuple, landed.collect())) == want
+        assert sorted(map(tuple, again.collect())) == want
 
-    served = lm.perplexity_buckets_frozen(docs, b2, model=(g2, c2))
-    got = {
-        (r.doc_id, r.n_bigrams, r.ppl, r.bucket) for r in served.collect()
-    }
-    assert got == want
+    assert set(lm.lm_scores(docs, *reloaded).collect()) == set(
+        lm.lm_scores(docs, *model).collect()
+    )
 
-    scored = lm.bigram_lm_perplexity(docs, g2, c2)
+    scored = lm.lm_scores(docs, *reloaded)
     scored._jdf.queryExecution().toRdd().count()
     plan = (
         scored._jdf.queryExecution().executedPlan().toString()
         .split("== Initial Plan ==")[0]
     )
-    # all three model joins broadcast off the parquet statistics
-    assert plan.count("BroadcastHashJoin") == 3, plan
+    assert plan.count("BroadcastHashJoin") == 4, plan
     assert "SortMergeJoin" not in plan, plan
 
 
@@ -573,31 +501,33 @@ def test_lm_serve_caches_refit_on_changed_documents(spark, tmp_path, lm_tmpdir):
     assert entry.fingerprint == serve_store.fingerprint(sf, ("documents",))
 
 
-def test_approx_buckets_agree_with_exact(spark, sf_dir):
-    """The zero-global-sort variant must (a) plan NO sort/ntile window
-    over the scored docs, and (b) assign the same bucket as the exact
-    tercile split for nearly every document — disagreement is confined
+def test_approx_buckets_agree_with_exact(spark, sf_dir, tmp_path):
+    """Bucketing against frozen bounds of the same scores
+    (`bounded_buckets(s, tercile_bounds(s))`, the zero-global-sort
+    form) must (a) plan NO sort/ntile window over the scored docs, and
+    (b) assign the same bucket as the exact tercile split for nearly
+    every document, under both score columns — disagreement is confined
     to boundary ranks (the sketch's documented rank-error), never a
     wholesale shift."""
     from crypto_data_pipeline_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    exact = {
-        r.doc_id: r.bucket for r in lm.perplexity_buckets(docs).collect()
-    }
-    approx_df = lm.perplexity_buckets_approx(docs)
-    approx = {r.doc_id: r.bucket for r in approx_df.collect()}
-    assert set(approx) == set(exact)
-    agree = sum(1 for d in exact if exact[d] == approx[d])
-    assert agree / len(exact) >= 0.95, (agree, len(exact))
-    # every disagreement is a neighbor-bucket slip, never head<->tail
+    s = lm.lm_scores(docs, *_fit(docs, tmp_path))
     order = {"head": 0, "middle": 1, "tail": 2, "unscored": -1}
-    for d in exact:
-        assert abs(order[exact[d]] - order[approx[d]]) <= 1, d
+    for ppl in ("ppl", "ppl_kn"):
+        exact = {r.doc_id: r.bucket for r in lm.ntile_buckets(s, ppl).collect()}
+        approx_df = lm.bounded_buckets(s, lm.tercile_bounds(s, ppl), ppl)
+        approx = {r.doc_id: r.bucket for r in approx_df.collect()}
+        assert set(approx) == set(exact), ppl
+        agree = sum(1 for d in exact if exact[d] == approx[d])
+        assert agree / len(exact) >= 0.95, (ppl, agree, len(exact))
+        # every disagreement is a neighbor-bucket slip, never head<->tail
+        for d in exact:
+            assert abs(order[exact[d]] - order[approx[d]]) <= 1, (ppl, d)
 
-    plan = approx_df._jdf.queryExecution().executedPlan().toString()
-    assert "ntile(" not in plan.lower()  # ('percentile_approx' is fine)
-    assert "rangepartitioning" not in plan.lower()  # no global sort
+        plan = approx_df._jdf.queryExecution().executedPlan().toString()
+        assert "ntile(" not in plan.lower()  # ('percentile_approx' is fine)
+        assert "rangepartitioning" not in plan.lower()  # no global sort
 
 
 def test_lm_plan_contract(spark, sf_dir):
@@ -612,7 +542,7 @@ def test_lm_plan_contract(spark, sf_dir):
 
     df = load_with_extras()["lm_perplexity_buckets"].fn(spark, sf_dir)
     served = df._jdf.queryExecution().executedPlan().toString()
-    model = lm.load_lm_model(spark, serve_store._ENTRIES["lm_model"].tmp, with_cont=True)
+    model = lm.lm_load(spark, serve_store._ENTRIES["lm_model"].tmp)
     scoring = lm.lm_scores(load_table(spark, sf_dir, "documents"), *model)
     plan = scoring._jdf.queryExecution().executedPlan().toString()
     for p in (served, plan):
@@ -620,130 +550,3 @@ def test_lm_plan_contract(spark, sf_dir):
         assert "CartesianProduct" not in p
     assert "Join" not in served  # the served query scores nothing
     assert "BroadcastHashJoin" in plan  # the model joins broadcast
-
-
-@pytest.mark.slow
-def test_kn_min_count_pruning_matches_python_reference(spark):
-    """The KN pruning rule (round-9), pinned against a literal Python
-    model on seeded random corpora: grid keeps c12 >= min_count, ctx
-    keeps c1 >= min_count, cont keeps n1p_w2 >= min_count;
-    n1p_all/vsize stay exact from the FULL counts; a pruned row falls
-    through scoring's coalesce(..., 0) path (a pruned context takes
-    the unseen-context backoff). min_count=1 must be byte-identical to
-    the unpruned triple (exact back-compat, cont included)."""
-    import random
-    import re
-    from collections import Counter, defaultdict
-
-    D = 0.75
-
-    def py_ppl(rows, mc):
-        grids = defaultdict(Counter)
-        per_doc = {}
-        for did, lg, t in rows:
-            ts = re.sub(r"\s+", " ", t.strip().lower()).split(" ")
-            pairs = list(zip(ts[:-1], ts[1:]))
-            per_doc[did] = (lg, pairs)
-            grids[lg].update(pairs)
-        stats = {}
-        for lg, g in grids.items():
-            c1, n1p_w1, n1p_w2 = Counter(), Counter(), Counter()
-            for (w1, w2), c in g.items():
-                c1[w1] += c
-                n1p_w1[w1] += 1
-                n1p_w2[w2] += 1
-            stats[lg] = (c1, n1p_w1, n1p_w2, len(g), len({w2 for _, w2 in g}))
-        out = {}
-        for did, (lg, pairs) in per_doc.items():
-            if not pairs or lg not in stats:
-                continue
-            c1, n1p_w1, n1p_w2, n1p_all, v = stats[lg]
-            # a language whose every context is pruned leaves the model
-            if max(c1.values()) < mc:
-                continue
-            g = grids[lg]
-            lp = []
-            for w1, w2 in pairs:
-                nw2 = n1p_w2[w2] if n1p_w2[w2] >= mc else 0
-                pcont = (nw2 + 1.0) / (n1p_all + v)
-                if c1[w1] >= mc:  # surviving ctx row
-                    c12 = g[(w1, w2)] if g[(w1, w2)] >= mc else 0
-                    p = (
-                        max(c12 - D, 0.0) / c1[w1]
-                        + D * n1p_w1[w1] / c1[w1] * pcont
-                    )
-                else:  # pruned ctx -> unseen-context backoff
-                    p = pcont
-                lp.append(math.log(p))
-            out[did] = (len(pairs), round(math.exp(-sum(lp) / len(lp)) + 1e-9, 6))
-        return out
-
-    rng = random.Random(47)
-    alphabet = ["aa", "bb", "cc", "dd", "ee", "ff"]
-    for case in range(10):
-        rows = [
-            (
-                did,
-                rng.choice(["en", "fr"]),
-                " ".join(rng.choice(alphabet) for _ in range(rng.randint(2, 10))),
-            )
-            for did in range(rng.randint(4, 10))
-        ]
-        docs = _docs(spark, rows)
-        for mc in (1, 2, 3):
-            grid, ctx, cont = lm.bigram_lm_kn_train(docs, min_count=mc)
-            got = {
-                r.doc_id: (r.n_bigrams, r.ppl)
-                for r in lm.bigram_lm_kn_perplexity(docs, grid, ctx, cont).collect()
-            }
-            assert got == py_ppl(rows, mc), (case, mc, rows)
-        # min_count=1 back-compat: all THREE frames identical to unpruned
-        t1 = lm.bigram_lm_kn_train(docs, min_count=1)
-        t0 = lm.bigram_lm_kn_train(docs)
-        for f1, f0 in zip(t1, t0):
-            assert sorted(map(tuple, f1.collect())) == sorted(map(tuple, f0.collect()))
-
-
-@pytest.mark.slow
-def test_kn_model_at_rest_roundtrip_and_broadcast(spark, tmp_path):
-    """The KN triple held to the add-one model's round-8 standard:
-    save_lm_model(..., cont=)/load_lm_model(..., with_cont=True) must
-    round-trip all three frames plus bounds, the reloaded model must
-    serve byte-identically, and — the planner half — a pruned model
-    read from REST must broadcast in ALL FOUR scoring joins off the
-    parquet statistics (totals hint + ctx/grid/cont by measurement)."""
-    rows = [(i, "en", f"a b a c tok{i % 40} a b") for i in range(200)] + [
-        (500 + i, "fr", f"x y x z w{i % 11}") for i in range(60)
-    ]
-    docs = _docs(spark, rows)
-    grid, ctx, cont = lm.bigram_lm_kn_train(docs, min_count=2)
-    bounds = lm.kn_perplexity_boundaries(docs, model=(grid, ctx, cont))
-    want = {
-        (r.doc_id, r.n_bigrams, r.ppl, r.bucket)
-        for r in lm.kn_perplexity_buckets_frozen(
-            docs, bounds, model=(grid, ctx, cont)
-        ).collect()
-    }
-
-    lm.save_lm_model(str(tmp_path / "m"), grid, ctx, bounds, cont=cont)
-    g2, c2, ct2, b2 = lm.load_lm_model(
-        spark, str(tmp_path / "m"), with_bounds=True, with_cont=True
-    )
-    for fresh, fitted in ((g2, grid), (c2, ctx), (ct2, cont)):
-        assert sorted(map(tuple, fresh.collect())) == sorted(
-            map(tuple, fitted.collect())
-        )
-
-    served = lm.kn_perplexity_buckets_frozen(docs, b2, model=(g2, c2, ct2))
-    got = {(r.doc_id, r.n_bigrams, r.ppl, r.bucket) for r in served.collect()}
-    assert got == want
-
-    scored = lm.bigram_lm_kn_perplexity(docs, g2, c2, ct2)
-    scored._jdf.queryExecution().toRdd().count()
-    plan = (
-        scored._jdf.queryExecution().executedPlan().toString()
-        .split("== Initial Plan ==")[0]
-    )
-    # all four model joins broadcast off the parquet statistics
-    assert plan.count("BroadcastHashJoin") == 4, plan
-    assert "SortMergeJoin" not in plan, plan

@@ -127,6 +127,32 @@ def test_naive_bayes_classifier_mechanics(spark):
     assert preds[12].score == want
 
 
+def test_landed_nb_model_loads_without_a_job(spark, tmp_path):
+    """`load_nb_model` reads the landed frames with their known schemas:
+    the reload launches no footer-inference job, and the frames come
+    back with the fitted model's columns, types and rows."""
+    from crypto_data_pipeline_spark.ml.classify import load_nb_model, nb_train, save_nb_model
+
+    train = spark.createDataFrame(
+        [(1, "a", "cat dog"), (2, "b", "bird worm")], "doc_id long, lang string, text string"
+    )
+    fitted = nb_train(train, label="lang")
+    save_nb_model(str(tmp_path), *fitted)
+    sc = spark.sparkContext
+    sc.setJobGroup("nb-load", "load_nb_model")
+    try:
+        loaded = load_nb_model(spark, str(tmp_path))
+        spark._jsparkSession.sparkContext().listenerBus().waitUntilEmpty()
+        assert sc.statusTracker().getJobIdsForGroup("nb-load") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    for got, want in zip(loaded, fitted):
+        assert [(f.name, f.dataType) for f in got.schema] == [
+            (f.name, f.dataType) for f in want.schema
+        ]
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+
 @pytest.mark.slow
 def test_nb_min_tf_pruning_matches_python_reference(spark):
     """The NB grid's Heaps-law knob (round-8, symmetric with the LM's

@@ -243,6 +243,34 @@ def test_profile_call_record_and_job_group(spark):
     assert len(tracker.getJobIdsForGroup(rec["job_group"])) == rec["n_jobs"]
 
 
+def test_profile_call_py4j_calls_skip_object_detaches(spark):
+    """JavaObjects created before the call and collected while ``fn``
+    runs send one py4j detach each through the counted client; the
+    count leaves them out, so it reads as if nothing was collected."""
+    import gc
+    import time
+
+    from crypto_data_pipeline_spark.observability import profile_call
+
+    client = spark.sparkContext._gateway._gateway_client
+    held: list = []
+
+    def drop(spark, _sf_dir):
+        held.clear()
+        gc.collect()
+        deadline = time.monotonic() + 10
+        while getattr(client, "finalizer_deque", None) and time.monotonic() < deadline:
+            time.sleep(0.01)  # the finalizer worker sends them asynchronously
+        time.sleep(0.2)
+        return spark.range(10)
+
+    base = profile_call(spark, drop, None)["py4j_calls"]
+    held.extend(spark._jvm.java.util.ArrayList() for _ in range(500))
+    rec = profile_call(spark, drop, None)
+    assert not held
+    assert rec["py4j_calls"] < base + 50, (base, rec["py4j_calls"])
+
+
 def test_profile_call_counts_build_jobs(spark, sf_dir, tmp_path):
     """The first pricing_summary call on a corpus infers the lineitem
     schema in a build job; a repeat call is served the schema and

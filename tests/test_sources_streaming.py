@@ -798,18 +798,20 @@ def test_stream_classify_matches_batch_twin(spark, tmp_path):
 
 @pytest.mark.slow
 def test_stream_lm_score_matches_batch_across_delivery_orders(spark, tmp_path):
-    """Streaming LM serve (round-8): documents scored against the
-    checkpointed bigram model and bucketed against the FROZEN boundary
-    table must land EXACTLY the batch twin's rows — for every delivery
-    order, because frozen boundaries make each doc's row independent
-    of what shares its micro-batch. Covers scorable docs in two
-    languages, an unseen-context doc, a 1-token doc, a NULL text, and
-    an untrained language (the sentinel paths), plus checkpointed
-    re-run idempotence."""
+    """Streaming LM serve: documents scored against the at-rest bigram
+    model and bucketed against the FROZEN boundary table must land
+    EXACTLY the batch form's rows — for every delivery order and for
+    both score columns (add-one ``ppl`` and Kneser-Ney ``ppl_kn``),
+    because frozen boundaries make each doc's row independent of what
+    shares its micro-batch. Covers scorable docs in two languages, an
+    unseen-context doc, a 1-token doc, a NULL text, an untrained
+    language and a trained-but-unbounded language (the sentinel paths),
+    plus checkpointed re-run idempotence."""
     from crypto_data_pipeline_spark.operators.lm import (
-        bigram_lm_train,
-        perplexity_boundaries,
-        perplexity_buckets_frozen,
+        bounded_buckets,
+        lm_fit,
+        lm_scores,
+        tercile_bounds,
     )
     from crypto_data_pipeline_spark.streaming.ingest import stream_lm_score
 
@@ -826,14 +828,8 @@ def test_stream_lm_score_matches_batch_across_delivery_orders(spark, tmp_path):
          (6, "de", "u v u v")],  # trained, then dropped from bounds below
         lm_schema,
     )
-    model = bigram_lm_train(train)
-    # freeze boundaries WITHOUT de: a trained-but-unbounded language's
-    # docs must file as 'unscored', never vanish (round-8 self-review)
-    bounds = (
-        perplexity_boundaries(train, model=model)
-        .where(F.col("lang") != "de")
-        .localCheckpoint(eager=True)
-    )
+    model = lm_fit(train, str(tmp_path / "model"))
+    train_scores = lm_scores(train, *model)
 
     serve_rows = [
         (10, "en", "a b a"), (11, "en", "c a b c"), (12, "en", "z q z"),
@@ -842,46 +838,53 @@ def test_stream_lm_score_matches_batch_across_delivery_orders(spark, tmp_path):
         (18, "de", "u v u"),  # in the model, not in the bounds
     ]
     serve = spark.createDataFrame(serve_rows, lm_schema)
-    want = {
-        (r.doc_id, r.lang, r.n_bigrams, r.ppl, r.bucket)
-        for r in perplexity_buckets_frozen(serve, bounds, model=model).collect()
-    }
-    assert {d for d, *_ in want} == {r[0] for r in serve_rows}  # nothing vanishes
-    assert (18, "de", 0, -1.0, "unscored") in want
-
     orders = [
         [serve_rows[:4], serve_rows[4:]],
         [serve_rows[4:], serve_rows[:4]],
         [serve_rows[::2], serve_rows[1::2]],
     ]
-    for oi, parts in enumerate(orders):
-        bronze = str(tmp_path / f"bronze_{oi}")
-        out = str(tmp_path / f"scored_{oi}")
-        ckpt = str(tmp_path / f"ckpt_{oi}")
-        for part in parts:
-            spark.createDataFrame(part, lm_schema).write.mode("append").parquet(bronze)
-            q = stream_lm_score(
-                spark, bronze, out, ckpt, lm_schema, model, bounds
-            )
-            q.awaitTermination()
-        got = {
+
+    def landed(out: str) -> set:
+        return {
             (r.doc_id, r.lang, r.n_bigrams, r.ppl, r.bucket)
             for r in spark.read.parquet(out).collect()
         }
-        assert got == want, oi
 
-    # same checkpoint, nothing new -> no-op
-    q = stream_lm_score(
-        spark,
-        str(tmp_path / "bronze_0"), str(tmp_path / "scored_0"),
-        str(tmp_path / "ckpt_0"), lm_schema, model, bounds,
-    )
-    q.awaitTermination()
-    got = {
-        (r.doc_id, r.lang, r.n_bigrams, r.ppl, r.bucket)
-        for r in spark.read.parquet(str(tmp_path / "scored_0")).collect()
-    }
-    assert got == want
+    for ppl in ("ppl", "ppl_kn"):
+        # freeze boundaries WITHOUT de: a trained-but-unbounded
+        # language's docs must file as 'unscored', never vanish
+        bounds = (
+            tercile_bounds(train_scores, ppl)
+            .where(F.col("lang") != "de")
+            .localCheckpoint(eager=True)
+        )
+        want = {
+            (r.doc_id, r.lang, r.n_bigrams, r.ppl, r.bucket)
+            for r in bounded_buckets(lm_scores(serve, *model), bounds, ppl).collect()
+        }
+        assert {d for d, *_ in want} == {r[0] for r in serve_rows}  # nothing vanishes
+        assert (18, "de", 0, -1.0, "unscored") in want
+
+        for oi, parts in enumerate(orders):
+            bronze = str(tmp_path / f"{ppl}_bronze_{oi}")
+            out = str(tmp_path / f"{ppl}_scored_{oi}")
+            ckpt = str(tmp_path / f"{ppl}_ckpt_{oi}")
+            for part in parts:
+                spark.createDataFrame(part, lm_schema).write.mode("append").parquet(bronze)
+                q = stream_lm_score(
+                    spark, bronze, out, ckpt, lm_schema, model, bounds, ppl
+                )
+                q.awaitTermination()
+            assert landed(out) == want, (ppl, oi)
+
+        # same checkpoint, nothing new -> no-op
+        q = stream_lm_score(
+            spark,
+            str(tmp_path / f"{ppl}_bronze_0"), str(tmp_path / f"{ppl}_scored_0"),
+            str(tmp_path / f"{ppl}_ckpt_0"), lm_schema, model, bounds, ppl,
+        )
+        q.awaitTermination()
+        assert landed(str(tmp_path / f"{ppl}_scored_0")) == want, ppl
 
 
 @pytest.mark.slow
@@ -970,8 +973,8 @@ def test_stream_dsir_score_matches_batch_across_delivery_orders(spark, tmp_path)
 
 @pytest.mark.slow
 def test_stream_rho_select_matches_batch_across_delivery_orders(spark, tmp_path):
-    """Streaming RHO-loss selection: documents scored by BOTH frozen
-    LMs (weak add-one base, strong Kneser-Ney reference) and
+    """Streaming RHO-loss selection: documents scored by the at-rest LM
+    (weak add-one base, strong Kneser-Ney reference) and
     thresholded against the frozen excess cutoff must land EXACTLY the
     batch frozen twin's rows under every delivery order — kept is a
     pure per-document predicate under frozen artifacts. Serve rows
@@ -997,22 +1000,8 @@ def test_stream_rho_select_matches_batch_across_delivery_orders(spark, tmp_path)
          (5, "de", "der faule hund schlaeft den ganzen tag")],
         schema,
     )
-    base_model = tuple(
-        f.localCheckpoint(eager=True) for f in lm_ops.bigram_lm_train(fit)
-    )
-    ref_model = tuple(
-        f.localCheckpoint(eager=True) for f in lm_ops.bigram_lm_kn_train(fit)
-    )
-    scored = (
-        lm_ops.bigram_lm_perplexity(fit, *base_model)
-        .select("doc_id", F.col("ppl").alias("ppl_base"))
-        .join(
-            lm_ops.bigram_lm_kn_perplexity(fit, *ref_model)
-            .select("doc_id", F.col("ppl").alias("ppl_ref")),
-            "doc_id",
-        )
-        .withColumn("excess", F.round(F.log("ppl_base") - F.log("ppl_ref"), 6))
-    )
+    model = lm_ops.lm_fit(fit, str(tmp_path / "model"))
+    scored = lm_ops.rho_excess(lm_ops.lm_scores(fit, *model))
     cut = dsir_kth_weight(scored, 0.4, weight_col="excess")
     cutoff = spark.createDataFrame([(cut,)], "cutoff double").localCheckpoint(
         eager=True
@@ -1029,7 +1018,7 @@ def test_stream_rho_select_matches_batch_across_delivery_orders(spark, tmp_path)
     serve = spark.createDataFrame(serve_rows, schema)
     want = {
         tuple(r)
-        for r in lm_ops.rho_excess_select_frozen(serve, ref_model, cutoff).collect()
+        for r in lm_ops.rho_excess_select_frozen(serve, model, cutoff).collect()
     }
     assert {t[0] for t in want} == {r[0] for r in serve_rows}  # nothing vanishes
     by_id = {t[0]: t for t in want}
@@ -1049,7 +1038,7 @@ def test_stream_rho_select_matches_batch_across_delivery_orders(spark, tmp_path)
         for part in parts:
             spark.createDataFrame(part, schema).write.mode("append").parquet(bronze)
             q = stream_rho_select(
-                spark, bronze, out, ckpt, schema, ref_model, cutoff
+                spark, bronze, out, ckpt, schema, model, cutoff
             )
             q.awaitTermination()
         got = {
@@ -1063,7 +1052,7 @@ def test_stream_rho_select_matches_batch_across_delivery_orders(spark, tmp_path)
     # same checkpoint, nothing new -> no-op
     q = stream_rho_select(
         spark, str(tmp_path / "rho_bronze_0"), str(tmp_path / "rho_out_0"),
-        str(tmp_path / "rho_ckpt_0"), schema, ref_model, cutoff,
+        str(tmp_path / "rho_ckpt_0"), schema, model, cutoff,
     )
     q.awaitTermination()
     got = {
@@ -1534,88 +1523,3 @@ def test_maintain_aggregate_external_seed(spark, tmp_path):
            for r in gen.read_current(spark, gold2).collect()}
     assert got == {("a", 3, 20), ("b", 2, 8)}
 
-
-@pytest.mark.slow
-def test_stream_kn_lm_score_matches_batch_across_delivery_orders(spark, tmp_path):
-    """Streaming serve for the Kneser-Ney model (round-9, symmetric
-    with the add-one stream twin): `stream_lm_score` dispatches on the
-    model triple and must land EXACTLY the batch twin's
-    (`kn_perplexity_buckets_frozen`) rows for every delivery order —
-    frozen boundaries make each doc's row independent of its
-    micro-batch. Same sentinel coverage as the add-one test: two
-    scorable languages, unseen context, 1-token doc, NULL text,
-    untrained language, and a trained-but-unbounded language."""
-    from crypto_data_pipeline_spark.operators.lm import (
-        bigram_lm_kn_train,
-        kn_perplexity_boundaries,
-        kn_perplexity_buckets_frozen,
-    )
-    from crypto_data_pipeline_spark.streaming.ingest import stream_lm_score
-
-    lm_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType(), False),
-            T.StructField("lang", T.StringType(), True),
-            T.StructField("text", T.StringType(), True),
-        ]
-    )
-    train = spark.createDataFrame(
-        [(1, "en", "a b a b a c"), (2, "en", "a b c a"), (3, "en", "c c a b"),
-         (4, "fr", "x y x z"), (5, "fr", "x y y z x"),
-         (6, "de", "u v u v")],  # trained, then dropped from bounds below
-        lm_schema,
-    )
-    model = bigram_lm_kn_train(train)
-    bounds = (
-        kn_perplexity_boundaries(train, model=model)
-        .where(F.col("lang") != "de")
-        .localCheckpoint(eager=True)
-    )
-
-    serve_rows = [
-        (10, "en", "a b a"), (11, "en", "c a b c"), (12, "en", "z q z"),
-        (13, "fr", "x y z"), (14, "en", "solo"), (15, "en", None),
-        (16, "xx", "a b a b"), (17, "fr", "y z x y"),
-        (18, "de", "u v u"),  # in the model, not in the bounds
-    ]
-    serve = spark.createDataFrame(serve_rows, lm_schema)
-    want = {
-        (r.doc_id, r.lang, r.n_bigrams, r.ppl, r.bucket)
-        for r in kn_perplexity_buckets_frozen(serve, bounds, model=model).collect()
-    }
-    assert {d for d, *_ in want} == {r[0] for r in serve_rows}  # nothing vanishes
-    assert (18, "de", 0, -1.0, "unscored") in want
-
-    orders = [
-        [serve_rows[:4], serve_rows[4:]],
-        [serve_rows[4:], serve_rows[:4]],
-        [serve_rows[::2], serve_rows[1::2]],
-    ]
-    for oi, parts in enumerate(orders):
-        bronze = str(tmp_path / f"kn_bronze_{oi}")
-        out = str(tmp_path / f"kn_scored_{oi}")
-        ckpt = str(tmp_path / f"kn_ckpt_{oi}")
-        for part in parts:
-            spark.createDataFrame(part, lm_schema).write.mode("append").parquet(bronze)
-            q = stream_lm_score(
-                spark, bronze, out, ckpt, lm_schema, model, bounds
-            )
-            q.awaitTermination()
-        got = {
-            (r.doc_id, r.lang, r.n_bigrams, r.ppl, r.bucket)
-            for r in spark.read.parquet(out).collect()
-        }
-        assert got == want, oi
-
-    # same checkpoint, nothing new -> no-op
-    q = stream_lm_score(
-        spark,
-        str(tmp_path / "kn_bronze_0"), str(tmp_path / "kn_scored_0"),
-        str(tmp_path / "kn_ckpt_0"), lm_schema, model, bounds,
-    )
-    q.awaitTermination()
-    got = {
-        (r.doc_id, r.lang, r.n_bigrams, r.ppl, r.bucket)
-        for r in spark.read.parquet(str(tmp_path / "kn_scored_0")).collect()
-    }
-    assert got == want

@@ -9,14 +9,14 @@ growth. This probe synthesizes a corpus whose distinct-token count
 actually grows with K — vocab(K) = ceil(2000 * K^0.6), the Heaps
 exponent of real text — and measures, at each K:
 
-- fitted bigram-LM grid/ctx row counts (unpruned and min_count=2),
-- fitted Kneser-Ney grid/ctx/cont row counts (same two tiers — the
-  KN triple is vocabulary-proportional on all three frames, round-9),
+- the bigram LM's grid/ctx/cont row counts (`lm_fit`, unpruned and
+  min_count=2 — all three frames are vocabulary-proportional),
 - NB likelihood-grid row counts,
-- the join strategy AQE picks for the model joins in the LM (add-one
-  AND KN) and NB serve plans ("broadcast" vs "shuffled") now that the
-  round-8 fix removed the unconditional F.broadcast hints,
-- the DSIR log-ratio model (round-9): hash-bucketed, so its row count
+- the join strategy AQE picks for the model joins in the LM serve
+  (`lm_scores` against the at-rest model, both smoothing families in
+  one pass) and the NB serve ("broadcast" vs "shuffled"); neither
+  carries a broadcast hint on its model frames,
+- the DSIR log-ratio model: hash-bucketed, so its row count
   must stay EXACTLY n_buckets while every vocab-shaped model above
   grows — the structural alternative to pruning knobs, measured on
   the same Heaps-law corpora — and its scoring-join strategy.
@@ -49,7 +49,9 @@ from __future__ import annotations
 import json
 import math
 import os
+import shutil
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -94,27 +96,17 @@ def join_strategies(df: DataFrame) -> dict[str, int]:
     }
 
 
-def probe(spark, k: int) -> dict:
+def probe(spark, k: int, model_dir: str) -> dict:
     from crypto_data_pipeline_spark.ml.classify import nb_predict, nb_train
-    from crypto_data_pipeline_spark.operators.lm import (
-        bigram_lm_kn_perplexity,
-        bigram_lm_kn_train,
-        bigram_lm_perplexity,
-        bigram_lm_train,
-    )
+    from crypto_data_pipeline_spark.operators.lm import lm_fit, lm_scores
 
     docs, vocab = synth_docs(spark, k)
     docs = docs.localCheckpoint(eager=True)  # freeze the corpus once
 
-    grid, ctx = bigram_lm_train(docs)
-    grid_p, ctx_p = bigram_lm_train(docs, min_count=2)
-    lm_joins = join_strategies(bigram_lm_perplexity(docs, grid, ctx))
-    lm_joins_pruned = join_strategies(bigram_lm_perplexity(docs, grid_p, ctx_p))
-
-    kn = bigram_lm_kn_train(docs)
-    kn_p = bigram_lm_kn_train(docs, min_count=2)
-    kn_joins = join_strategies(bigram_lm_kn_perplexity(docs, *kn))
-    kn_joins_pruned = join_strategies(bigram_lm_kn_perplexity(docs, *kn_p))
+    lm = lm_fit(docs, f"{model_dir}/lm_k{k}")
+    lm_p = lm_fit(docs, f"{model_dir}/lm_k{k}_mc2", min_count=2)
+    lm_joins = join_strategies(lm_scores(docs, *lm))
+    lm_joins_pruned = join_strategies(lm_scores(docs, *lm_p))
 
     classes, nb_grid = nb_train(docs, label="lang")
     nb_joins = join_strategies(nb_predict(docs, classes, nb_grid))
@@ -138,30 +130,24 @@ def probe(spark, k: int) -> dict:
         "K": k,
         "vocab": vocab,
         "n_docs": DOCS_PER_K * k,
-        "lm_grid_rows": grid.count(),
-        "lm_ctx_rows": ctx.count(),
-        "lm_grid_rows_mc2": grid_p.count(),
-        "lm_ctx_rows_mc2": ctx_p.count(),
-        "kn_grid_rows": kn[0].count(),
-        "kn_ctx_rows": kn[1].count(),
-        "kn_cont_rows": kn[2].count(),
-        "kn_grid_rows_mc2": kn_p[0].count(),
-        "kn_ctx_rows_mc2": kn_p[1].count(),
-        "kn_cont_rows_mc2": kn_p[2].count(),
+        "lm_grid_rows": lm[0].count(),
+        "lm_ctx_rows": lm[1].count(),
+        "lm_cont_rows": lm[2].count(),
+        "lm_grid_rows_mc2": lm_p[0].count(),
+        "lm_ctx_rows_mc2": lm_p[1].count(),
+        "lm_cont_rows_mc2": lm_p[2].count(),
         "nb_grid_rows": nb_grid.count(),
         "dsir_model_rows": dsir_model.count(),
         "dsir_joins": dsir_joins,
         "lm_joins": lm_joins,
         "lm_joins_mc2": lm_joins_pruned,
-        "kn_joins": kn_joins,
-        "kn_joins_mc2": kn_joins_pruned,
         "nb_joins": nb_joins,
     }
-    # the frames are localCheckpoint-backed: unpersist() would be a
-    # no-op (they are not in the cache manager) — their blocks are
-    # reclaimed by the ContextCleaner once the RDDs are GC'd, so drop
+    # the corpus and NB frames are localCheckpoint-backed: unpersist()
+    # would be a no-op (they are not in the cache manager) — their blocks
+    # are reclaimed by the ContextCleaner once the RDDs are GC'd, so drop
     # the references and nudge the collector before the next, bigger K
-    del grid, ctx, grid_p, ctx_p, kn, kn_p, classes, nb_grid, feats, dsir_model, docs
+    del lm, lm_p, classes, nb_grid, feats, dsir_model, docs
     import gc
 
     gc.collect()
@@ -171,8 +157,12 @@ def probe(spark, k: int) -> dict:
 def main() -> None:
     ks = [int(a) for a in sys.argv[1:]] or [1, 10, 100]
     spark = get_spark("vocab-probe")
-    for k in ks:
-        print(json.dumps(probe(spark, k)), flush=True)
+    model_dir = tempfile.mkdtemp(prefix="vocab_probe_")
+    try:
+        for k in ks:
+            print(json.dumps(probe(spark, k, model_dir)), flush=True)
+    finally:
+        shutil.rmtree(model_dir, ignore_errors=True)
 
 
 if __name__ == "__main__":
